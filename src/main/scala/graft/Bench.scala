@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every registered query at the scale factor in
   * SPARK_GRAFT_SF_DIR and prints a compact JSON result line (twice — first
   * and last, bracketing a bytes/delta diagnostics line — see the
@@ -30,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Besides seconds, the line carries per-query BYTE metrics under
   * `"bytes"` — input read, shuffle read/write, memory/disk spill — from
-  * a stage listener (the ShuffleAudit surface, embedded). Bytes moved
+  * [[Profile]] (the ShuffleAudit surface, embedded). Bytes moved
   * is a property of the PLAN, immune to host contention: when a
   * contended run makes wall-clock meaningless (round 6: a 6x-loaded
   * host turned q65's 3.8s into 46s), the byte columns still adjudicate
@@ -48,67 +43,28 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Whole-stage-codegen class cache (default 100 entries): a
-      // 378-query registry compiles thousands of distinct generated
-      // sources, so the default thrashes and every adaptive rep —
-      // and every AQE stage sharing a shape across queries —
-      // re-Janino-compiles from scratch. Driver-side fixed cost at ANY
-      // scale (not a local[32] tune): raising it to 10k cut a mixed
-      // 10-query sf0.1 subset 24% wall (30.0 s -> 22.9 s, A/B same
-      // host). Memory is bounded by compiled-class metaspace, a few
-      // KB each.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // see Verify.scala: bounds the exponential tree RENDERING of
-      // lineage-keeping iterative plans (the plan executes fine)
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // stage-level byte counters (only successful attempts — failed/retried
-    // stages would double-count); reset per query, drained before reading
-    val counters = Array.fill(5)(new AtomicLong)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null && sc.stageInfo.failureReason.isEmpty) {
-          counters(0).addAndGet(m.inputMetrics.bytesRead)
-          counters(1).addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          counters(2).addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          counters(3).addAndGet(m.memoryBytesSpilled)
-          counters(4).addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    val spark = Session.local()
+    // byte counters, reset per query and drained before reading
+    val profile = Profile.attach(spark)
 
     // optional args: restrict to queries whose name starts with any arg
     // (local iteration aid; the driver passes none and times everything)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => args.isEmpty || args.exists(n.startsWith))
     def timeOnce(name: String): (Double, Option[Array[Long]]) = {
-      counters.foreach(_.set(0L))
+      profile.reset()
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         // drain the async listener bus AFTER the clock stops; a drain
-        // failure (timeout/interrupt) leaves this pass's bytes partial —
-        // the cross-pass minimum still reports a clean pass if any pass
-        // drained fully — but it must never mark a successfully executed
-        // query FAILED (ADVICE r12), so every drain error stops here
-        try org.apache.spark.graft.ListenerBridge
-          .waitUntilEmpty(spark.sparkContext, 60000L)
-        catch {
-          case _: InterruptedException => Thread.currentThread().interrupt()
-          case scala.util.control.NonFatal(_) => ()
-        }
-        (sec, Some(counters.map(_.get())))
+        // failure leaves this pass's bytes partial — the cross-pass
+        // minimum still reports a clean pass if any pass drained fully —
+        // but it never marks a successfully executed query FAILED
+        profile.drain()
+        (sec, Some(Array(profile.inputBytes, profile.shuffleReadBytes,
+          profile.shuffleWriteBytes, profile.memorySpillBytes, profile.diskSpillBytes)))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] FAILED $name: $e")

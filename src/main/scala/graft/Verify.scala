@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Cores and the
+  * materialize mode (`GRAFT_MATERIALIZE_MODE=local|reliable|replicated`)
+  * come from [[Session.local]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args: @unchecked
@@ -13,32 +14,7 @@ object Verify {
     val only = rest.toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GRAFT_MATERIALIZE_MODE=reliable|replicated runs the whole dump
-    // under a cluster-realistic materialization strategy (see
-    // Materialize.scala) — the close checklist runs one full pass under
-    // each so the non-local modes are verified end-to-end, not only
-    // law-tested on spec inputs (VERDICT r10 ask #3).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: the default 100-entry codegen class cache
-      // thrashes under a 378-query registry (re-Janino-compiles per
-      // stage); driver-side fixed cost at any scale
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("graft.materialize.mode",
-        sys.env.getOrElse("GRAFT_MATERIALIZE_MODE", "local"))
-      // Iterative operators under the lineage-KEEPING materialize modes
-      // (replicated) produce plan DAGs whose TREE rendering is
-      // exponential; execution is fine but the SQL-listener's
-      // physicalPlanDescription string OOM'd the driver (q208, r11
-      // close — OutOfMemoryError inside explainString/
-      // generateTreeString). Bound the rendered string, not the plan.
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // q294's DuckDB oracle computes only the int64-exact Spearman branch;
     // the engine itself switches to the normalized-double production

@@ -34,27 +34,34 @@ object QueryRunner {
       case f if f.endsWith(".tbl")     => f.stripSuffix(".tbl")
       case f if f.endsWith(".det")     => f.stripSuffix(".det")
     }.distinct
+    // a table file that exists but cannot be read fails the whole load,
+    // naming the file: dropping it would surface later as a confusing
+    // "table not found" (or, worse, a query over the remaining tables)
+    def load(parts: String*)(body: => org.apache.spark.sql.DataFrame) =
+      try Some(body) catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(
+            s"cannot load table from ${parts.map(p => s"$dir/$p").mkString(" + ")}: $e", e)
+      }
     names.flatMap { name =>
       val df =
         if (has(s"$name.parquet"))
           // Tables.load knows quirks of the standard tables (e.g. events'
-          // nanosecond timestamps); skip files Spark cannot read at all.
-          scala.util.Try(graft.Tables.load(spark, dir, name)).toOption
+          // nanosecond timestamps)
+          load(s"$name.parquet")(graft.Tables.load(spark, dir, name))
         else if (has(s"$name.tbl")) {
-          val schemaPath =
-            if (has(s"$name.md")) Left(s"$dir/$name.md") else Right(s"$dir/$name.det")
-          scala.util.Try(schemaPath match {
-            case Left(md) =>
-              val st = graft.sources.TblSource.readMdSchema(md)
-              val rows = graft.sources.TblSource.readRows(s"$dir/$name.tbl")
-                .map(org.apache.spark.sql.Row.fromSeq)
-              spark.createDataFrame(spark.sparkContext.parallelize(rows), st)
-            case Right(det) =>
-              graft.sources.TblSource.readTbl(spark, det, s"$dir/$name.tbl")
-          }).toOption
+          if (has(s"$name.md")) load(s"$name.md", s"$name.tbl") {
+            val st = graft.sources.TblSource.readMdSchema(s"$dir/$name.md")
+            val rows = graft.sources.TblSource.readRows(s"$dir/$name.tbl")
+              .map(org.apache.spark.sql.Row.fromSeq)
+            spark.createDataFrame(spark.sparkContext.parallelize(rows), st)
+          } else load(s"$name.det", s"$name.tbl") {
+            graft.sources.TblSource.readTbl(spark, s"$dir/$name.det", s"$dir/$name.tbl")
+          }
         } else if (has(s"$name.txt"))
-          scala.util.Try(spark.read.format("graft.sources.DetDataSource")
-            .load(s"$dir/$name")).toOption
+          load(s"$name.det", s"$name.txt") {
+            spark.read.format("graft.sources.DetDataSource").load(s"$dir/$name")
+          }
         else None
       // A reference data directory may ship `<name>.stat` (numtuples +
       // per-column NDVs, PlanCost.java:219-263). Register the table in the
@@ -117,13 +124,7 @@ object QueryRunner {
     *     size and buffer pool, so the knobs have no analogue here.
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try run(spark, args) finally spark.stop()
   }
 

@@ -99,11 +99,7 @@ object DetLoader {
     val dir = args(0)
     val table = args(1)
     val outDir = if (args.length > 2) args(2) else dir
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     DetSource.readTxt(spark, s"$dir/$table.det", s"$dir/$table.txt")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$table.parquet")
     spark.stop()

@@ -250,11 +250,7 @@ object TblLoader {
     val dir = args(0)
     val table = args(1)
     val outDir = if (args.length > 2) args(2) else dir
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     TblSource.readTbl(spark, s"$dir/$table.det", s"$dir/$table.tbl")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$table.parquet")
     spark.stop()

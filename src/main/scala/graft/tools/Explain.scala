@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspector: runMain graft.tools.Explain <sfDir> <queryName>...
   * The Spark analogue of the reference's Debug.PPrint plan printer
@@ -9,11 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     args.drop(1).foreach { name =>
       println(s"===== $name =====")
       graft.SparkEntry.queries(name)(spark, args(0)).explain("formatted")

@@ -121,14 +121,7 @@ object MidJProbe {
     val dir = args(0)
     val nPerLevel = if (args.length > 1) args(1).toInt else 8
     val mode = if (args.length > 2) args(2) else "set"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try {
       if (mode == "raresweep") runRareSweep(spark, dir, nPerLevel)
       else run(spark, dir, nPerLevel, mode)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Materialize._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -11,19 +11,13 @@ import org.apache.spark.sql.types.DecimalType
   * with input size, i.e. nothing in the plan is accidentally quadratic or
   * driver-bound.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.tools.ScaleProbe <sfDir> [mult]
+  * Usage: runMain graft.tools.ScaleProbe <sfDir> [mult]
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val mult = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     def replicateN(df: DataFrame, keyCol: String, stride: Long,
         m: Int): DataFrame =

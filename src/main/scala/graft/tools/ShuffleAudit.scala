@@ -1,32 +1,38 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Per-query shuffle/spill/input byte audit — the host-noise-immune
   * performance surface. Wall-clock on a contended shared host swings 3x
   * between runs (see README, round 6), but BYTES MOVED is a property of
   * the plan: at 100 TB the dominant cost is shuffle volume, so this is
   * the number a plan change must be judged by. Runs each registered
   * query against a noop sink (full execution, no result materialization
-  * on the driver) and prints one line per query:
+  * on the driver) under one [[graft.Profile]] and prints three lines per
+  * query:
   *
   *   SHUFFLE <name> in=<input> sread=<shuffle read> swrite=<shuffle write>
   *           spillMem=<memory spill> spillDisk=<disk spill>
   *           rawswrite=<bytes> rawspill=<bytes>
   *
-  * plus a physical-strategy fingerprint line (join/exchange operator
-  * counts aggregated over every execution the query triggers, from the
-  * POST-AQE final plans):
+  * a physical-strategy fingerprint (join operator counts over the final,
+  * post-AQE plans of every execution the query triggers):
   *
   *   PLANSIG <name> bhj=N smj=N shj=N bnlj=N cart=N
   *
-  * Two audit outputs from fresh JVMs feed [[ShuffleVerdict]], the
-  * mechanical byte-surface regression gate (r13 verdict ask #4).
+  * and its scheduling shape — at the local bench SF most wall time is
+  * not data movement but plan-execution overhead (every eager
+  * materialize, broadcast build and AQE stage is a job), so a query that
+  * moves 1 MB in 40 stages shows up here:
   *
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.tools.ShuffleAudit <sfDir> [namePrefix...]
+  *   PROFILE <name> jobs=N stages=N tasks=N exch=N bexch=N aqe=N
+  *
+  * exch/bexch = shuffle/broadcast exchange nodes in those final plans;
+  * aqe = the number of query executions (actions) the query triggered.
+  *
+  * Two audit outputs from fresh JVMs feed [[ShuffleVerdict]], the
+  * mechanical byte-surface regression gate, which reads the SHUFFLE and
+  * PLANSIG lines only.
+  *
+  * Usage: runMain graft.tools.ShuffleAudit <sfDir> [namePrefix...]
   */
 object ShuffleAudit {
 
@@ -41,79 +47,17 @@ object ShuffleAudit {
     "bnlj" -> "BroadcastNestedLoopJoin",
     "cart" -> "CartesianProduct")
 
+  /** The PLANSIG fields, from a profile's final-plan node counts. */
+  def planSig(nodes: Map[String, Long]): String =
+    StrategyOps.map { case (k, op) =>
+      s"$k=${nodes.collect { case (cls, n) if cls.startsWith(op) => n }.sum}"
+    }.mkString(" ")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val prefixes = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      // fingerprinting renders final plans; bound the string, not the plan
-      // (the q208 lesson from the r11 close)
-      .config("spark.sql.maxPlanStringLength", "10000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val input = new AtomicLong; val sread = new AtomicLong
-    val swrite = new AtomicLong; val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        // failed/retried stage attempts would double-count their bytes —
-        // only successful attempts describe the plan
-        if (m != null && sc.stageInfo.failureReason.isEmpty) {
-          input.addAndGet(m.inputMetrics.bytesRead)
-          sread.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          swrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-
-    // strategy fingerprint: count join-operator NODES in the final
-    // (post-AQE) executed plan of EVERY execution a query triggers.
-    // Counted by TREE WALK, not string search: the rendered string
-    // re-expands reused exchanges, and WHICH exchange AQE marks as the
-    // reuse (vs the original) races with stage materialization order —
-    // string counts flapped 18 vs 19 on byte-identical q185 runs. The
-    // walk unwraps the adaptive/stage wrappers (their plans are fields,
-    // not tree children) and stops at ReusedExchange leaves, so each
-    // physical operator is counted exactly once no matter which twin
-    // AQE labels the reuse.
-    val sigCounts = StrategyOps.map { case (k, _) => k -> new AtomicLong }.toMap
-    def countOps(root: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      // identity-dedupe within one execution: a REUSED query stage is the
-      // SAME node object appearing at several tree positions, and whether
-      // AQE reuses a stage races with materialization order — counting it
-      // per position flapped q322's totals (18 vs 15 joins) on
-      // byte-identical runs
-      val seen = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[org.apache.spark.sql.execution.SparkPlan, java.lang.Boolean]())
-      def go(p: org.apache.spark.sql.execution.SparkPlan): Unit =
-        if (seen.add(p)) p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            go(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            go(q.plan)
-          case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => ()
-          case n =>
-            val cls = n.getClass.getSimpleName
-            StrategyOps.foreach { case (k, op) =>
-              if (cls.startsWith(op)) sigCounts(k).incrementAndGet() }
-            n.children.foreach(go)
-        }
-      go(root)
-    }
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        countOps(qe.executedPlan)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    })
+    val spark = graft.Session.local()
+    val p = graft.Profile.attach(spark)
 
     def fmt(b: Long): String =
       if (b >= (1L << 20)) f"${b / 1048576.0}%.1fMiB"
@@ -123,26 +67,22 @@ object ShuffleAudit {
     graft.SparkEntry.registry
       .filter(q => prefixes.isEmpty || prefixes.exists(q.name.startsWith))
       .foreach { q =>
-        Seq(input, sread, swrite, memSpill, diskSpill).foreach(_.set(0L))
-        sigCounts.values.foreach(_.set(0L))
+        p.reset()
         try {
           q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          // listener events are posted asynchronously; drain before reading.
-          // A drain timeout means the QUERY succeeded but the bus lagged —
-          // report the (possibly partial) bytes with a marker, not FAILED.
-          val marker =
-            try {
-              org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext, 60000L)
-              ""
-            } catch {
-              case _: java.util.concurrent.TimeoutException => " metrics-incomplete"
-            }
-          println(s"SHUFFLE ${q.name} in=${fmt(input.get)} " +
-            s"sread=${fmt(sread.get)} swrite=${fmt(swrite.get)} " +
-            s"spillMem=${fmt(memSpill.get)} spillDisk=${fmt(diskSpill.get)} " +
-            s"rawswrite=${swrite.get} rawspill=${memSpill.get + diskSpill.get}$marker")
-          println(s"PLANSIG ${q.name} " + StrategyOps.map { case (k, _) =>
-            s"$k=${sigCounts(k).get}" }.mkString(" "))
+          // a drain timeout means the QUERY succeeded but the bus lagged —
+          // report the (possibly partial) counters with a marker, not FAILED
+          val marker = if (p.drain()) "" else " metrics-incomplete"
+          println(s"SHUFFLE ${q.name} in=${fmt(p.inputBytes)} " +
+            s"sread=${fmt(p.shuffleReadBytes)} swrite=${fmt(p.shuffleWriteBytes)} " +
+            s"spillMem=${fmt(p.memorySpillBytes)} spillDisk=${fmt(p.diskSpillBytes)} " +
+            s"rawswrite=${p.shuffleWriteBytes} " +
+            s"rawspill=${p.memorySpillBytes + p.diskSpillBytes}$marker")
+          val nodes = p.nodes
+          println(s"PLANSIG ${q.name} ${planSig(nodes)}")
+          println(s"PROFILE ${q.name} jobs=${p.jobs} stages=${p.stages} tasks=${p.tasks} " +
+            s"exch=${nodes("ShuffleExchangeExec")} bexch=${nodes("BroadcastExchangeExec")} " +
+            s"aqe=${p.executions}")
         } catch {
           case e: Throwable => println(s"SHUFFLE ${q.name} FAILED ${e.getMessage}")
         }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.Dedup
@@ -16,14 +15,7 @@ object WinnowProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val theta = args(1).toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try {
       val docs = graft.Tables.load(spark, dir, "documents")
       val mode = if (args.length > 2) args(2) else "set"

@@ -4,7 +4,7 @@ import org.apache.spark.SparkContext
 
 /** Private-API shim: drain the asynchronous listener bus so metrics
   * accumulated by a SparkListener are complete before they are read
-  * (tools.ShuffleAudit). `SparkContext.listenerBus` is private[spark]. */
+  * ([[graft.Profile]]). `SparkContext.listenerBus` is private[spark]. */
 object ListenerBridge {
   def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)

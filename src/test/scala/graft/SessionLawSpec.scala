@@ -1,0 +1,60 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One session factory, one metrics collector — as code, not comments
+  * (the MaterializeLawSpec source-scan pattern). No SparkTestBase: this
+  * suite's forked JVM has no session until [[Session.local]] builds one,
+  * so the settings checked are the factory's own. */
+class SessionLawSpec extends AnyFunSuite {
+
+  private def offenders(pattern: String, allowedFile: String,
+      codeOnly: Boolean): Seq[String] = {
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def isComment(ln: String): Boolean = {
+      val t = ln.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
+    scalaFiles(new java.io.File("src/main/scala"))
+      .filterNot(_.getName == allowedFile)
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val lines = try src.getLines().toVector finally src.close()
+        lines.zipWithIndex.collect {
+          case (ln, i) if ln.contains(pattern) && !(codeOnly && isComment(ln)) =>
+            s"${f.getPath}:${i + 1}"
+        }
+      }
+  }
+
+  test("SparkSession.builder() only in Session.scala") {
+    val found = offenders("SparkSession.builder()", "Session.scala", codeOnly = true)
+    assert(found.isEmpty, s"build sessions with graft.Session.local(): ${found.mkString(", ")}")
+  }
+
+  test("listener registrations only in Profile.scala") {
+    val found = Seq("addSparkListener(", "listenerManager.register(")
+      .flatMap(offenders(_, "Profile.scala", codeOnly = false))
+    assert(found.isEmpty, s"collect metrics with graft.Profile: ${found.mkString(", ")}")
+  }
+
+  test("Session.local() sets the fixed settings") {
+    val spark = Session.local()
+    try {
+      val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)
+      assert(spark.sparkContext.master == s"local[$cpus]")
+      val conf = spark.conf
+      assert(conf.get("spark.sql.shuffle.partitions") == cpus.toString)
+      assert(conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+      assert(conf.get("spark.sql.codegen.cache.maxEntries") == "10000")
+      assert(conf.get("spark.sql.maxPlanStringLength") == "1048576")
+      assert(conf.get("graft.materialize.mode") ==
+        sys.env.getOrElse("GRAFT_MATERIALIZE_MODE", "local"))
+      assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel.toString == "WARN")
+    } finally spark.stop()
+  }
+}

@@ -226,4 +226,24 @@ class DialectSpec extends AnyFunSuite with SparkTestBase {
       "SELECT * FROM CUSTOMER,CART WHERE CUSTOMER.gender=\"1\"", tables)
     assert(got2.count() == customer.filter($"gender" === 1).count() * cart.count())
   }
+
+  test("loadTables fails loudly, naming the file, on an unreadable table") {
+    // a silently dropped table would surface later as "table not found"
+    // or, worse, as a query over the remaining tables
+    import java.nio.file.Files
+    def expectLoud(dir: java.nio.file.Path, file: String): Unit = {
+      val e = intercept[IllegalArgumentException](QueryRunner.loadTables(spark, dir.toString))
+      assert(e.getMessage.contains(dir.resolve(file).toString), e.getMessage)
+      assert(e.getCause != null)
+    }
+    val garbage = Files.createTempDirectory("load-garbage")
+    Files.write(garbage.resolve("x.parquet"), "not a parquet file".getBytes("UTF-8"))
+    expectLoud(garbage, "x.parquet")
+
+    val badDet = Files.createTempDirectory("load-baddet")
+    Files.write(badDet.resolve("x.det"), "two\nfour\n".getBytes("UTF-8"))
+    Files.write(badDet.resolve("x.txt"), "1\t\n".getBytes("UTF-8"))
+    expectLoud(badDet, "x.txt")
+    expectLoud(badDet, "x.det")
+  }
 }

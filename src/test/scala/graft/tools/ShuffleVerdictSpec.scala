@@ -68,4 +68,11 @@ class ShuffleVerdictSpec extends AnyFunSuite {
     val vCov = verdict(ok, audit(("q1", 1000L, 0L, "bhj=1"), ("q2", 1L, 0L, "bhj=0")))
     assert(vCov.contains("only in run B: q2"))
   }
+
+  test("PROFILE lines are ignored: scheduling shape is not part of the gate") {
+    val a = audit(("q1", 1000L, 0L, "bhj=1 smj=0"))
+    val b = a :+ "PROFILE q1 jobs=9 stages=12 tasks=40 exch=3 bexch=1 aqe=2"
+    assert(ShuffleVerdict.parseLines(b) == ShuffleVerdict.parseLines(a))
+    assert(verdict(a, b).startsWith("BYTE-SURFACE VERDICT PASS"))
+  }
 }
