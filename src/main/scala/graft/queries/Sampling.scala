@@ -387,10 +387,13 @@ object Sampling {
     val lastOfChunk = ch2.groupBy("rchunk")
       .agg(max(struct(col("idx"), col("source"))).as("m"))
       .select((col("rchunk") + 1).as("rchunk"), col("m.source").as("carry_src"))
+    // lag a never-NULL struct: "no in-chunk predecessor" (take the
+    // carry) stays distinct from "predecessor's source is NULL"
     val starts = ch2
-      .withColumn("in_src", lag("source", 1).over(w2o))
+      .withColumn("in_prev", lag(struct(col("source")), 1).over(w2o))
       .join(broadcast(lastOfChunk), Seq("rchunk"), "left")
-      .withColumn("prev_src", coalesce(col("in_src"), col("carry_src")))
+      .withColumn("prev_src", when(col("in_prev").isNull, col("carry_src"))
+        .otherwise(col("in_prev.source")))
       .withColumn("st", when(col("prev_src").isNull ||
         col("prev_src") =!= col("source"), 1L).otherwise(0L))
     // run ids: two-phase prefix sum of start markers in idx order
@@ -402,8 +405,10 @@ object Sampling {
     starts.withColumn("local_cum", sum("st").over(w2))
       .join(broadcast(off2), "rchunk")
       .withColumn("run_id", col("local_cum") + col("off"))
-      .groupBy("run_id")
-      .agg(min("source").as("source"), count(lit(1)).as("len"))
+      // (run_id, source), as the oracle keys it: a NULL source after x
+      // opens no run_id (NULL <> x is not true) yet is its own run
+      .groupBy("run_id", "source")
+      .agg(count(lit(1)).as("len"))
       .groupBy("source")
       .agg(sum("len").as("n_docs"), count(lit(1)).as("n_runs"),
         max("len").as("max_run"))

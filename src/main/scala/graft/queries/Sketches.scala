@@ -1302,9 +1302,7 @@ object Sketches {
       val mBits = 262144L
       val half = expr("CAST(substring(source, 4, 8) AS INT) % 2")
       val sh = t(s, d, "documents")
-        .select(half.as("half"), explode(array_distinct(
-          graft.functions.ArrayExprs.windowHashes(split(col("text"), " "), 3)))
-          .as("h"))
+        .select(half.as("half"), explode(Dedup.shingleHashSet).as("h"))
       val members = sh.filter(col("half") === 0).select("h").distinct()
         .materialize // feeds the bit table AND the membership join
       // XOR salts, not additive: lehmer(h + c) is lehmer(h) + const mod M,

@@ -286,8 +286,7 @@ object Streams {
     val spark = docs.sparkSession
     import spark.implicits._
     val bottomk = new graft.functions.BottomKLongAgg(64).toColumn
-    docs.select(col("source"), explode(array_distinct(
-        graft.functions.ArrayExprs.windowHashes(split(col("text"), " "), 3))).as("h"))
+    docs.select(col("source"), explode(graft.queries.Dedup.shingleHashSet).as("h"))
       .as[(String, Long)].groupByKey(_._1)
       .mapValues(r => (r._2, r._2))
       .agg(bottomk.name("kp"))
@@ -539,9 +538,7 @@ object Streams {
   def noveltyIngest(docs: DataFrame): Dataset[NovelHit] = {
     import docs.sparkSession.implicits._
     docs
-      .select(col("source"),
-        explode(array_distinct(
-          graft.functions.ArrayExprs.windowHashes(split(col("text"), " "), 3))).as("sh"))
+      .select(col("source"), explode(graft.queries.Dedup.shingleHashSet).as("sh"))
       .as[(String, Long)]
       .groupByKey(_._2)
       .flatMapGroupsWithState[Boolean, NovelHit](

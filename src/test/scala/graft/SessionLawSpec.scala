@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One session factory, one metrics collector — as code, not comments
-  * (the MaterializeLawSpec source-scan pattern). No SparkTestBase: this
+/** One session factory, one metrics collector, one hashed-shingle
+  * definition — as code, not comments (the MaterializeLawSpec
+  * source-scan pattern). No SparkTestBase: this
   * suite's forked JVM has no session until [[Session.local]] builds one,
   * so the settings checked are the factory's own. */
 class SessionLawSpec extends AnyFunSuite {
@@ -38,6 +39,18 @@ class SessionLawSpec extends AnyFunSuite {
     val found = Seq("addSparkListener(", "listenerManager.register(")
       .flatMap(offenders(_, "Profile.scala", codeOnly = false))
     assert(found.isEmpty, s"collect metrics with graft.Profile: ${found.mkString(", ")}")
+  }
+
+  test("the hashed 3-shingle expression is spelled once, in Dedup.shingleHashes") {
+    // Every hashed-shingle consumer (the set-similarity kernel, the
+    // affine-minhash audits, the per-source sketches, the streaming
+    // faces) derives from Dedup.shingleHashes, so the shingle
+    // definition cannot drift between them.
+    val found = offenders("""windowHashes(split(col("text"), " "), 3)""",
+      allowedFile = "", codeOnly = true)
+    assert(found.size == 1 &&
+      found.head.startsWith("src/main/scala/graft/queries/Dedup.scala:"),
+      s"derive hashed shingles from Dedup.shingleHashSet: ${found.mkString(", ")}")
   }
 
   test("Session.local() sets the fixed settings") {

@@ -2651,6 +2651,24 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(got.values.forall { case (d, r, mx) => r <= d && mx >= 1 })
   }
 
+  test("q371 NULL-source run starts match the global-lag oracle across rchunks") {
+    // shuffleQuality lags the predecessor's source within 100,000-row
+    // idx chunks and carries each chunk's last source into the next; a
+    // NULL in-chunk predecessor must start a run there, not fall back
+    // to the carry. 100,100 docs give a second chunk; every 5th source
+    // is NULL. The reference is q371's own oracle SQL — one global
+    // lag(source) OVER (ORDER BY idx) — run by Spark on the same rows.
+    val docs = spark.range(1, 100101).select(col("id").as("doc_id"),
+      when(col("id") % 5 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit("s"), (col("id") % 2).cast("string")))
+        .as("source"))
+    val oracle = SparkEntry.registry
+      .find(_.name == "q371_shuffle_quality").get.oracle.get
+    docs.createOrReplaceTempView("documents")
+    try assertSameRows(Sampling.shuffleQuality(docs), spark.sql(oracle))
+    finally spark.catalog.dropTempView("documents")
+  }
+
   test("q369 strip removes exactly the planted banner and restores the text") {
     // The banner is prepended and 8 tokens wide, so it occupies one
     // paragraph window and every original window stays aligned; with no

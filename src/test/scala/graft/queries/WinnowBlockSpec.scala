@@ -10,8 +10,9 @@ import graft.SparkTestBase
   * theta >= 0.4, so jaccardJoinWinnowBlocked (blocker + exact verify)
   * equals jaccardJoin (prefix-filtered, provably complete) row for row.
   * q306 drives the same pair-completeness statistic (= 1.0 at theta
-  * 0.7) through the driver's oracle gate every round; tools.WinnowProbe
-  * measured completeness 1.0 at theta 0.4 on sf0.001/sf0.01/sf0.1.
+  * 0.7) through the DuckDB oracle gate every round; the r10 winnow
+  * sweep (PROBES_r10.txt) measured completeness 1.0 at theta 0.4 on
+  * sf0.001/sf0.01/sf0.1.
   * This spec pins the strongest local form — full plan equality
   * including the jaccard values — plus the documented theta floor.
   */
@@ -78,6 +79,36 @@ class WinnowBlockSpec extends AnyFunSuite with SparkTestBase {
       "fingerprint-less short subs must be found inside their container")
   }
 
+  test("NULL text and an empty corpus: blocked equals unblocked, nothing throws") {
+    // Off the happy path. A NULL-text doc has no shingles, fingerprints
+    // or occurrence keys, so the key builders must drop it the way they
+    // drop sub-3-token docs; an empty corpus must give empty results.
+    import spark.implicits._
+    val mixed = Seq[(Long, String)](
+      (1L, "a b c"),
+      (2L, "a b c"),
+      (3L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 w20"),
+      (4L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 zz yy"),
+      (5L, null),
+      (6L, "p1 p2 a b c p3 p4 p5 p6 p7 p8 p9 p10 p11 p12")
+    ).toDF("doc_id", "text")
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    for (docs <- Seq(mixed, empty)) {
+      assertSameRows(Dedup.jaccardJoinWinnowBlocked(docs, 0.5),
+        Dedup.jaccardJoin(docs, 0.5))
+      assertSameRows(Dedup.multisetJaccardJoinWinnowBlocked(docs, 0.5),
+        Dedup.multisetJaccardJoin(docs, 0.5))
+      assertSameRows(Dedup.containmentJoinWinnowBlocked(docs, 0.9),
+        Dedup.containmentJoin(docs, 0.9))
+    }
+    val pairs = Dedup.jaccardJoinWinnowBlocked(mixed, 0.5)
+      .select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((1L, 2L), (3L, 4L)), s"pairs: $pairs")
+    assert(Dedup.containmentJoinWinnowBlocked(mixed, 0.9)
+      .filter(col("doc_sub") === 5L || col("doc_sup") === 5L).isEmpty)
+  }
+
   test("one-sided error is a THEOREM: blocked output is a subset of exact truth, even adversarially") {
     // Completeness of the blocker is empirical (probed + oracle-gated);
     // SOUNDNESS is not: every emitted pair passed the exact verify, so
@@ -114,7 +145,7 @@ class WinnowBlockSpec extends AnyFunSuite with SparkTestBase {
     // unstressed. MidJFixture plants pairs at controlled true Jaccard
     // 0.35-0.95 under three edit models, including the run-free
     // scattered regime where the winnow tier alone demonstrably misses
-    // (tools.MidJProbe shows the winnow-only misses; the shipping
+    // (PROBES_r11.txt records the winnow-only misses; the shipping
     // two-tier generator must not). This law pins blocked == exact AT
     // the registered floors on that fixture, and pins that the fixture
     // genuinely contains mid-similarity truth.
