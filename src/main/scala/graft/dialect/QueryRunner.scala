@@ -64,34 +64,45 @@ object QueryRunner {
           }
         else None
       // A reference data directory may ship `<name>.stat` (numtuples +
-      // per-column NDVs, PlanCost.java:219-263). Register the table in the
-      // session catalog and inject those stats so Catalyst's CBO costs
-      // join orders from them — the reference's optimizer does the same.
-      // Registration goes into a PER-DIRECTORY database (`statDb`) and all
-      // resolution is database-qualified: a same-named temp view in the
-      // session cannot shadow the stats-bearing table, and loading two
-      // data directories in one session keeps both sets of registrations.
-      // Parquet sources register as EXTERNAL tables over the existing
-      // files (no data copy — the reference, likewise, only reads two
-      // lines of text); other formats materialize once, as does any
-      // table whose load path rewrites the data relative to the raw
-      // file (Tables.rewritesOnLoad — events' ns->us timestamps). A
-      // malformed .stat degrades to no stats, LOUDLY — silent
-      // degradation would un-do the feature's point.
+      // per-column NDVs, PlanCost.java:219-263). With one, CBO and join
+      // reorder go on so Catalyst costs join orders from it — the
+      // reference's optimizer does the same. A `.det`/`.txt` table needs
+      // nothing more: its DSv2 scan reads the `.stat` itself and reports
+      // it (DetDataSource), so its load is metadata-only and copies no
+      // data. Parquet and `.tbl` tables carry their stats in the session
+      // catalog instead, registered into a PER-DIRECTORY database
+      // (`statDb`) with all resolution database-qualified: a same-named
+      // temp view in the session cannot shadow the stats-bearing table,
+      // and loading two data directories in one session keeps both sets
+      // of registrations. Parquet registers as an EXTERNAL table over the
+      // existing files (no data copy); a `.tbl` table, or a parquet table
+      // whose load path rewrites the data relative to the raw file
+      // (Tables.rewritesOnLoad — events' ns->us timestamps), is written
+      // once into the warehouse. A malformed .stat degrades to no stats,
+      // with a WARNING naming the file (Stats.warnIgnored).
       df.map { d =>
+        val stat = s"$dir/$name.stat"
         val withStats =
           if (!has(s"$name.stat")) d
-          else scala.util.Try {
+          else if (!has(s"$name.parquet") && !has(s"$name.tbl")) {
+            graft.sources.Stats.enableCbo(spark)
+            d
+          } else scala.util.Try {
             val db = statDb(dir)
             spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
             if (has(s"$name.parquet") && !graft.Tables.rewritesOnLoad(spark, dir, name)) {
               spark.sql(s"DROP TABLE IF EXISTS `$db`.`$name`")
               spark.catalog.createTable(s"`$db`.`$name`", s"$dir/$name.parquet", "parquet")
             } else graft.sources.Stats.saveAsCatalogTable(spark, name, d, Some(db))
-            graft.sources.Stats.injectStatFile(spark, name, s"$dir/$name.stat", Some(db))
+            // a .tbl read through its .det gets the same column stats as
+            // the DSv2 scan; parquet and .md schemas have NDVs only
+            val det =
+              if (has(s"$name.parquet") || has(s"$name.md")) None
+              else Some(graft.sources.DetSource.parseDet(s"$dir/$name.det"))
+            graft.sources.Stats.injectStatFile(spark, name, stat, Some(db), det)
             spark.table(s"`$db`.`$name`")
           }.recover { case e =>
-            System.err.println(s"[QueryRunner] WARNING: $name.stat ignored: $e")
+            graft.sources.Stats.warnIgnored(stat, e)
             d
           }.get
         name -> withStats
@@ -99,9 +110,10 @@ object QueryRunner {
     }.toMap
   }
 
-  /** Catalog database holding a data directory's stats-bearing tables —
-    * one per canonical directory path, so concurrent/sequential loads of
-    * different directories never clobber each other's registrations. */
+  /** Catalog database holding a data directory's stats-bearing parquet
+    * and `.tbl` tables — one per canonical directory path, so
+    * concurrent/sequential loads of different directories never clobber
+    * each other's registrations. */
   private[graft] def statDb(dir: String): String = {
     val canon = Paths.get(dir).toAbsolutePath.normalize.toString
     // collision-resistant digest, not String.hashCode: two directories

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
+import org.apache.spark.sql.types.{FloatType, IntegerType, StructType}
 
 /** Cost-based-optimizer statistics bootstrapping — the Spark equivalent of
   * the reference's `.stat` files (row count + per-column distinct counts,
@@ -11,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   * flips the CBO + join-reorder flags, so Catalyst costs join orders from
   * the same V(A) statistics the reference's PlanCost used (instead of
   * relying purely on AQE's runtime sizes).
+  *
+  * A reference `.stat` file maps to Catalyst statistics in one place,
+  * [[statTable]]: the `.det`/`.txt` DSv2 scan reports its result
+  * ([[DetDataSource]]), and [[injectStatFile]] writes it into the catalog
+  * for parquet and `.tbl` tables.
   */
 object Stats {
 
@@ -21,6 +28,11 @@ object Stats {
       saveAsCatalogTable(spark, s"${t}_s", graft.Tables.load(spark, sfDir, t))
       spark.sql(s"ANALYZE TABLE ${t}_s COMPUTE STATISTICS FOR ALL COLUMNS")
     }
+    enableCbo(spark)
+  }
+
+  /** Turn on the cost-based optimizer and its join reorder. */
+  def enableCbo(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
   }
@@ -60,32 +72,76 @@ object Stats {
     require(lines.size >= 2, s"stat file $path needs 2 lines, got ${lines.size}")
     val head = lines.get(0).trim.split("\\s+")
     require(head.length == 1, s"stat file $path line 1 must be a single tuple count")
-    (head(0).toLong, lines.get(1).trim.split("\\s+").toSeq.map(_.toLong))
+    val (numTuples, ndvs) = (head(0).toLong, lines.get(1).trim.split("\\s+").toSeq.map(_.toLong))
+    // a negative count would reach the optimizer as a negative size,
+    // which reads as small enough to broadcast
+    require(numTuples >= 0 && ndvs.forall(_ >= 0), s"stat file $path has a negative count")
+    (numTuples, ndvs)
   }
+
+  /** A table's `.stat` as Catalyst statistics: the tuple count and one
+    * [[ColumnStat]] per column, in `columns` order. */
+  final case class StatTable(rowCount: Long, columns: Seq[(String, ColumnStat)]) {
+    /** numtuples x the default width of `schema`'s rows, mirroring the
+      * reference's pages = numtuples / (pagesize / tuplesize) arithmetic.
+      * BigInt because the tuple count is EXTERNAL input and a Long
+      * overflow would flip a huge table into a broadcastable one. */
+    def sizeInBytes(schema: StructType): BigInt =
+      BigInt(rowCount) * schema.fields.map(_.dataType.defaultSize).sum.max(1)
+  }
+
+  /** The one mapping from a reference `.stat` to column statistics. Each
+    * column gets its `.stat` NDV as `distinctCount`. With the table's
+    * `.det` catalog it also gets `nullCount` 0 (the `.txt` format has no
+    * NULL encoding) and, for numeric columns, the RandomDB value domain
+    * [0, range): min 0 and max range-1 (INTEGER) or range (REAL).
+    * Catalyst's join estimate needs all of these: a key without a null
+    * count has no count stats, and the join is then estimated as the
+    * cartesian product of its inputs; a numeric key with counts but no
+    * min/max is estimated to match nothing. Without a `.det` (parquet,
+    * `.tbl` + `.md`) only the NDVs are known. Throws on a malformed file
+    * or an NDV count that differs from the column count. */
+  def statTable(statPath: String, columns: Seq[String],
+      det: Option[DetSource.DetSchema]): StatTable = {
+    val (numTuples, ndvs) = readStat(statPath)
+    require(ndvs.size == columns.size,
+      s"stat file $statPath has ${ndvs.size} NDVs for ${columns.size} columns")
+    val detCols = det.toSeq.flatMap(_.columns).map(c => c.name -> c).toMap
+    StatTable(numTuples, columns.zip(ndvs).map { case (name, ndv) =>
+      val distinct = ColumnStat(distinctCount = Some(BigInt(ndv)))
+      name -> detCols.get(name).fold(distinct) { c =>
+        val (min, max) = c.dataType match {
+          case IntegerType if c.range > 0 => (Some(0), Some(c.range - 1))
+          case FloatType if c.range > 0   => (Some(0f), Some(c.range.toFloat))
+          case _                          => (None, None)
+        }
+        distinct.copy(nullCount = Some(BigInt(0)), min = min, max = max)
+      }
+    })
+  }
+
+  /** A malformed `.stat` degrades to no stats, LOUDLY: silent degradation
+    * would undo the point of shipping it, and failing the load (or a
+    * query) over an estimate would be worse. */
+  def warnIgnored(statPath: String, e: Throwable): Unit =
+    System.err.println(s"WARNING: $statPath ignored, table served without stats: $e")
 
   /** Inject `.stat`-derived statistics into the session catalog for `table`
     * (which must already be a catalog table, optionally inside `database`)
     * and enable CBO, so Catalyst costs plans from the same
     * externally-supplied V(A) numbers the reference's PlanCost read — no
-    * scan needed. sizeInBytes is estimated as numtuples x the schema's
-    * default row width, mirroring the reference's
-    * pages = numtuples / (pagesize / tuplesize) arithmetic; the product is
-    * BigInt because the tuple count is EXTERNAL input and a Long overflow
-    * would flip a huge table into a broadcastable one. Resolution is
-    * database-qualified when `database` is given, so a same-named TEMP VIEW
-    * cannot shadow the stats-bearing table. */
+    * scan needed. Column stats come from [[statTable]] (pass the table's
+    * `.det` when it has one); sizeInBytes from [[StatTable.sizeInBytes]]
+    * over the table's schema. Resolution is database-qualified when
+    * `database` is given, so a same-named TEMP VIEW cannot shadow the
+    * stats-bearing table. */
   def injectStatFile(spark: SparkSession, table: String, statPath: String,
-      database: Option[String] = None): Unit = {
-    val (numTuples, ndvs) = readStat(statPath)
+      database: Option[String] = None, det: Option[DetSource.DetSchema] = None): Unit = {
     val qualified = database.map(d => s"`$d`.`$table`").getOrElse(s"`$table`")
     val schema = spark.table(qualified).schema
-    require(ndvs.size == schema.size,
-      s"stat file $statPath has ${ndvs.size} NDVs for ${schema.size} columns")
-    val rowWidth = schema.fields.map(_.dataType.defaultSize).sum.max(1)
+    val stats = statTable(statPath, schema.fieldNames.toSeq, det)
     org.apache.spark.sql.graft.CatalogBridge.setTableStats(
-      spark, table, numTuples, BigInt(numTuples) * rowWidth,
-      schema.fieldNames.zip(ndvs).toMap, database)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+      spark, table, stats.rowCount, stats.sizeInBytes(schema), stats.columns.toMap, database)
+    enableCbo(spark)
   }
 }

@@ -171,8 +171,8 @@ object QueryIndex {
       "`.txt` -> DSv2 `sources/DetDataSource.scala`; `.tbl` -> parquet `sources/TblSource.scala`",
       Nil, Seq("DetDataSource")),
     ("2.1 `.stat` statistics (`PlanCost.java:219-263`)",
-      "`sources/Stats.scala` -> `CatalogBridge.setTableStats`; CBO plan flip proven in-spec",
-      Nil, Seq("setTableStats", "StatsSpec")),
+      "`Stats.statTable` -> DSv2 `DetScan` statistics (`.det`/`.txt`) or `CatalogBridge.setTableStats` (parquet/`.tbl`); CBO plan flip proven in-spec",
+      Nil, Seq("statTable", "setTableStats", "StatsSpec")),
     ("2.2 Select σ (`Select.java:9-281`)",
       "`queries/Relational.scala`; typed literal coercion `dialect/Translator.scala`",
       Seq("q02_filter_project", "q03_filter_ops"), Nil),

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.dialect.Translator
 
-/** End-to-end golden over the full reference CLI path: the REAL `.det`
-  * catalogs from /root/reference/testcases, data generated by
-  * [[DetSource.generate]], written in the reference's tab-separated `.txt`
+/** End-to-end golden over the full reference CLI path: the reference's
+  * `.det` catalogs (test resources, copied from FIXTURES.md §A), data
+  * generated by [[DetSource.generate]], written in the reference's tab-separated `.txt`
   * format, read back through the DataSource-V2 connector
   * ([[DetDataSource]]), and all 9 reference test queries
   * (query{1-7,9,10}.sql) parsed + planned by the dialect frontend — the
@@ -22,19 +22,21 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private val refDir = "/root/reference/testcases"
+  /** The reference's `.det` catalogs, copied from FIXTURES.md §A; the
+    * query texts are read from `refDir`. */
+  private def det(t: String): String = getClass.getResource(s"/det/$t.det").getPath
 
   /** generate -> .txt -> DSv2 read, per reference table. */
   lazy val workDir: String = {
     val dir = Files.createTempDirectory("det-e2e").toString
     Seq("CUSTOMER" -> 200, "CART" -> 200, "CARTDETAILS" -> 200, "BILL" -> 200)
       .foreach { case (t, n) =>
-        val det = s"$refDir/$t.det"
-        val df = DetSource.generate(spark, det, n)
+        val df = DetSource.generate(spark, det(t), n)
         // reference row format: tab-separated with a trailing tab
         val lines = df.collect().map(_.toSeq.map(String.valueOf).mkString("", "\t", "\t"))
         Files.write(Paths.get(s"$dir/$t.txt"),
           lines.mkString("\n").getBytes("UTF-8"))
-        Files.copy(Paths.get(det), Paths.get(s"$dir/$t.det"))
+        Files.copy(Paths.get(det(t)), Paths.get(s"$dir/$t.det"))
       }
     dir
   }
@@ -52,7 +54,7 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase {
   def run(n: Int): DataFrame = Translator.run(spark, refQuery(n), tables)
 
   test("generated data round-trips the reference txt format through DSv2") {
-    val gen = DetSource.generate(spark, s"$refDir/CUSTOMER.det", 200)
+    val gen = DetSource.generate(spark, det("CUSTOMER"), 200)
     val back = dsv2("CUSTOMER")
     assert(back.schema == gen.schema)
     assertSameRows(back, gen)

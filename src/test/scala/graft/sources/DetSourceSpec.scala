@@ -11,8 +11,11 @@ import graft.dialect.Translator
 
 class DetSourceSpec extends AnyFunSuite with SparkTestBase {
 
+  /** The reference's CUSTOMER catalog, copied from FIXTURES.md §A. */
+  private val customerDet = getClass.getResource("/det/CUSTOMER.det").getPath
+
   test("parses the reference .det catalog format") {
-    val s = DetSource.parseDet("/root/reference/testcases/CUSTOMER.det")
+    val s = DetSource.parseDet(customerDet)
     assert(s.tupleBytes == 100)
     assert(s.structType == StructType(Seq(
       StructField("cid", IntegerType, nullable = false),
@@ -28,15 +31,15 @@ class DetSourceSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(dir.resolve("CUSTOMER.txt"),
       "7\t1\tabc\tdef\taddr1\t\n12\t0\txyz\tqrs\taddr2\t\n")
     val df = DetSource.readTxt(spark,
-      "/root/reference/testcases/CUSTOMER.det", dir.resolve("CUSTOMER.txt").toString)
+      customerDet, dir.resolve("CUSTOMER.txt").toString)
     val rows = df.orderBy("cid").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(7, 12))
     assert(rows.head.getString(2) == "abc")
   }
 
   test("deterministic generator: PK is a permutation, values reproducible") {
-    val a = DetSource.generate(spark, "/root/reference/testcases/CUSTOMER.det", 150)
-    val b = DetSource.generate(spark, "/root/reference/testcases/CUSTOMER.det", 150)
+    val a = DetSource.generate(spark, customerDet, 150)
+    val b = DetSource.generate(spark, customerDet, 150)
     assert(a.collect().map(_.toSeq).toSeq == b.collect().map(_.toSeq).toSeq)
     val pks = a.select("cid").collect().map(_.getInt(0))
     assert(pks.distinct.length == 150)
@@ -46,7 +49,7 @@ class DetSourceSpec extends AnyFunSuite with SparkTestBase {
 
   test("DataSource V2 connector reads det tables with column pruning") {
     val dir = Files.createTempDirectory("detv2")
-    Files.copy(java.nio.file.Paths.get("/root/reference/testcases/CUSTOMER.det"),
+    Files.copy(java.nio.file.Paths.get(customerDet),
       dir.resolve("CUSTOMER.det"))
     Files.writeString(dir.resolve("CUSTOMER.txt"),
       "7\t1\tabc\tdef\taddr1\t\n12\t0\txyz\tqrs\taddr2\t\n")
@@ -63,8 +66,27 @@ class DetSourceSpec extends AnyFunSuite with SparkTestBase {
       || plan.contains("firstname#"), plan)
   }
 
+  test("DataSource V2 connector decodes UTF-8 and its reads count as input bytes") {
+    // the .txt is read through Hadoop's FileSystem, so Spark's per-task
+    // input metrics see it, and decoded as UTF-8 whatever the platform
+    // default charset is
+    val dir = Files.createTempDirectory("detbytes")
+    Files.copy(java.nio.file.Paths.get(customerDet), dir.resolve("CUSTOMER.det"))
+    val txt = "7\t1\tabc\td\u00e9f\taddr1\t\n12\t0\txyz\tqrs\taddr2\t\n"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    Files.write(dir.resolve("CUSTOMER.txt"), txt)
+    val profile = graft.Profile.attach(spark)
+    // one scan, one read of the file: no orderBy (its sampling job would
+    // read the file a second time)
+    val rows = spark.read.format("graft.sources.DetDataSource")
+      .load(dir.resolve("CUSTOMER").toString).collect()
+    assert(rows.map(_.getString(3)).toSet == Set("d\u00e9f", "qrs"))
+    assert(profile.drain())
+    assert(profile.inputBytes == txt.length, s"input bytes ${profile.inputBytes}")
+  }
+
   test("dialect queries run over generated reference-format tables") {
-    val customer = DetSource.generate(spark, "/root/reference/testcases/CUSTOMER.det", 200)
+    val customer = DetSource.generate(spark, customerDet, 200)
     val got = Translator.run(spark,
       """SELECT CUSTOMER.cid,CUSTOMER.gender,CUSTOMER.firstname
         |FROM CUSTOMER
