@@ -16,22 +16,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** True when [[load]] REWRITES the loaded frame relative to a raw
-    * parquet scan (so a catalog table registered over the raw file would
-    * read different values OR a different column type). Events rewrites
-    * in BOTH physical generations — int64 nanos becomes a truncated
-    * TIMESTAMP, and timestamp[us] loads raw as TIMESTAMP_NTZ but leaves
-    * [[load]] as session-TZ TIMESTAMP — so a raw-file registration would
-    * drift in type (and, under a non-UTC session, in instant semantics)
-    * from every other read path. Only a file whose ts already loads as
-    * plain TIMESTAMP passes through untouched. */
-  def rewritesOnLoad(spark: SparkSession, sfDir: String, name: String): Boolean =
-    name == "events" && {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/events.parquet")
-        .schema("ts").dataType != TimestampType
-    }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
       // The driver has shipped events.ts under two physical schemas across

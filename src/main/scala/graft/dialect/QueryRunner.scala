@@ -15,15 +15,25 @@ import scala.jdk.CollectionConverters._
   *
   * Usage: runMain graft.dialect.QueryRunner <tableDir> <queryFile> [limit]
   * Tables are discovered from tableDir in every format the engine reads:
-  * `<name>.parquet`, the reference's serialized `<name>.tbl` (schema from
-  * `<name>.md` if present, else `<name>.det`), and the reference's
-  * `<name>.det` + `<name>.txt` pair via the DataSource-V2 scan — so a
-  * directory produced for the reference engine runs unmodified.
+  * `<name>.parquet`, and every reference layout (`.det` or `.md` schema,
+  * `.tbl` or `.txt` rows, optional `.stat`) via the DataSource-V2 scan —
+  * so a directory produced for the reference engine runs unmodified.
   */
 object QueryRunner {
 
-  /** Discover and load every table in `dir`, by preference
-    * parquet > .tbl > .det/.txt (first format found wins per name). */
+  /** Discover and load every table in `dir`: `<name>.parquet` through
+    * [[graft.Tables.load]], else any reference-format table through the
+    * [[graft.sources.DetDataSource]] scan (schema from `.det`, else `.md`;
+    * rows from `.tbl`, else `.txt`). A name with no rows file is skipped.
+    *
+    * A reference data directory may ship `<name>.stat` (numtuples +
+    * per-column NDVs, PlanCost.java:219-263). The scan reads it and
+    * reports it to Catalyst, and CBO and join reorder go on so Catalyst
+    * costs join orders from it — the reference's optimizer does the same.
+    * Loading is metadata-only: no data is copied and nothing is
+    * registered in the session catalog. A `.stat` beside a parquet table
+    * is ignored with a WARNING (the reference never ships parquet; its
+    * Spark-native stats route is `ANALYZE TABLE`, [[graft.sources.Stats.analyze]]). */
   def loadTables(spark: org.apache.spark.sql.SparkSession, dir: String)
       : Map[String, org.apache.spark.sql.DataFrame] = {
     import scala.jdk.CollectionConverters._
@@ -44,85 +54,25 @@ object QueryRunner {
             s"cannot load table from ${parts.map(p => s"$dir/$p").mkString(" + ")}: $e", e)
       }
     names.flatMap { name =>
-      val df =
-        if (has(s"$name.parquet"))
-          // Tables.load knows quirks of the standard tables (e.g. events'
-          // nanosecond timestamps)
-          load(s"$name.parquet")(graft.Tables.load(spark, dir, name))
-        else if (has(s"$name.tbl")) {
-          if (has(s"$name.md")) load(s"$name.md", s"$name.tbl") {
-            val st = graft.sources.TblSource.readMdSchema(s"$dir/$name.md")
-            val rows = graft.sources.TblSource.readRows(s"$dir/$name.tbl")
-              .map(org.apache.spark.sql.Row.fromSeq)
-            spark.createDataFrame(spark.sparkContext.parallelize(rows), st)
-          } else load(s"$name.det", s"$name.tbl") {
-            graft.sources.TblSource.readTbl(spark, s"$dir/$name.det", s"$dir/$name.tbl")
-          }
-        } else if (has(s"$name.txt"))
-          load(s"$name.det", s"$name.txt") {
-            spark.read.format("graft.sources.DetDataSource").load(s"$dir/$name")
-          }
-        else None
-      // A reference data directory may ship `<name>.stat` (numtuples +
-      // per-column NDVs, PlanCost.java:219-263). With one, CBO and join
-      // reorder go on so Catalyst costs join orders from it — the
-      // reference's optimizer does the same. A `.det`/`.txt` table needs
-      // nothing more: its DSv2 scan reads the `.stat` itself and reports
-      // it (DetDataSource), so its load is metadata-only and copies no
-      // data. Parquet and `.tbl` tables carry their stats in the session
-      // catalog instead, registered into a PER-DIRECTORY database
-      // (`statDb`) with all resolution database-qualified: a same-named
-      // temp view in the session cannot shadow the stats-bearing table,
-      // and loading two data directories in one session keeps both sets
-      // of registrations. Parquet registers as an EXTERNAL table over the
-      // existing files (no data copy); a `.tbl` table, or a parquet table
-      // whose load path rewrites the data relative to the raw file
-      // (Tables.rewritesOnLoad — events' ns->us timestamps), is written
-      // once into the warehouse. A malformed .stat degrades to no stats,
-      // with a WARNING naming the file (Stats.warnIgnored).
-      df.map { d =>
-        val stat = s"$dir/$name.stat"
-        val withStats =
-          if (!has(s"$name.stat")) d
-          else if (!has(s"$name.parquet") && !has(s"$name.tbl")) {
-            graft.sources.Stats.enableCbo(spark)
-            d
-          } else scala.util.Try {
-            val db = statDb(dir)
-            spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
-            if (has(s"$name.parquet") && !graft.Tables.rewritesOnLoad(spark, dir, name)) {
-              spark.sql(s"DROP TABLE IF EXISTS `$db`.`$name`")
-              spark.catalog.createTable(s"`$db`.`$name`", s"$dir/$name.parquet", "parquet")
-            } else graft.sources.Stats.saveAsCatalogTable(spark, name, d, Some(db))
-            // a .tbl read through its .det gets the same column stats as
-            // the DSv2 scan; parquet and .md schemas have NDVs only
-            val det =
-              if (has(s"$name.parquet") || has(s"$name.md")) None
-              else Some(graft.sources.DetSource.parseDet(s"$dir/$name.det"))
-            graft.sources.Stats.injectStatFile(spark, name, stat, Some(db), det)
-            spark.table(s"`$db`.`$name`")
-          }.recover { case e =>
-            graft.sources.Stats.warnIgnored(stat, e)
-            d
-          }.get
-        name -> withStats
+      val stat = s"$name.stat"
+      if (has(s"$name.parquet")) {
+        if (has(stat)) graft.sources.Stats.warnIgnored(s"$dir/$stat",
+          "a .stat is read for reference-format tables only; use ANALYZE TABLE for parquet")
+        // Tables.load knows quirks of the standard tables (e.g. events'
+        // nanosecond timestamps)
+        load(s"$name.parquet")(graft.Tables.load(spark, dir, name)).map(name -> _)
+      } else {
+        val schema = if (has(s"$name.det") || !has(s"$name.md")) s"$name.det" else s"$name.md"
+        val rows = if (has(s"$name.tbl")) s"$name.tbl" else s"$name.txt"
+        if (!has(rows)) None
+        else load(schema, rows) {
+          if (has(stat)) graft.sources.Stats.enableCbo(spark)
+          spark.read.format("graft.sources.DetDataSource").load(s"$dir/$name")
+        }.map(name -> _)
       }
     }.toMap
   }
 
-  /** Catalog database holding a data directory's stats-bearing parquet
-    * and `.tbl` tables — one per canonical directory path, so
-    * concurrent/sequential loads of different directories never clobber
-    * each other's registrations. */
-  private[graft] def statDb(dir: String): String = {
-    val canon = Paths.get(dir).toAbsolutePath.normalize.toString
-    // collision-resistant digest, not String.hashCode: two directories
-    // sharing a 31-bit hash would silently share a database and clobber
-    // each other's same-named registrations
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    s"graft_stats_${sha.take(6).map(b => f"$b%02x").mkString}"
-  }
   /** Two invocation shapes:
     *   - `QueryRunner <tableDir> <queryFile> [limit]` — native shape,
     *     prints to stdout (first arg is a directory);

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, DataInputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util
@@ -19,35 +19,39 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-import org.apache.spark.sql.types.{FloatType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, FloatType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** DataSource V2 connector for the reference's native table format: a
-  * `.det` catalog (schema) plus a tab-separated `.txt` data file
-  * (reference src/RandomDB.java / ConvertTxtToTbl.java), and, when it sits
-  * beside them, the `.stat` statistics file (PlanCost.java:219-263).
+/** DataSource V2 connector for every reference-format table
+  * (reference src/RandomDB.java / ConvertTxtToTbl.java): the schema comes
+  * from the `.det` catalog, or from the serialized `.md` catalog when
+  * there is no `.det`; the rows from the serialized `.tbl` (parsed by
+  * [[TblSource.readRows]]) or else the tab-separated `.txt`; and, when it
+  * sits beside them, the `.stat` statistics file (PlanCost.java:219-263).
   *
   * {{{
   *   spark.read.format("graft.sources.DetDataSource")
-  *     .load("/path/to/CUSTOMER")  // CUSTOMER.det + CUSTOMER.txt [+ CUSTOMER.stat]
+  *     .load("/path/to/CUSTOMER")  // CUSTOMER.det|.md + CUSTOMER.tbl|.txt [+ CUSTOMER.stat]
   * }}}
   *
-  * Loading is metadata-only: the `.det` and `.stat` are read once, when
-  * the table is created, and no data is copied. The scan reports the
-  * `.stat` numbers to Catalyst (`SupportsReportStatistics`: row count,
-  * size, and per-column stats from [[Stats.statTable]]), so the cost-based
-  * optimizer plans joins from them, as the reference's PlanCost does. A
-  * malformed `.stat` is ignored with a WARNING naming the file; the table
-  * is then served without stats.
+  * Loading is metadata-only: the `.det`/`.md` and `.stat` are read once,
+  * when the table is created, plus a `.tbl`'s 4-byte stream header, so a
+  * file that is no serialization stream fails the load; no data is
+  * copied. The scan reports the `.stat` numbers to Catalyst
+  * (`SupportsReportStatistics`: row count, size, and per-column stats from
+  * [[Stats.statTable]], with null count and value domain when there is a
+  * `.det`), so the cost-based optimizer plans joins from them, as the
+  * reference's PlanCost does. A malformed `.stat` is ignored with a
+  * WARNING naming the file; the table is then served without stats.
   *
   * Implements column pruning (`SupportsPushDownRequiredColumns`): only the
-  * projected fields are parsed out of each line. The `.txt` is read as
-  * UTF-8 through Hadoop's `FileSystem`, so Spark's input metrics count its
-  * bytes. One input partition per table — the reference's files are
-  * single small text files; a scale-path implementation would split on
-  * byte ranges like the built-in text source.
+  * projected fields are converted. The rows file is read through Hadoop's
+  * `FileSystem` (a `.txt` as UTF-8), so Spark's input metrics count its
+  * bytes, and a read error names the file. One input partition per
+  * table — the reference's files are single small files, and a `.tbl` is
+  * one unsplittable stream.
   */
 class DetDataSource extends TableProvider {
   private def basePath(options: CaseInsensitiveStringMap): String = {
@@ -57,31 +61,43 @@ class DetDataSource extends TableProvider {
     else Option(options.get("path")).getOrElse(sys.error("det source: no path given"))
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DetSource.parseDet(basePath(options) + ".det").structType
+  private def exists(file: String): Boolean = Files.exists(Paths.get(file))
+
+  /** The `.det` catalog; None for a table with a `.md` and no `.det`. */
+  private def det(path: String): Option[DetSource.DetSchema] =
+    if (exists(path + ".det") || !exists(path + ".md")) Some(DetSource.parseDet(path + ".det"))
+    else None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val path = basePath(options)
+    det(path).fold(TblSource.readMdSchema(path + ".md"))(_.structType)
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val path = basePath(new CaseInsensitiveStringMap(properties))
-    new DetTable(path, schema, statsBeside(path))
+    val rows = if (exists(path + ".tbl")) path + ".tbl" else path + ".txt"
+    if (rows.endsWith(".tbl")) {
+      val in = new DataInputStream(Files.newInputStream(Paths.get(rows)))
+      try TblSource.readHeader(in) finally in.close()
+    }
+    new DetTable(path, rows, schema, statsBeside(path, schema))
   }
 
   override def supportsExternalMetadata(): Boolean = true
 
   /** `<path>.stat` as Catalyst statistics, if it sits beside the table. */
-  private def statsBeside(path: String): Option[Stats.StatTable] = {
+  private def statsBeside(path: String, schema: StructType): Option[Stats.StatTable] = {
     val stat = path + ".stat"
-    if (!Files.exists(Paths.get(stat))) None
-    else try {
-      val det = DetSource.parseDet(path + ".det")
-      Some(Stats.statTable(stat, det.columns.map(_.name), Some(det)))
-    } catch {
-      case NonFatal(e) => Stats.warnIgnored(stat, e); None
+    if (!exists(stat)) None
+    else try Some(Stats.statTable(stat, schema.fieldNames.toSeq, det(path))) catch {
+      case NonFatal(e) => Stats.warnIgnored(stat, e.toString); None
     }
   }
 }
 
-final class DetTable(val path: String, tableSchema: StructType,
+/** The reference table at `path`, served from `rows`, its `.tbl` or `.txt`. */
+final class DetTable(val path: String, val rows: String, tableSchema: StructType,
     val stats: Option[Stats.StatTable])
     extends Table with SupportsRead {
   override def name(): String = path
@@ -91,7 +107,7 @@ final class DetTable(val path: String, tableSchema: StructType,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new DetScanBuilder(this)
 
-  /** The Hadoop configuration the readers open the `.txt` with, broadcast
+  /** The Hadoop configuration the readers open the rows file with, broadcast
     * once per table on first use. Adaptive planning asks each query's
     * scans for a reader factory several times, and a broadcast per ask
     * cost ~10 ms each: ~90 ms of planning per 4-table join on 4 cores. */
@@ -113,7 +129,7 @@ final class DetScan(table: DetTable, required: StructType)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    Array(DetInputPartition(table.path))
+    Array(DetInputPartition(table.rows))
   override def createReaderFactory(): PartitionReaderFactory =
     new DetReaderFactory(table.schema(), required, table.hadoopConf)
 
@@ -158,41 +174,58 @@ object DetScan {
   }
 }
 
-final case class DetInputPartition(path: String) extends InputPartition
+final case class DetInputPartition(rows: String) extends InputPartition
 
 final class DetReaderFactory(full: StructType, required: StructType,
     conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = new Path(partition.asInstanceOf[DetInputPartition].path + ".txt")
+    val file = new Path(partition.asInstanceOf[DetInputPartition].rows)
+    // convert only the projected fields, by position in the full schema
+    val picks = required.fields.map(f => full.fieldIndex(f.name))
     new PartitionReader[InternalRow] {
-      private val in = new BufferedReader(new InputStreamReader(
-        file.getFileSystem(conf.value.value).open(file), StandardCharsets.UTF_8))
-      private var row: InternalRow = _
-      // parse only the projected fields, by position in the full schema
-      private val picks = required.fields.map(f => full.fieldIndex(f.name))
-
-      override def next(): Boolean = {
-        var line = in.readLine()
-        while (line != null && line.isEmpty) line = in.readLine()
-        if (line == null) return false
-        val cells = line.split("\t")
-        val vals = new Array[Any](picks.length)
-        var i = 0
-        while (i < picks.length) {
-          val raw = cells(picks(i))
-          vals(i) = required.fields(i).dataType match {
-            case IntegerType => raw.toInt
-            case FloatType   => raw.toFloat
-            case StringType  => UTF8String.fromString(raw)
+      private val in = file.getFileSystem(conf.value.value).open(file)
+      // parsed on the first next(), once Spark will close() this reader
+      private lazy val rows: Iterator[InternalRow] =
+        if (file.getName.endsWith(".tbl")) TblSource.readRows(in).iterator.map { vals =>
+          require(vals.length == full.length,
+            s"row has ${vals.length} fields, catalog declares ${full.length}")
+          new GenericInternalRow(Array.tabulate[Any](picks.length)(i =>
+            DetReaderFactory.fromTbl(required.fields(i), vals(picks(i)))))
+        } else {
+          val lines = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+          Iterator.continually(lines.readLine()).takeWhile(_ != null).filter(_.nonEmpty).map { line =>
+            val cells = line.split("\t")
+            new GenericInternalRow(Array.tabulate[Any](picks.length)(i =>
+              DetReaderFactory.fromTxt(required.fields(i).dataType, cells(picks(i)))))
           }
-          i += 1
         }
-        row = new GenericInternalRow(vals)
-        true
-      }
+      private var row: InternalRow = _
+
+      override def next(): Boolean =
+        try rows.hasNext && { row = rows.next(); true } catch {
+          case NonFatal(e) => throw new IllegalArgumentException(s"cannot read $file: $e", e)
+        }
       override def get(): InternalRow = row
       override def close(): Unit = in.close()
     }
+  }
+}
+
+object DetReaderFactory {
+  private def fromTxt(dataType: DataType, raw: String): Any = dataType match {
+    case IntegerType => raw.toInt
+    case FloatType   => raw.toFloat
+    case StringType  => UTF8String.fromString(raw)
+  }
+
+  /** A `.tbl` value as the catalog's type; an INTEGER written into a REAL
+    * column widens to float. */
+  private def fromTbl(f: StructField, v: Any): Any = (f.dataType, v) match {
+    case (IntegerType, i: Int)   => i
+    case (FloatType, fl: Float)  => fl
+    case (FloatType, i: Int)     => i.toFloat
+    case (StringType, s: String) => UTF8String.fromString(s)
+    case (dt, other) => sys.error(s"$other does not fit $dt for ${f.name}")
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -15,8 +14,8 @@ import scala.jdk.CollectionConverters._
   * per column; types INTEGER | STRING | REAL — reference
   * src/RandomDB.java:57-110) and stores data as tab-separated `.txt`
   * converted to serialized `.tbl` (ConvertTxtToTbl.java:29-70). Here the
-  * `.det` becomes a `StructType`, the `.txt` reads through the csv source,
-  * and "conversion" targets parquet.
+  * `.det` becomes a `StructType`; the [[DetDataSource]] scan reads the rows
+  * from the `.tbl` or `.txt` with no conversion step.
   */
 object DetSource {
 
@@ -43,18 +42,6 @@ object DetSource {
       DetColumn(t(0), dt, t(2).toInt, t(3), t(4).toInt)
     }
     DetSchema(cols, tupleBytes)
-  }
-
-  /** Read a reference-format tab-separated `.txt` data file against a
-    * `.det` schema (rows end with a trailing tab, hence the trim). */
-  def readTxt(spark: SparkSession, detPath: String, txtPath: String): DataFrame = {
-    val schema = parseDet(detPath)
-    val st = schema.structType
-    val parsed = spark.read.text(txtPath).select(
-      st.fields.zipWithIndex.map { case (f, i) =>
-        split(rtrim(col("value"), "\t"), "\t").getItem(i).cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-    parsed
   }
 
   /** Deterministic fixture generator for a `.det` schema — the reference's
@@ -85,23 +72,5 @@ object DetSource {
       })
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), schema.structType)
-  }
-}
-
-/** CLI: convert a reference-format table to parquet — the analogue of the
-  * reference's `ConvertTxtToTbl <table>` loader.
-  *
-  * Usage: runMain graft.sources.DetLoader <dir> <table> [outDir]
-  * expects `<dir>/<table>.det` and `<dir>/<table>.txt`.
-  */
-object DetLoader {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val table = args(1)
-    val outDir = if (args.length > 2) args(2) else dir
-    val spark = graft.Session.local()
-    DetSource.readTxt(spark, s"$dir/$table.det", s"$dir/$table.txt")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$table.parquet")
-    spark.stop()
   }
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{FloatType, IntegerType, StructType}
   * relying purely on AQE's runtime sizes).
   *
   * A reference `.stat` file maps to Catalyst statistics in one place,
-  * [[statTable]]: the `.det`/`.txt` DSv2 scan reports its result
-  * ([[DetDataSource]]), and [[injectStatFile]] writes it into the catalog
-  * for parquet and `.tbl` tables.
+  * [[statTable]], whose result the reference-format DSv2 scan reports
+  * ([[DetDataSource]]). Parquet tables take the Spark-native route,
+  * [[analyze]].
   */
 object Stats {
 
@@ -37,17 +37,13 @@ object Stats {
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
   }
 
-  /** Overwrite-register `df` as catalog table `name` (optionally inside
-    * `database`, created if absent). The in-memory catalog resets per JVM
-    * but the warehouse directory persists — saveAsTable refuses an
-    * orphaned location, so clear it first. */
-  def saveAsCatalogTable(spark: SparkSession, name: String,
-      df: org.apache.spark.sql.DataFrame,
-      database: Option[String] = None): Unit = {
-    database.foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`"))
-    val db = database.getOrElse(spark.catalog.currentDatabase)
-    val qualified = database.map(d => s"`$d`.`$name`").getOrElse(s"`$name`")
-    spark.sql(s"DROP TABLE IF EXISTS $qualified")
+  /** Overwrite-register `df` as catalog table `name`. The in-memory
+    * catalog resets per JVM but the warehouse directory persists —
+    * saveAsTable refuses an orphaned location, so clear it first. */
+  private def saveAsCatalogTable(spark: SparkSession, name: String,
+      df: org.apache.spark.sql.DataFrame): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$name`")
+    val db = spark.catalog.currentDatabase
     val loc = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       (if (db == "default") "" else s"$db.db/") + name.toLowerCase)
@@ -55,13 +51,8 @@ object Stats {
       import scala.reflect.io.Directory
       new Directory(loc).deleteRecursively()
     }
-    df.write.mode("overwrite").format("parquet").saveAsTable(qualified)
+    df.write.mode("overwrite").format("parquet").saveAsTable(s"`$name`")
   }
-
-  /** Catalog statistics for an analyzed table (rowCount, per-column NDV). */
-  def describe(spark: SparkSession, table: String): Map[String, String] =
-    spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Parse a reference `<table>.stat` file. Format (reference
     * src/qp/optimizer/PlanCost.java:219-263): line 1 is the tuple count,
@@ -98,8 +89,8 @@ object Stats {
     * Catalyst's join estimate needs all of these: a key without a null
     * count has no count stats, and the join is then estimated as the
     * cartesian product of its inputs; a numeric key with counts but no
-    * min/max is estimated to match nothing. Without a `.det` (parquet,
-    * `.tbl` + `.md`) only the NDVs are known. Throws on a malformed file
+    * min/max is estimated to match nothing. Without a `.det` (a `.md`
+    * schema) only the NDVs are known. Throws on a malformed file
     * or an NDV count that differs from the column count. */
   def statTable(statPath: String, columns: Seq[String],
       det: Option[DetSource.DetSchema]): StatTable = {
@@ -120,28 +111,10 @@ object Stats {
     })
   }
 
-  /** A malformed `.stat` degrades to no stats, LOUDLY: silent degradation
-    * would undo the point of shipping it, and failing the load (or a
-    * query) over an estimate would be worse. */
-  def warnIgnored(statPath: String, e: Throwable): Unit =
-    System.err.println(s"WARNING: $statPath ignored, table served without stats: $e")
-
-  /** Inject `.stat`-derived statistics into the session catalog for `table`
-    * (which must already be a catalog table, optionally inside `database`)
-    * and enable CBO, so Catalyst costs plans from the same
-    * externally-supplied V(A) numbers the reference's PlanCost read — no
-    * scan needed. Column stats come from [[statTable]] (pass the table's
-    * `.det` when it has one); sizeInBytes from [[StatTable.sizeInBytes]]
-    * over the table's schema. Resolution is database-qualified when
-    * `database` is given, so a same-named TEMP VIEW cannot shadow the
-    * stats-bearing table. */
-  def injectStatFile(spark: SparkSession, table: String, statPath: String,
-      database: Option[String] = None, det: Option[DetSource.DetSchema] = None): Unit = {
-    val qualified = database.map(d => s"`$d`.`$table`").getOrElse(s"`$table`")
-    val schema = spark.table(qualified).schema
-    val stats = statTable(statPath, schema.fieldNames.toSeq, det)
-    org.apache.spark.sql.graft.CatalogBridge.setTableStats(
-      spark, table, stats.rowCount, stats.sizeInBytes(schema), stats.columns.toMap, database)
-    enableCbo(spark)
-  }
+  /** A `.stat` that cannot be used (malformed, or beside a parquet table)
+    * degrades to no stats, LOUDLY: silent degradation would undo the
+    * point of shipping it, and failing the load (or a query) over an
+    * estimate would be worse. */
+  def warnIgnored(statPath: String, reason: String): Unit =
+    System.err.println(s"WARNING: $statPath ignored, table served without stats: $reason")
 }

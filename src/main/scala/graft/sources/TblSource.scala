@@ -1,8 +1,7 @@
 package graft.sources
 
-import java.io.{DataInputStream, EOFException, FileInputStream}
+import java.io.{BufferedInputStream, DataInputStream, EOFException, FileInputStream, InputStream}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{FloatType, IntegerType, StringType, StructField, StructType}
 
 import scala.collection.mutable
@@ -20,10 +19,13 @@ import scala.collection.mutable
   * references), driven entirely by the class descriptors read from the
   * stream. It accepts both the tuple-stream and the batch-stream layout.
   *
+  * Rows are served by the [[DetDataSource]] scan, which runs
+  * [[readRows]] inside its reader; [[readMdSchema]] gives it the schema
+  * of a table that has a `.md` and no `.det`.
+  *
   * Scale note: the format is a single sequential stream with back
-  * references — inherently unsplittable, so this is a compatibility
-  * loader (parse once, then write parquet via [[TblLoader]]), not a scale
-  * path. The reference has the same constraint: its reader is a
+  * references — inherently unsplittable, so the scan reads it in one
+  * task. The reference has the same constraint: its reader is a
   * single-threaded ObjectInputStream.
   */
 object TblSource {
@@ -44,10 +46,15 @@ object TblSource {
   private val ScWriteMethod = 0x01
   private val ScSerializable = 0x02
 
-  /** Parse every top-level object of a serialization stream. */
-  private def parseStream(in: DataInputStream): Seq[Any] = {
+  /** Read and check the 4-byte stream header (magic 0xACED, version 5). */
+  def readHeader(in: DataInputStream): Unit = {
     require(in.readUnsignedShort() == 0xACED, "not a Java serialization stream")
     require(in.readUnsignedShort() == 5, "unsupported stream version")
+  }
+
+  /** Parse every top-level object of a serialization stream. */
+  private def parseStream(in: DataInputStream): Seq[Any] = {
+    readHeader(in)
     val handles = mutable.ArrayBuffer[Any]()
     def newHandle(v: Any): Any = { handles += v; v }
 
@@ -174,23 +181,20 @@ object TblSource {
     case x => x
   }
 
-  /** All rows of a `.tbl` file, whether it is a stream of Tuples
+  /** All rows of a `.tbl` stream, whether it is a stream of Tuples
     * (ConvertTxtToTbl layout) or of Batches (TupleWriter layout).
     * Dispatch is on the serialized class, not the extracted shape — an
     * empty Batch page (possible when the row count divides the page
-    * size) must contribute zero rows, not one phantom empty row. */
-  def readRows(tblPath: String): Seq[Seq[Any]] = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(new FileInputStream(tblPath)))
-    try {
-      parseStream(in).flatMap {
-        case o: JObject if o.desc.name == "qp.utils.Tuple" =>
-          Seq(extract(o).asInstanceOf[Seq[Any]])
-        case o: JObject if o.desc.name == "qp.utils.Batch" =>
-          extract(o).asInstanceOf[Seq[Seq[Any]]]
-        case other => sys.error(s"tbl parse: unexpected top-level $other")
-      }
-    } finally in.close()
-  }
+    * size) must contribute zero rows, not one phantom empty row. The
+    * caller closes `in`. */
+  def readRows(in: InputStream): Seq[Seq[Any]] =
+    parseStream(new DataInputStream(new BufferedInputStream(in))).flatMap {
+      case o: JObject if o.desc.name == "qp.utils.Tuple" =>
+        Seq(extract(o).asInstanceOf[Seq[Any]])
+      case o: JObject if o.desc.name == "qp.utils.Batch" =>
+        extract(o).asInstanceOf[Seq[Seq[Any]]]
+      case other => sys.error(s"tbl parse: unexpected top-level $other")
+    }
 
   /** Parse a reference `.md` catalog — a Java-serialized `qp.utils.Schema`
     * (ArrayList of Attribute(tblname, colname, type, ...)) — into a Spark
@@ -199,7 +203,7 @@ object TblSource {
     * handled by [[DetSource.parseDet]]. Attribute type codes per
     * Attribute.java: 1=INT, 2=STRING, 3=REAL. */
   def readMdSchema(mdPath: String): StructType = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(new FileInputStream(mdPath)))
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(mdPath)))
     try {
       val schema = parseStream(in).headOption match {
         case Some(o: JObject) if o.desc.name == "qp.utils.Schema" => o
@@ -220,39 +224,5 @@ object TblSource {
         StructField(a.fields("colname").asInstanceOf[String], dt, nullable = false)
       }.toSeq)
     } finally in.close()
-  }
-
-  /** `.tbl` + `.det` to DataFrame (types coerced per the catalog). */
-  def readTbl(spark: SparkSession, detPath: String, tblPath: String): DataFrame = {
-    val schema = DetSource.parseDet(detPath).structType
-    val rows = readRows(tblPath).map { vals =>
-      require(vals.length == schema.fields.length,
-        s"tbl read: row has ${vals.length} fields, catalog declares ${schema.fields.length}")
-      Row.fromSeq(schema.fields.zip(vals).map { case (f, v) =>
-        (f.dataType, v) match {
-          case (IntegerType, i: Int)    => i
-          case (FloatType, fl: Float)   => fl
-          case (FloatType, i: Int)      => i.toFloat
-          case (StringType, s: String)  => s
-          case (dt, other) => sys.error(s"tbl read: $other does not fit $dt for ${f.name}")
-        }
-      })
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-  }
-}
-
-/** CLI: convert a reference serialized `.tbl` table to parquet.
-  * Usage: runMain graft.sources.TblLoader <dir> <table> [outDir]
-  * expects `<dir>/<table>.det` and `<dir>/<table>.tbl`. */
-object TblLoader {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val table = args(1)
-    val outDir = if (args.length > 2) args(2) else dir
-    val spark = graft.Session.local()
-    TblSource.readTbl(spark, s"$dir/$table.det", s"$dir/$table.tbl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$table.parquet")
-    spark.stop()
   }
 }

@@ -168,11 +168,11 @@ object QueryIndex {
       "`sources/DetSource.scala` (deterministic); golden path over all 9 reference queries",
       Nil, Seq("DetEndToEnd", "DetSource")),
     ("2.1 ConvertTxtToTbl (`ConvertTxtToTbl.java:18-73`)",
-      "`.txt` -> DSv2 `sources/DetDataSource.scala`; `.tbl` -> parquet `sources/TblSource.scala`",
+      "no conversion step: `.tbl` or `.txt` rows served by the DSv2 scan `sources/DetDataSource.scala` (`.tbl` stream parsed by `sources/TblSource.scala`)",
       Nil, Seq("DetDataSource")),
     ("2.1 `.stat` statistics (`PlanCost.java:219-263`)",
-      "`Stats.statTable` -> DSv2 `DetScan` statistics (`.det`/`.txt`) or `CatalogBridge.setTableStats` (parquet/`.tbl`); CBO plan flip proven in-spec",
-      Nil, Seq("statTable", "setTableStats", "StatsSpec")),
+      "`Stats.statTable` -> DSv2 `DetScan` statistics for every reference layout (null count and min/max from a `.det`); CBO plan flip proven in-spec",
+      Nil, Seq("statTable", "StatsSpec")),
     ("2.2 Select σ (`Select.java:9-281`)",
       "`queries/Relational.scala`; typed literal coercion `dialect/Translator.scala`",
       Seq("q02_filter_project", "q03_filter_ops"), Nil),

@@ -21,10 +21,7 @@ class CollectLawSpec extends AnyFunSuite {
     "QueryRunner.scala:writeReferenceFormat" ->
       ("reference QueryMain result file: toLocalIterator streams one " +
         "partition at a time; driver memory bounds a PARTITION, not " +
-        "the result (documented in its Scaladoc)"),
-    "Stats.scala:describe" ->
-      ("DESCRIBE TABLE EXTENDED output — a bounded catalog-metadata " +
-        "frame (one row per column/property), not data")
+        "the result (documented in its Scaladoc)")
   )
 
   test("every driver-side collection site is allowlisted with a boundedness argument") {

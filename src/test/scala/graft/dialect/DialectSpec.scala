@@ -245,5 +245,20 @@ class DialectSpec extends AnyFunSuite with SparkTestBase {
     Files.write(badDet.resolve("x.txt"), "1\t\n".getBytes("UTF-8"))
     expectLoud(badDet, "x.txt")
     expectLoud(badDet, "x.det")
+
+    // a .tbl that is no serialization stream, beside a valid .det: its
+    // rows are parsed by the scan, so the failure may come at load or at
+    // the first action; either way it names the .tbl and carries the cause
+    val badTbl = Files.createTempDirectory("load-badtbl")
+    Files.write(badTbl.resolve("x.det"), "1\n4\nk INTEGER 10 PK 4\n".getBytes("UTF-8"))
+    def expectLoudTbl(bytes: Array[Byte]): Unit = {
+      Files.write(badTbl.resolve("x.tbl"), bytes)
+      val e = intercept[Exception](QueryRunner.loadTables(spark, badTbl.toString)("x").count())
+      assert(e.getMessage.contains(badTbl.resolve("x.tbl").toString), e.getMessage)
+      assert(e.getCause != null)
+    }
+    expectLoudTbl("not a tbl stream".getBytes("UTF-8"))
+    // a valid stream header over a garbage body
+    expectLoudTbl(Array(0xAC, 0xED, 0x00, 0x05, 0x42, 0x42).map(_.toByte))
   }
 }

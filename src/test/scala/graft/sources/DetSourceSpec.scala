@@ -30,8 +30,9 @@ class DetSourceSpec extends AnyFunSuite with SparkTestBase {
     val dir = Files.createTempDirectory("det")
     Files.writeString(dir.resolve("CUSTOMER.txt"),
       "7\t1\tabc\tdef\taddr1\t\n12\t0\txyz\tqrs\taddr2\t\n")
-    val df = DetSource.readTxt(spark,
-      customerDet, dir.resolve("CUSTOMER.txt").toString)
+    Files.copy(java.nio.file.Paths.get(customerDet), dir.resolve("CUSTOMER.det"))
+    val df = spark.read.format("graft.sources.DetDataSource")
+      .load(dir.resolve("CUSTOMER").toString)
     val rows = df.orderBy("cid").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(7, 12))
     assert(rows.head.getString(2) == "abc")
@@ -83,6 +84,17 @@ class DetSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getString(3)).toSet == Set("d\u00e9f", "qrs"))
     assert(profile.drain())
     assert(profile.inputBytes == txt.length, s"input bytes ${profile.inputBytes}")
+
+    // a .tbl is opened the same way: its whole stream counts
+    val tblRes = getClass.getResource("/tbl/sample.tbl").getPath
+    Files.copy(java.nio.file.Paths.get(tblRes), dir.resolve("S.tbl"))
+    Files.copy(java.nio.file.Paths.get(tblRes.stripSuffix(".tbl") + ".det"), dir.resolve("S.det"))
+    profile.reset()
+    assert(spark.read.format("graft.sources.DetDataSource")
+      .load(dir.resolve("S").toString).collect().length == 7)
+    assert(profile.drain())
+    assert(profile.inputBytes == Files.size(dir.resolve("S.tbl")),
+      s"input bytes ${profile.inputBytes}")
   }
 
   test("dialect queries run over generated reference-format tables") {

@@ -12,9 +12,9 @@ import graft.SparkTestBase
   * (line 1 = tuple count, line 2 = per-column distinct counts; its
   * optimizer reads them in PlanCost.getStatistics,
   * src/qp/optimizer/PlanCost.java:219-263). These specs pin the parser,
-  * the catalog injection (CBO must see the EXTERNAL numbers, not a scan's),
-  * the QueryRunner table-discovery path (parquet and `.tbl` through the
-  * catalog, `.det`/`.txt` through the DSv2 scan), and the reference
+  * the QueryRunner table-discovery path (every reference layout through
+  * the DSv2 scan, which reports the EXTERNAL numbers, not a scan's; a
+  * `.stat` beside parquet ignored with a warning), and the reference
   * `QueryMain` CLI invocation shape.
   */
 class StatsSpec extends AnyFunSuite with SparkTestBase {
@@ -34,54 +34,32 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](Stats.readStat(s"$dir/neg.stat"))
   }
 
-  test("injectStatFile feeds the catalog the .stat numbers, not a scan's") {
-    val dir = tmp("stat-inject")
-    val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("id", "grp")
-    Stats.saveAsCatalogTable(spark, "stat_inject_t", df)
-    // claim numbers wildly different from the 3 physical rows: the point
-    // of .stat support is trusting external stats without scanning
-    Files.write(Paths.get(s"$dir/stat_inject_t.stat"), "1000000\n999999 5\n".getBytes)
-    try {
-      Stats.injectStatFile(spark, "stat_inject_t", s"$dir/stat_inject_t.stat")
-      val stats = spark.table("stat_inject_t").queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(1000000)))
-      val ndv = spark.sql("DESC EXTENDED stat_inject_t grp")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(ndv("distinct_count") == "5")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      spark.sql("DROP TABLE IF EXISTS stat_inject_t")
-    }
+  /** loadTables(dir), and what it printed to stderr meanwhile. */
+  private def loadWithErr(dir: String): (Map[String, org.apache.spark.sql.DataFrame], String) = {
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try (graft.dialect.QueryRunner.loadTables(spark, dir), err.toString("UTF-8"))
+    finally System.setErr(saved)
   }
 
-  test("injectStatFile rejects a column-count mismatch") {
-    val dir = tmp("stat-bad")
-    val df = Seq((1, "a")).toDF("id", "grp")
-    Stats.saveAsCatalogTable(spark, "stat_bad_t", df)
-    Files.write(Paths.get(s"$dir/stat_bad_t.stat"), "10\n1 2 3\n".getBytes)
-    try intercept[IllegalArgumentException] {
-      Stats.injectStatFile(spark, "stat_bad_t", s"$dir/stat_bad_t.stat")
-    } finally spark.sql("DROP TABLE IF EXISTS stat_bad_t")
-  }
+  /** No per-directory stats database: loading registers nothing. */
+  private def noStatsDb(): Boolean =
+    !spark.catalog.listDatabases().collect().exists(_.name.startsWith("graft_stats_"))
 
-  test("QueryRunner.loadTables discovers .stat files beside tables") {
-    val dir = tmp("stat-discover")
+  test("a .stat beside a parquet table is ignored with a warning naming it; the table loads") {
+    // the reference never ships parquet; parquet's stats route is
+    // ANALYZE TABLE (Stats.analyze), so loadTables warns and moves on
+    val dir = tmp("stat-parquet")
     Seq((1, 10), (2, 20)).toDF("k", "v")
       .write.parquet(s"$dir/emp.parquet")
     Files.write(Paths.get(s"$dir/emp.stat"), "777\n700 70\n".getBytes)
-    try {
-      val tables = graft.dialect.QueryRunner.loadTables(spark, dir)
-      val stats = tables("emp").queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(777)),
-        s"CBO should see the .stat row count, got $stats")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      // loadTables registers into the per-directory stats database, not
-      // default — drop that database or the table leaks across tests
-      spark.sql(s"DROP DATABASE IF EXISTS `${graft.dialect.QueryRunner.statDb(dir)}` CASCADE")
-    }
+    val (tables, err) = loadWithErr(dir)
+    assert(err.contains("WARNING") && err.contains(s"$dir/emp.stat"), err)
+    val emp = tables("emp")
+    assert(emp.count() == 2)
+    assert(!emp.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(777)))
+    assert(noStatsDb())
   }
 
   /** The reference's `.det` catalogs, copied from FIXTURES.md §A. */
@@ -168,7 +146,7 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
       val cart = tables("CART")
       assert(cart.count() == 40)
       assert(files(warehouse) == before, "loadTables wrote under the warehouse")
-      assert(!spark.catalog.databaseExists(graft.dialect.QueryRunner.statDb(dir)))
+      assert(noStatsDb())
       assert(spark.conf.get("spark.sql.cbo.enabled") == "true")
       assert(spark.conf.get("spark.sql.cbo.joinReorder.enabled") == "true")
       val stats = cart.queryExecution.optimizedPlan.stats
@@ -209,13 +187,6 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a malformed .stat beside a .det/.txt table is ignored with a warning naming it") {
-    def loadWithErr(dir: String): (Map[String, org.apache.spark.sql.DataFrame], String) = {
-      val err = new java.io.ByteArrayOutputStream
-      val saved = System.err
-      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
-      try (graft.dialect.QueryRunner.loadTables(spark, dir), err.toString("UTF-8"))
-      finally System.setErr(saved)
-    }
     try Seq("wrong-ndv-count" -> "10\n1 2\n", "unparsable" -> "ten\nx y z w\n").foreach {
       case (label, stat) =>
         val dir = tmp(s"stat-malformed-$label")
@@ -232,26 +203,40 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test(".stat beside a .tbl read through its .det gets the same column stats as the scan") {
+    // the full reference layout of one table, as RandomDB + ConvertTxtToTbl
+    // leave it: .det + .md + .tbl + .txt + .stat. It loads through the
+    // connector (schema from the .det, rows from the .tbl) with no
+    // warehouse copy, no stats database, and the .det's null count and
+    // value domain in the column stats
     val dir = tmp("stat-tbl")
-    val res = getClass.getResource("/tbl/sample.det").getPath
-    Files.copy(Paths.get(res), Paths.get(s"$dir/S.det"))
-    Files.copy(Paths.get(res.stripSuffix(".det") + ".tbl"), Paths.get(s"$dir/S.tbl"))
-    Files.write(Paths.get(s"$dir/S.stat"), "7\n7 2 7 7 1\n".getBytes("UTF-8"))
+    val res = getClass.getResource("/tbl/md_table.md").getPath
+    Files.copy(Paths.get(res), Paths.get(s"$dir/S.md"))
+    Files.copy(Paths.get(res.stripSuffix(".md") + ".tbl"), Paths.get(s"$dir/S.tbl"))
+    // md_table.md's columns: (cid INT, gender INT, firstname STRING, score REAL)
+    Files.write(Paths.get(s"$dir/S.det"), ("4\n32\ncid INTEGER 200 PK 4\n" +
+      "gender INTEGER 2 NK 4\nfirstname STRING 20 NK 20\nscore REAL 10 NK 4\n").getBytes("UTF-8"))
+    // one row only: the .tbl's 6 rows must win
+    Files.write(Paths.get(s"$dir/S.txt"), "0\t0\tf0\t0.0\t\n".getBytes("UTF-8"))
+    Files.write(Paths.get(s"$dir/S.stat"), "6\n6 2 6 6\n".getBytes("UTF-8"))
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    val before = files(warehouse)
     try {
       val s = graft.dialect.QueryRunner.loadTables(spark, dir)("S")
+      assert(s.count() == 6)
+      assert(files(warehouse) == before, "loadTables wrote under the warehouse")
+      assert(noStatsDb())
+      assert(s.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(6)))
       val want = Stats.statTable(s"$dir/S.stat", s.columns.toSeq,
         Some(DetSource.parseDet(s"$dir/S.det"))).columns.toMap
       assert(colStat(s, "cid").nullCount.contains(BigInt(0)))
-      assert(colStat(s, "cid").max.contains(199))
+      assert(colStat(s, "cid").min.contains(0) && colStat(s, "cid").max.contains(199))
+      assert(colStat(s, "gender").min.contains(0) && colStat(s, "gender").max.contains(1))
       s.columns.foreach { c =>
         val got = colStat(s, c)
         assert((got.distinctCount, got.nullCount, got.min, got.max) ==
           ((want(c).distinctCount, want(c).nullCount, want(c).min, want(c).max)), c)
       }
-    } finally {
-      resetCbo()
-      spark.sql(s"DROP DATABASE IF EXISTS `${graft.dialect.QueryRunner.statDb(dir)}` CASCADE")
-    }
+    } finally resetCbo()
   }
 
   test("reference QueryMain invocation shape writes the reference format") {

@@ -16,27 +16,35 @@ class TblSourceSpec extends AnyFunSuite with SparkTestBase {
   private def res(name: String): String =
     getClass.getResource(s"/tbl/$name").getPath
 
+  private def rowsOf(name: String): Seq[Seq[Any]] = {
+    val in = new java.io.FileInputStream(res(name))
+    try TblSource.readRows(in) finally in.close()
+  }
+
   test("reads the ConvertTxtToTbl tuple-stream layout") {
-    val rows = TblSource.readRows(res("sample.tbl"))
+    val rows = rowsOf("sample.tbl")
     assert(rows.length == 7)
     assert(rows.head == Seq(0, 0, "first0", "last0", "addr0"))
     assert(rows(6) == Seq(6, 0, "first6", "last6", "addr0"))
   }
 
   test("reads the TupleWriter batch-stream layout (incl. partial last batch)") {
-    val rows = TblSource.readRows(res("batched.tbl"))
+    val rows = rowsOf("batched.tbl")
     assert(rows.length == 7)
     assert(rows(1) == Seq(1, 1.5f, "s1"))
     assert(rows(6) == Seq(6, 9.0f, "s6"))
   }
 
-  test("readTbl applies the .det catalog and yields a typed DataFrame") {
-    val df = TblSource.readTbl(spark, res("sample.det"), res("sample.tbl"))
+  test("the connector applies the .det catalog to a .tbl and yields a typed DataFrame") {
+    // <name>.det + <name>.tbl side by side in the resource directory
+    def load(name: String) = spark.read.format("graft.sources.DetDataSource")
+      .load(res(s"$name.det").stripSuffix(".det"))
+    val df = load("sample")
     assert(df.schema.fieldNames.toSeq ==
       Seq("cid", "gender", "firstname", "lastname", "address"))
     assert(df.count() == 7)
     assert(df.filter(df("gender") === 1).count() == 3)
-    val batched = TblSource.readTbl(spark, res("batched.det"), res("batched.tbl"))
+    val batched = load("batched")
     assert(batched.schema.fields(1).dataType.typeName == "float")
     assert(batched.agg(org.apache.spark.sql.functions.sum("score")).first().getDouble(0) == 31.5)
   }
@@ -44,7 +52,7 @@ class TblSourceSpec extends AnyFunSuite with SparkTestBase {
   test("empty Batch pages contribute zero rows, not phantom rows") {
     // edge.tbl (written by the reference's Batch class): a full page, an
     // EMPTY page, then a 1-row page — 4 rows total
-    val rows = TblSource.readRows(res("edge.tbl"))
+    val rows = rowsOf("edge.tbl")
     assert(rows.length == 4)
     assert(rows(1) == Seq(1, -1.25f, "v1"))
     assert(rows(3) == Seq(99, 7.5f, "tail"))
