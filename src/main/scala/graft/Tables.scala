@@ -1,21 +1,30 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver's testdata layout
   * (`<sfDir>/<table>.parquet`, see TESTDATA.md).
   *
   * The reference engine loads a serialized `Schema` from a `<table>.md`
-  * catalog file at plan time (reference: src/qp/optimizer/RandomInitialPlan.java:79-92);
-  * parquet is self-describing so the "catalog" is just the file footer.
+  * catalog file once per plan (reference: src/qp/optimizer/RandomInitialPlan.java:79-92).
+  * Parquet is self-describing, so the catalog is the file footer, and it
+  * is read once: [[parquetSchema]] infers a table's schema on first use
+  * and every later [[load]] hands it to the reader, so a table reference
+  * costs a file listing, not a schema-inference job.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A fresh relation over `<sfDir>/<name>.parquet`, read with the cached
+    * schema. Each call builds a new relation (new attribute ids), so two
+    * loads of one table self-join like two tables. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
       // The driver has shipped events.ts under two physical schemas across
@@ -24,8 +33,10 @@ object Tables {
       // timestamp[us]. Branch on the *loaded* dtype instead of hard-coding
       // either generation, so a testdata regeneration can't break loads.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw.schema("ts").dataType match {
+      val path = s"$sfDir/events.parquet"
+      val schema = parquetSchema(spark, path)
+      val raw = spark.read.schema(schema).parquet(path)
+      schema("ts").dataType match {
         case LongType =>
           // int64 nanos → truncate to µs, same as DuckDB's CAST(ts AS TIMESTAMP).
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -37,7 +48,53 @@ object Tables {
           raw
       }
     case _ =>
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      val path = s"$sfDir/$name.parquet"
+      spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** Inferred schemas by qualified path, each with the [[Stamp]] it was
+    * inferred under. Only the schema is shared, never a DataFrame: a
+    * shared relation would give two references to one table the same
+    * attribute ids, making a self-join's `a("k") === b("k")` trivially
+    * true. One entry per path, replaced when its stamp changes. */
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** What a parquet schema inference depends on: the leaf files
+    * `(path, length, modificationTime)`, so a rewritten file is inferred
+    * again, and the session confs Spark 4.1's inference reads
+    * (`ParquetFileFormat.mergeSchemasInParallel` builds its
+    * `ParquetToSparkSchemaConverter` from binaryAsString,
+    * int96AsTimestamp, inferTimestampNTZ, legacy nanosAsLong and
+    * respectUnknownTypeAnnotation, with case sensitivity fixed at its
+    * default; mergeSchema and respectSummaryFiles pick which footers it
+    * reads). */
+  private final case class Stamp(files: Seq[(String, Long, Long)], confs: Seq[Boolean])
+
+  /** The schema `spark.read.parquet(path)` infers, inferred with a Spark
+    * job once per path and [[Stamp]] in this JVM (the cache outlives
+    * `spark.stop()`); later calls cost one `FileSystem` listing. A
+    * missing, empty or unreadable path is not cached: it fails with
+    * Spark's own error on every call, as an uncached read does. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) spark.read.parquet(path).schema
+    else {
+      val key = fs.makeQualified(root).toString
+      val c = spark.sessionState.conf
+      val files = Iterator.unfold(fs.listFiles(root, true))(it =>
+        if (it.hasNext) Some((it.next(), it)) else None)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      val stamp = Stamp(files, Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+        c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong,
+        c.parquetReaderRespectUnknownTypeAnnotation, c.isParquetSchemaMergingEnabled,
+        c.isParquetSchemaRespectSummaries))
+      Option(schemas.get(key)).collect { case (`stamp`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, s))
+        s
+      }
+    }
   }
 
   /** Exact row count from parquet footers — metadata-only, no data scan.

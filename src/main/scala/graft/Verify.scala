@@ -24,7 +24,7 @@ object Verify {
     // record a silent red (ADVICE r10). All shipped gate SFs
     // (0.001/0.01/0.1 -> <= ~600k rows) sit far under the bound.
     if (only.isEmpty || only("q294_spearman")) {
-      val n = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      val n = Tables.rowCountFromFooters(spark, sfDir, "lineitem")
       require(n <= 1300000L,
         s"q294_spearman's oracle covers only the int64-exact branch " +
           s"(lineitem rows <= 1.3e6); $sfDir has $n rows — run the gate " +

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Conversation-assembly operators — turning an interaction log into
   * multi-turn SFT training data: chat-quality gating, context-window
@@ -24,8 +25,6 @@ import graft.{QueryDef, Tables}
   * corpus-sized. No driver state, no all-pairs.
   */
 object Conversation {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** The conversation-scale inactivity gap: 8 hours in microseconds. */
   val GapUs: Long = 28800L * 1000000L
 

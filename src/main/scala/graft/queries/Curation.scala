@@ -2,11 +2,11 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** End-to-end corpus curation — the pass an LLM training-data pipeline
   * runs before tokenization, composed from the engine's own operators as
@@ -24,8 +24,6 @@ import graft.{QueryDef, Tables}
   * expression riding the scan, and the split is pure arithmetic on the id.
   */
 object Curation {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** The curation gates over a `text` column, individually named so the
     * funnel (q102) can attribute attrition per gate IN PIPELINE ORDER
     * while the combined [[gatesOk]] stays their conjunction. THE single

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Deduplication operators for an LLM training-data pipeline: exact,
   * MinHash+LSH near-dup, and SimHash near-dup.
@@ -26,8 +27,6 @@ import graft.{QueryDef, Tables}
   *     propagation, each round a constant number of shuffles.
   */
 object Dedup {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   private val NumHashes = 32
   private val NumBands = 8 // 4 rows/band: s-curve threshold ~ (1/8)^(1/4) = 0.59
 

@@ -2,12 +2,13 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Event-stream analytics over the `events` table (batch form).
   *
@@ -20,8 +21,6 @@ import graft.{QueryDef, Tables}
   * (`unix_micros` / DuckDB `epoch_us`) so both engines agree bit-for-bit.
   */
 object Events {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Gap filling + LOCF over an (event_type, ts, value) stream — see q87
     * below for the distributed shape. Exposed as a library function so
     * degenerate inputs are spec-testable.

@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Tables.{load => t}
 
 /** Physical-layout operators: the lake-management side of a 100 TB
   * engine. Nothing here touches query semantics — these are the
@@ -25,8 +26,6 @@ import graft.{QueryDef, Tables}
   * rollup-table windows, never corpus windows.
   */
 object Layout {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Length-bucketed batching plan (dynamic-padding layout): equi-depth
     * token-length buckets (exact quantile boundaries from the length
     * DISTRIBUTION — one row per distinct length, the q96 rule, so the

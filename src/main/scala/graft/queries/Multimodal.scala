@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Report._
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Multimodal-column plumbing: media payloads as opaque `BINARY` columns
   * with typed metadata, plus a batched "decode" stage.
@@ -16,8 +16,6 @@ import graft.{QueryDef, Tables}
   * output — is real. The `documents.text` bytes stand in for media blobs.
   */
 object Multimodal {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Video near-duplicate pairs — the fourth modality's dedup primitive
     * (text: q45/q65 set joins; images: q337 dHash blocks; audio: q340
     * fingerprint anchors). A video is identified by its FRAME SET: the

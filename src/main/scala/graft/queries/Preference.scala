@@ -1,11 +1,12 @@
 package graft.queries
 
 import graft.Report._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Preference-data operators — the RLHF/DPO side of a training-data
   * pipeline, which the reference engine (batch OLAP only, SURVEY §2.7)
@@ -39,8 +40,6 @@ import graft.{QueryDef, Tables}
   * all-pairs and nothing funnels through the driver.
   */
 object Preference {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Pairwise duels from an annotator event stream: per `user_id`, each
     * consecutive event pair (exact-microsecond order, `event_id`
     * tie-break) with different `event_type`s and different `value`s is

@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Data-quality auditing over the star schema — the validation layer a
   * production ingest runs BEFORE any query in the other families trusts
@@ -24,8 +25,6 @@ import graft.{QueryDef, Tables}
   * per-rule report (rows = number of rules, not number of violations).
   */
 object Quality {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** One FK edge audit: rows of `child` whose non-null `ck` has no match
     * in `parent.pk`. LEFT JOIN against the distinct parent keys (dup-safe
     * even if the "primary" key is dirty — this is an audit, it must not

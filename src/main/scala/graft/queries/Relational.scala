@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{QueryDef, Tables}
+import graft.Tables.{load => t}
 
 /** Core relational operator inventory (SURVEY.md §2), expressed Spark-first.
   *
@@ -29,8 +30,6 @@ import graft.{QueryDef, Tables}
   * summation-order ulp noise cannot flip the hash.
   */
 object Relational {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Day-spine calendar dimension spanning the fact's order dates —
     * see q231 (q232 joins it). Generated in-plan: 1-row bounds
     * aggregate + sequence explode, rows = span days at any fact size. */

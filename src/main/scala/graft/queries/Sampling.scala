@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.Tables.{load => t}
 
 /** Deterministic sampling / splitting operators for a training-data
   * pipeline: salt-free hash splits and per-group quota sampling.
@@ -20,8 +21,6 @@ import graft.{QueryDef, Tables}
   * engine-specific and would forfeit the oracle.
   */
 object Sampling {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   private val M = 2147483647L // 2^31 - 1 (prime)
 
   /** Deterministic per-row hash in [0, M): TWO composed Lehmer steps on

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -25,8 +26,6 @@ import graft.{QueryDef, Tables}
   * distributed shape for them is.
   */
 object Similarity {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
 
   /** Deterministic engine-portable hash in [0, M): Lehmer step on the id
     * (products stay < 2^47, exact in 64-bit on both engines). */

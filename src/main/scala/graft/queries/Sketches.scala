@@ -2,12 +2,13 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Sketch-based approximate aggregation — the operators that replace exact
   * shuffles at 100 TB, where exact COUNT(DISTINCT) over billions of keys is
@@ -25,8 +26,6 @@ import graft.{QueryDef, Tables}
   * runs the sketch alone; SketchesSpec additionally bounds the error.
   */
 object Sketches {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   /** Exclusive chunk prefix + group total for a VALUE-DOMAIN-BOUNDED
     * per-(grp, chunk) totals table `(grp, chunk, tot)` (r15, guide
     * §2.4): one flat window pass per group computes `off` (exclusive

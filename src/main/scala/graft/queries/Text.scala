@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
+import graft.Tables.{load => t}
 
 /** Text-analysis operators for an LLM training-data pipeline, over the
   * `documents` table: token counting, quality scoring, language-ID
@@ -18,8 +19,6 @@ import graft.{QueryDef, Tables}
   * input splits at 100 TB.
   */
 object Text {
-  private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
   private val toks: Column = split(col("text"), " ")
 
   /** Shared DuckDB CTE scaffold replaying the greedy longest-match

@@ -45,7 +45,7 @@ object Streams {
     // testdata generation (timestamp[us], which loads as NTZ). The
     // fallback only matters until the first file lands; a nanos-era
     // directory always has its files present before replay.
-    val tsType = scala.util.Try(spark.read.parquet(dir).schema("ts").dataType)
+    val tsType = scala.util.Try(graft.Tables.parquetSchema(spark, dir)("ts").dataType)
       .getOrElse(TimestampNTZType)
     val raw = spark.readStream.schema(eventsRawSchema(tsType)).parquet(dir)
     tsType match {

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One session factory, one metrics collector, one hashed-shingle
-  * definition — as code, not comments (the MaterializeLawSpec
+/** One session factory, one metrics collector, one parquet reader, one
+  * hashed-shingle definition — as code, not comments (the MaterializeLawSpec
   * source-scan pattern). No SparkTestBase: this
   * suite's forked JVM has no session until [[Session.local]] builds one,
   * so the settings checked are the factory's own. */
@@ -39,6 +39,14 @@ class SessionLawSpec extends AnyFunSuite {
     val found = Seq("addSparkListener(", "listenerManager.register(")
       .flatMap(offenders(_, "Profile.scala", codeOnly = false))
     assert(found.isEmpty, s"collect metrics with graft.Profile: ${found.mkString(", ")}")
+  }
+
+  test("parquet reads only in Tables.scala") {
+    // Every parquet read goes through Tables, whose schema cache keeps a
+    // table reference from running a schema-inference job per call.
+    val found = Seq("read.parquet(", "read.schema(")
+      .flatMap(offenders(_, "Tables.scala", codeOnly = true))
+    assert(found.isEmpty, s"read parquet through graft.Tables: ${found.mkString(", ")}")
   }
 
   test("the hashed 3-shingle expression is spelled once, in Dedup.shingleHashes") {

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-drift canary (VERDICT r7 item 2): the driver regenerates
@@ -47,6 +51,66 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
     val (lo, hi) = (ts.getLong(0), ts.getLong(1))
     assert(lo > 946684800L && hi < 4102444800L, // 2000-01-01 .. 2100-01-01
       s"events.ts epoch range [$lo, $hi] implausible — unit mis-scale?")
+  }
+
+  private lazy val profile = Profile.attach(spark)
+
+  /** Spark jobs run by `body`, counted by [[Profile]]. */
+  private def jobsOf(body: => Unit): Long = {
+    profile.drain(); profile.reset()
+    body
+    assert(profile.drain(), "listener bus did not drain")
+    profile.jobs
+  }
+
+  for (name <- Seq("orders", "events")) {
+    test(s"a second load of '$name' runs no Spark job") {
+      Tables.load(spark, sfDir, name)
+      val jobs = jobsOf(Tables.load(spark, sfDir, name).schema)
+      assert(jobs == 0, s"$name: $jobs jobs for a load whose schema is already known")
+    }
+  }
+
+  test("a parquet file rewritten in place with a new schema is inferred again") {
+    val dir = Files.createTempDirectory("graft_rewrite")
+    def partFile(df: DataFrame, sub: String): java.nio.file.Path = {
+      df.coalesce(1).write.parquet(s"$dir/$sub")
+      val parts = Files.list(dir.resolve(sub))
+      try parts.filter(_.toString.endsWith(".parquet")).findFirst().get finally parts.close()
+    }
+    val first = partFile(spark.range(3).toDF("a"), "first")
+    val second = partFile(spark.range(3).selectExpr("cast(id AS string) AS b", "id AS c"), "second")
+    val table = dir.resolve("t.parquet")
+    Files.copy(first, table)
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+    Files.copy(second, table, StandardCopyOption.REPLACE_EXISTING)
+    val reloaded = Tables.load(spark, dir.toString, "t")
+    assert(reloaded.columns.toSeq == Seq("b", "c"))
+    assert(reloaded.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1", "2"))
+  }
+
+  test("two loads of one table self-join on distinct attribute ids") {
+    val a = Tables.load(spark, sfDir, "customer")
+    val b = Tables.load(spark, sfDir, "customer")
+    def ids(df: DataFrame) = df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).intersect(ids(b)).isEmpty, "two loads share attribute ids")
+    val joined = a.join(b, a("c_custkey") === b("c_custkey"))
+    val keys = a.select("c_custkey").distinct().count()
+    assert(joined.count() == keys)
+    assert(joined.groupBy(a("c_custkey")).count().filter(col("count") =!= 1).isEmpty,
+      "a key matched more than one row")
+  }
+
+  test("every table loads with the schema the uncached reader infers") {
+    // events as the uncached loader built it: ts normalized to the session
+    // TIMESTAMP in place, every other column as read.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for (name <- Tables.all) {
+      val read = spark.read.parquet(s"$sfDir/$name.parquet").schema
+      val want = if (name != "events") read else StructType(read.map(f =>
+        if (f.name == "ts") f.copy(dataType = TimestampType) else f))
+      assert(Tables.load(spark, sfDir, name).schema == want, s"$name: schema drift")
+    }
   }
 
   test("registerAll isolates a broken loader: unrelated tables still resolve") {
