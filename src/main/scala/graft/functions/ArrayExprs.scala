@@ -210,8 +210,8 @@ object ArrayOps {
     * raw-sum compare is then dominated by the width pattern (a function
     * of n mod 72 alone) times the mean byte value — hash entropy
     * collapses and unrelated payloads collide, measured as quadratic
-    * accidental-pair growth in the scale probe. Mean gradients are
-    * content-driven. Exactness bound: sum * width < 2^57 for payloads
+    * accidental-pair growth (phash_neardup_x*, SCALEPROBE_r14.txt).
+    * Mean gradients are content-driven. Exactness bound: sum * width < 2^57 for payloads
     * up to 2^28 bytes (256 MB) — far above any single media blob.
     * Locality: a byte edit touches ONE cell, so it flips at most 2
     * gradient bits — what makes Hamming distance a near-dup measure. */

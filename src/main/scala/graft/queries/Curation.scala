@@ -75,7 +75,7 @@ object Curation {
   }
 
   /** Multi-signal ensemble quality ranking — see q116 below. Exposed
-    * for library use and the scale probe. */
+    * for library use. */
   def ensembleScore(docs: org.apache.spark.sql.DataFrame,
       topK: Int = 200): org.apache.spark.sql.DataFrame =
     ensembleScores(docs).drop("n_tokens")

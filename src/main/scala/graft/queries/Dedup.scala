@@ -246,7 +246,7 @@ object Dedup {
        |          (a,c) -> (a*137 + c) % 4294967291) % 2147483648""".stripMargin
 
   /** Cross-source shingle-set Jaccard overlap matrix — see q97 below.
-    * Exposed for library use and the scale probe. */
+    * Exposed for library use. */
   def sourceOverlap(documents: DataFrame): DataFrame = {
     // the source-set table feeds two consumers (counts + pair set): the
     // aggregation subtree is identical on both branches, so ReuseExchange
@@ -271,7 +271,7 @@ object Dedup {
   }
 
   /** First-seen shingle attribution per source in fixed curation order —
-    * see q100 below. Exposed for library use and the scale probe. */
+    * see q100 below. Exposed for library use. */
   def sourceNovelty(documents: DataFrame): DataFrame = {
     val sets = shingleSourceSets(documents)
     val counts = sourceShingleCounts(sets, "n_shingles")
@@ -316,7 +316,8 @@ object Dedup {
     nearDupPairsOf(t(s, d, "documents"))
 
   /** Same pipeline over an arbitrary (doc_id, text) DataFrame — the
-    * library entry point (also used by tools.ScaleProbe). */
+    * library entry point (its replication scaling, minhash_lsh_x*, is in
+    * SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt). */
   def nearDupPairsOf(documents: DataFrame): DataFrame = {
     // NOTE the shingle expression is evaluated on three DAG branches
     // (signature input + both sides of the verify join). Measured at
@@ -597,7 +598,8 @@ object Dedup {
     // shuffle_hash everywhere a TOKEN-STREAM side could be broadcast:
     // Catalyst's size estimate under a Generate(explode) is the pre-explode
     // relation size, so left alone it broadcasts the whole exploded stream
-    // — measured superlinear in the scale probe and impossible at 100 TB.
+    // — superlinear, and impossible at 100 TB (the pinned plan's linear
+    // jaccard_join_x* rows are in SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt).
     // dfreq exits its groupBy already hash-partitioned by tok, so the
     // shuffle join reuses that exchange and only shuffles the probe side.
     probe.join(dfreq.hint("shuffle_hash"), "tok")
@@ -1326,9 +1328,10 @@ object Dedup {
 
   /** q313's body: train docs sharing >= 2 winnowing fingerprints with
     * the `evalPred` slice, with shared-fingerprint and eval-doc counts.
-    * Factored for the ScaleProbe (linear: fingerprints are per-doc
-    * window minima, the join keys on the 62-bit fp). */
-  def winnowDecontaminate(docs: DataFrame, evalPred: Column): DataFrame = {
+    * Linear in the corpus: fingerprints are per-doc window minima, the
+    * join keys on the 62-bit fp (winnow_decontaminate_x* in
+    * SCALEPROBE_r10.txt–SCALEPROBE_r13_x64.txt). */
+  private def winnowDecontaminate(docs: DataFrame, evalPred: Column): DataFrame = {
     val fps = winnowFingerprints(docs)
     val evalIds = docs.filter(evalPred).select("doc_id")
     val ev = fps.join(evalIds.hint("broadcast"), "doc_id")
@@ -3492,9 +3495,9 @@ object Dedup {
   }
 
   /** Cumulative dedup attrition funnel — q130's body, exposed for
-    * library use and the scale probe: raw -> exact canonicals -> near-dup
-    * keep set -> paragraph retention, one row per stage with doc/token
-    * totals and the surviving fraction of raw tokens. */
+    * library use: raw -> exact canonicals -> near-dup keep set ->
+    * paragraph retention, one row per stage with doc/token totals and
+    * the surviving fraction of raw tokens. */
   def dedupFunnel(documents: DataFrame): DataFrame = {
     val docs = documents
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n"))
@@ -3577,10 +3580,10 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** CCNet-style paragraph dedup — q117's body, exposed for library use
-    * and the scale probe. Keeps each paragraph's first (doc_id, para_id)
-    * occurrence corpus-wide; returns per-doc retention stats + an md5 of
-    * the reassembled retained text. */
+  /** CCNet-style paragraph dedup — q117's body, exposed for library
+    * use. Keeps each paragraph's first (doc_id, para_id) occurrence
+    * corpus-wide; returns per-doc retention stats + an md5 of the
+    * reassembled retained text. */
   def paragraphDedup(documents: DataFrame, w: Int = 8): DataFrame = {
     val paras = paraTable(documents, w)
     val first = paras

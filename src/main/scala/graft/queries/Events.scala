@@ -81,9 +81,10 @@ object Events {
       .withColumn("us", unix_micros(col("ts")))
       .select("user_id", "event_id", "us", "k")
 
-  /** Full SCD2 build from raw events — the q159 body, exposed for the
-    * scale probe (history cost must scale with events, not users²). */
-  def scd2History(ev: DataFrame): DataFrame = scd2Of(scd2Prep(ev))
+  /** Full SCD2 build from raw events — the q159 body (history cost
+    * scales with events, not users²: scd2_x* in SCALEPROBE_r8.txt–
+    * SCALEPROBE_r13_x64.txt). */
+  private def scd2History(ev: DataFrame): DataFrame = scd2Of(scd2Prep(ev))
 
   /** Type-2 history over a prepared event set — shared by the full build
     * (q159) and the incremental merge (q163), so the two can't drift. */
@@ -134,9 +135,10 @@ object Events {
        |SELECT user_id, version, k, valid_from_us, valid_to_us, is_current
        |FROM hist ORDER BY user_id, version""".stripMargin
 
-  /** Item co-occurrence with power-user capping — the q162 body, exposed
-    * for the scale probe (pair volume must stay bounded by cap²·users). */
-  def cooccurItems(ev: DataFrame): DataFrame = {
+  /** Item co-occurrence with power-user capping — the q162 body (pair
+    * volume stays bounded by cap²·users: cooccur_x* in SCALEPROBE_r8.txt–
+    * SCALEPROBE_r13_x64.txt). */
+  private def cooccurItems(ev: DataFrame): DataFrame = {
     val spark = ev.sparkSession
     import spark.implicits._
     val items = ev

@@ -103,10 +103,10 @@ object Layout {
         s"(($px >> $i) & 1) * $ex + (($sy >> $i) & 1) * $ey"
     }.mkString(" + ")
 
-  /** Z-order vs linear layout pruning report — the q153 body, exposed
-    * for the scale probe (one broadcast, one map pass, 64-row rollups —
-    * must scale linearly with the fact table). */
-  def zorderReport(lineitem: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** Z-order vs linear layout pruning report — the q153 body (one
+    * broadcast, one map pass, 64-row rollups — linear in the fact table:
+    * zorder_layout in SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt). */
+  private def zorderReport(lineitem: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val li = lineitem.select("l_partkey", "l_suppkey")
     val mx = li.agg(max("l_partkey").as("maxpk"), max("l_suppkey").as("maxsk"))
     val rows = li.crossJoin(broadcast(mx))

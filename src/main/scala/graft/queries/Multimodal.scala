@@ -788,8 +788,8 @@ object Multimodal {
     * variants survive a fenced hot template. */
   private[queries] val BlockDfCap = 64
 
-  /** q337's body, exposed for library use and the scale probe: perceptual
-    * near-duplicate pairs over the img-format payloads, dHash-keyed,
+  /** q337's body, exposed for library use: perceptual near-duplicate
+    * pairs over the img-format payloads, dHash-keyed,
     * candidate-blocked by the 4x16-bit pigeonhole index, popcount-
     * verified at `maxHamming` (<= 3 keeps the pigeonhole guarantee:
     * 3 flipped bits cannot touch all 4 blocks). `plantPeriod` controls

@@ -144,7 +144,7 @@ object Sampling {
   }
 
   /** DSIR-style hashed-feature importance scoring — see q98 below.
-    * Exposed for library use and the scale probe. */
+    * Exposed for library use. */
   def importanceWeights(documents: org.apache.spark.sql.DataFrame,
       targetLang: String = "en", topK: Int = 300): org.apache.spark.sql.DataFrame =
     importanceScores(documents, targetLang)
@@ -284,8 +284,8 @@ object Sampling {
        |      h // (($M // greatest(CAST(32 AS BIGINT), cnt // 64)) + 1) AS grp
        |    FROM pd CROSS JOIN ps))""".stripMargin
 
-  /** Whole-document next-fit packing, exposed for library use and the
-    * scale probe: q331's body ([[packGroups]] + [[nextFitAssign]]). */
+  /** Whole-document next-fit packing, exposed for library use: q331's
+    * body ([[packGroups]] + [[nextFitAssign]]). */
   def nextFitPack(docs: org.apache.spark.sql.DataFrame, cap: Long = 128L)
       : org.apache.spark.sql.DataFrame =
     nextFitAssign(packGroups(docs), cap)

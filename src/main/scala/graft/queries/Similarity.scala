@@ -200,11 +200,11 @@ object Similarity {
   private def cosine(qa: Column, na: Column, qb: Column, nb: Column): Column =
     dot(qa, qb).cast("double") / sqrt(na.cast("double")) / sqrt(nb.cast("double"))
 
-  /** Hard-negative mining (q333's body), exposed for library use and the
-    * scale probe: per bounded anchor, the top-k most-similar
-    * different-label vectors tagged against the anchor's hardest
-    * positive. Negatives rank through the bounded TopKAgg aggregator
-    * (q50's shape); the positive side is one map-combined max. */
+  /** Hard-negative mining (q333's body), exposed for library use: per
+    * bounded anchor, the top-k most-similar different-label vectors
+    * tagged against the anchor's hardest positive. Negatives rank
+    * through the bounded TopKAgg aggregator (q50's shape); the positive
+    * side is one map-combined max. */
   def hardNegatives(emb: DataFrame, k: Int = 5): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
@@ -242,13 +242,13 @@ object Similarity {
   }
 
   /** Margin-criterion bitext mining (q334's body), exposed for library
-    * use and the scale probe: cross-parity candidate pairs from shared
-    * probed IVF cells, exact-integer ratio margins against both sides'
-    * top-`kAvg` neighborhoods, mutual-best + margin > 1.05. */
-  def bitextMargin(emb: DataFrame, kAvg: Int = 4,
-      centroids: Int = 64): DataFrame = {
+    * use: cross-parity candidate pairs from 2 probed cells of 64 IVF
+    * centroids, exact-integer ratio margins against both sides' top-4
+    * neighborhoods, mutual-best + margin > 1.05. */
+  def bitextMargin(emb: DataFrame): DataFrame = {
+    val kAvg = 4
     val e = quantize(emb).materialize
-    val asg = assignProbed(centsOf(e, centroids), e, 2).materialize
+    val asg = assignProbed(centsOf(e, 64), e, 2).materialize
     // Cell-LOCAL scoring: attach each side's vectors to its probed
     // assignments (vectors cross the wire once per PROBE, ~2x corpus
     // volume), score inside the cell join, then dedup the narrow
@@ -497,14 +497,15 @@ object Similarity {
   case class KnnGraphIndex(cents: DataFrame, vecs: DataFrame,
       assigned: DataFrame, edges: DataFrame, degree: Int, probes: Int)
 
-  /** Build the full graph index over a (vec_id, embedding) corpus. The
-    * index CARRIES its build parameters — maintenance (knnGraphExtend)
-    * reuses them, so a batch can never be appended under a different
-    * degree/probe contract than the corpus was built with. */
-  def knnGraphIndex(emb: DataFrame, degree: Int = 12, centroids: Int = 64,
-      probes: Int = 2): KnnGraphIndex = {
+  /** Build the full graph index over a (vec_id, embedding) corpus with
+    * [[knnGraph]]'s defaults: degree 12, 2 probed cells of 64 centroids.
+    * The index CARRIES its build parameters — maintenance
+    * (knnGraphExtend) reuses them, so a batch can never be appended under
+    * a different degree/probe contract than the corpus was built with. */
+  def knnGraphIndex(emb: DataFrame): KnnGraphIndex = {
+    val (degree, probes) = (12, 2)
     val e = quantize(emb).materialize
-    val cents = centsOf(e, centroids)
+    val cents = centsOf(e, 64)
     val asg = assignProbed(cents, e, probes).materialize
     KnnGraphIndex(cents, e, asg, edgesOf(asg, asg, e, degree), degree, probes)
   }
@@ -638,12 +639,12 @@ object Similarity {
     * expansion is a beam-to-edge equi-join on node id (edge side
     * bucketed by node in production), the scoring joins are id-keyed,
     * and the per-query top-ef is a window over bounded groups. Nothing
-    * scales with corpus size except the (persisted) edge build. */
-  def graphSearch(emb: DataFrame, queryPred: Column, k: Int = 10,
-      degree: Int = 12, centroids: Int = 64, probes: Int = 2,
-      hops: Int = 3, ef: Int = 24): DataFrame =
-    graphSearchIndexed(knnGraphIndex(emb, degree, centroids, probes),
-      queryPred, k, hops, ef)
+    * scales with corpus size except the (persisted) edge build.
+    *
+    * The index is [[knnGraphIndex]]'s; k, hops and ef are
+    * [[graphSearchIndexed]]'s defaults (10, 3, 24). */
+  def graphSearch(emb: DataFrame, queryPred: Column): DataFrame =
+    graphSearchIndexed(knnGraphIndex(emb), queryPred)
 
   /** [[graphSearch]] served from a PREBUILT (possibly parquet-reloaded)
     * [[KnnGraphIndex]] — the production shape of the graph family: the
@@ -902,10 +903,11 @@ object Similarity {
     * route), top-k ids (q_id, n_id)); guarantees spec-pinned in
     * AdaptiveAnn tests: fill = k whenever >= k eligible rows exist, and
     * per-query recall >= the fixed-baseNprobe arm (probe sets only ever
-    * grow; candidate growth is hit-monotone against a fixed truth). */
+    * grow; candidate growth is hit-monotone against a fixed truth).
+    * The index has 64 centroids and a baseNprobe of 16. */
   def ivfQueryAdaptive(emb: DataFrame, e: DataFrame, allowedPred: Column,
-      k: Int = 10, baseNprobe: Int = 16,
-      centroids: Int = 64): (DataFrame, DataFrame) = {
+      k: Int = 10): (DataFrame, DataFrame) = {
+    val (baseNprobe, centroids) = (16, 64)
     val cents = centsOf(e, centroids)
     val allowedIds = emb.filter(allowedPred).select(col("vec_id").as("n_id"))
     val eligible = assignTo(cents, e)
@@ -957,21 +959,21 @@ object Similarity {
     (np, itop)
   }
 
-  /** Embedding-side (SEMANTIC) decontamination — q323's body, exposed
-    * for the scale probe. Flags every train vector within cosine >=
-    * theta of ANY `evalPred` vector, two arms in one report: the EXACT
-    * arm (eval side bounded by contract -> broadcast against one corpus
-    * pass, q48's shape) carries the per-doc hit count and worst cosine;
-    * the CLUSTER arm (q73's SemDeDup cell-local contract via the shared
-    * IVF assignment — the candidate path when even the eval side is too
+  /** Embedding-side (SEMANTIC) decontamination — q323's body. Flags
+    * every train vector within cosine >= theta of ANY `evalPred` vector,
+    * two arms in one report: the EXACT arm (eval side bounded by
+    * contract -> broadcast against one corpus pass, q48's shape) carries
+    * the per-doc hit count and worst cosine; the CLUSTER arm (q73's
+    * SemDeDup cell-local contract via the shared 64-centroid IVF
+    * assignment — the candidate path when even the eval side is too
     * wide to broadcast) rides along as a per-doc `cluster_hit` flag, so
     * its cross-cell misses are IN the output rather than silently
     * absorbed. Returns (vec_id, n_eval_hits, max_cos, cluster_hit) for
     * the exact-flagged train docs. */
-  def semanticDecon(emb: DataFrame, evalPred: Column, theta: Double,
-      centroids: Int = 64): DataFrame = {
+  private def semanticDecon(emb: DataFrame, evalPred: Column,
+      theta: Double): DataFrame = {
     val e = quantize(emb).materialize
-    val cents = centsOf(e, centroids)
+    val cents = centsOf(e, 64)
     val asg = assignTo(cents, e).materialize // both arms + both sides
     val evalIds = emb.filter(evalPred).select(col("vec_id").as("n_id"))
       .withColumn("is_eval", lit(true))
@@ -1009,8 +1011,8 @@ object Similarity {
     * the symmetrized kNN graph — exposed so q283's modularity scoring
     * composes on the same labels. Returns (symmetrized edges, final
     * (node, label)). */
-  def labelProp(emb: DataFrame, centroids: Int = 64): (DataFrame, DataFrame) = {
-    val g = knnGraph(emb, centroids = centroids).select(col("node"), col("nbr"))
+  def labelProp(emb: DataFrame): (DataFrame, DataFrame) = {
+    val g = knnGraph(emb).select(col("node"), col("nbr"))
     val sym = g.union(g.select(col("nbr").as("node"), col("node").as("nbr")))
       .distinct()
       .materialize // read once per round
@@ -1065,7 +1067,7 @@ object Similarity {
   }
 
   /** Greedy k-center (farthest-point) coreset selection — see q113
-    * below. Exposed for library use and the scale probe. */
+    * below. Exposed for library use. */
   def kcenterPick(emb: DataFrame, k: Int): DataFrame = {
     val e = quantize(emb).materialize
     val seed = e.orderBy("vec_id").limit(1)
@@ -1397,11 +1399,11 @@ object Similarity {
        |  WHERE rn = 1)""".stripMargin
 
   /** Per-node triangle counts + clustering coefficients on the
-    * symmetrized [[knnGraph]] — the q158 body, exposed for the scale
-    * probe. Cost bound: ordered-wedge joins over a degree-bounded edge
-    * set, O(degree² · n) pairs at any corpus size. */
-  def triangleStats(emb: DataFrame, centroids: Int = 64): DataFrame = {
-    val g = knnGraph(emb, centroids = centroids)
+    * symmetrized [[knnGraph]] — the q158 body. Cost bound: ordered-wedge
+    * joins over a degree-bounded edge set, O(degree² · n) pairs at any
+    * corpus size. */
+  private def triangleStats(emb: DataFrame): DataFrame = {
+    val g = knnGraph(emb)
     val e = g.select(least(col("node"), col("nbr")).as("a"),
       greatest(col("node"), col("nbr")).as("b")).distinct()
     val deg = e.select(col("a").as("node"))
@@ -1423,17 +1425,17 @@ object Similarity {
           .otherwise(lit(0.0)).as("clustering"))
   }
 
-  /** Personalized PageRank over [[knnGraph]] — the q161 body, exposed
-    * for the scale probe. 3 fixed-point int64 power iterations; per
-    * iteration one frontier×edges equi-join (≤ degree flows per row)
-    * and one keyed sum. */
-  def pprTopK(emb: DataFrame, anchors: Int = pqAnchors, iters: Int = 3,
-      k: Int = 10, centroids: Int = 64): DataFrame = {
-    val g = knnGraph(emb, centroids = centroids)
+  /** Personalized PageRank over [[knnGraph]] — the q161 body: top-10
+    * nodes per anchor (vec_id < [[pqAnchors]]). 3 fixed-point int64
+    * power iterations; per iteration one frontier×edges equi-join
+    * (≤ degree flows per row) and one keyed sum. */
+  private def pprTopK(emb: DataFrame): DataFrame = {
+    val (iters, k) = (3, 10)
+    val g = knnGraph(emb)
       .select(col("node"), col("nbr")).materialize
     val outdeg = g.groupBy("node").agg(count(lit(1)).as("deg"))
     val ge = g.join(outdeg, "node")
-    val anchorIds = quantize(emb).filter(col("vec_id") < anchors)
+    val anchorIds = quantize(emb).filter(col("vec_id") < pqAnchors)
       .select(col("vec_id").as("q_id"))
     val teleport = anchorIds.select(col("q_id"), col("q_id").as("node"),
       lit(150000000L).as("val"))
@@ -1481,11 +1483,13 @@ object Similarity {
     * cosine): a metric mismatch would let a far outlier infiltrate its
     * neighbors' edge lists (high cosine, huge distance) and pollute
     * their reachability sums until the outlier no longer stands out —
-    * the planted-outlier law in QualityTsSpec pins this down. */
-  def lofOverGraph(emb: DataFrame, degree: Int = 12, centroids: Int = 64,
-      probes: Int = 2): DataFrame = {
+    * the planted-outlier law in QualityTsSpec pins this down. The
+    * neighborhood is [[knnGraph]]'s shape: 12 neighbors from 2 probed
+    * cells of 64 centroids. */
+  def lofOverGraph(emb: DataFrame): DataFrame = {
+    val degree = 12
     val e = quantize(emb).materialize
-    val asg = assignProbed(centsOf(e, centroids), e, probes)
+    val asg = assignProbed(centsOf(e, 64), e, 2)
     val cp = asg.select(col("cell"), col("vec_id").as("node"))
       .join(asg.select(col("cell"), col("vec_id").as("nbr")), Seq("cell"))
       .filter(col("node") =!= col("nbr"))
@@ -1527,11 +1531,11 @@ object Similarity {
   }
 
   /** Thresholded-graph k-core peeling — see q208 (the registered query
-    * orders by node). Exposed for the scale probe: at corpus scale the
-    * centroid count follows the ~sqrt(n) cell contract. */
-  def kcoreProfile(emb: DataFrame, k: Int = 6, tau: Double = 0.2,
-      rounds: Int = 4, centroids: Int = 64): DataFrame = {
-    val g = knnGraph(emb, 12, centroids, 2).filter(col("cos_sim") >= tau)
+    * orders by node): [[knnGraph]] edges with cos_sim >= 0.2, peeled
+    * to degree >= 6 in 4 rounds. */
+  def kcoreProfile(emb: DataFrame): DataFrame = {
+    val (k, tau, rounds) = (6, 0.2, 4)
+    val g = knnGraph(emb).filter(col("cos_sim") >= tau)
     val und = g.select(col("node").as("u"), col("nbr").as("v"))
       .union(g.select(col("nbr").as("u"), col("node").as("v")))
       .distinct()
@@ -1569,9 +1573,8 @@ object Similarity {
 
   /** Resource-allocation link prediction over the symmetrized kNN graph
     * — see q203 (unbounded form; the registered query keeps top-50). */
-  def linkPredictRA(emb: DataFrame, degree: Int = 12, centroids: Int = 64,
-      probes: Int = 2): DataFrame = {
-    val g = knnGraph(emb, degree, centroids, probes)
+  def linkPredictRA(emb: DataFrame): DataFrame = {
+    val g = knnGraph(emb)
     val und = g.select(col("node").as("u"), col("nbr").as("v"))
       .union(g.select(col("nbr").as("u"), col("node").as("v")))
       .distinct()
@@ -1625,7 +1628,8 @@ object Similarity {
     // with the exact integer cosine. The testdata corpus is pure noise
     // (max pair cosine ~0.65), so this returns empty here and the oracle
     // validates exactly that; recall is proven on planted near-dup
-    // fixtures in PipelineSpec, and the candidate volume in ScaleProbe.
+    // fixtures in PipelineSpec, and the candidate volume in ScaleOpsSpec
+    // and SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt (embed_lsh_x*).
     QueryDef("q55_embed_lsh", (s, d) =>
       lshNearPairs(t(s, d, "embeddings"), 0.9)
         .orderBy("vec_a", "vec_b"),
@@ -2969,12 +2973,13 @@ object Similarity {
     // coarse layer (the DiskANN medoid-entry rule — the degenerate top
     // layer of an HNSW), then 3 unrolled expand-and-rerank hops with
     // beam width ef=24 (0.91 recall@10 at sf0.001 — the measured
-    // degree/ef trade-off lives in GraphParamProbe). A fixed hop count instead of a convergence loop
-    // keeps the operator a finite deterministic dataflow — Spark's loop
-    // and the oracle's CTE chain unroll the SAME rounds, so the full
-    // search hash-matches. Per-hop cost is |queries| * ef edge lookups +
-    // id-keyed scoring joins — nothing scales with the corpus at query
-    // time; recall is attested by q139.
+    // degree/probes/ef sweep is in SCALEPROBE_final.txt). A fixed hop
+    // count instead of a convergence loop keeps the operator a finite
+    // deterministic dataflow — Spark's loop and the oracle's CTE chain
+    // unroll the SAME rounds, so the full search hash-matches. Per-hop
+    // cost is |queries| * ef edge lookups + id-keyed scoring joins —
+    // nothing scales with the corpus at query time; recall is attested
+    // by q139.
     QueryDef("q138_graph_search", (s, d) =>
       graphSearch(t(s, d, "embeddings"), queryFilter),
       Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},

@@ -121,9 +121,10 @@ object Sketches {
     s"""CASE WHEN len($ks) < 64 THEN CAST(len($ks) AS DOUBLE)
        |    ELSE $kmvNum / CAST($ks[64] AS DOUBLE) END""".stripMargin
 
-  /** Pairwise KMV source-overlap estimates — the q157 body, exposed for
-    * the scale probe (per-source state O(k), pair table sources²). */
-  def kmvOverlap(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** Pairwise KMV source-overlap estimates — the q157 body (per-source
+    * state O(k), pair table sources²: kmv_overlap_x* in
+    * SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt). */
+  private def kmvOverlap(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // the sketch builder IS the streaming twin's aggregation — one
     // definition, so the batch/stream equality contract cannot drift
     val sk = graft.streaming.Streams.kmvSketches(docs)

@@ -53,7 +53,7 @@ object Text {
   }
 
   /** Bigram collocation extraction by lift over a (text) DataFrame — see
-    * q95 below. Exposed for library use and the scale probe. */
+    * q95 below. Exposed for library use. */
   def collocations(documents: DataFrame, minCount: Int, topK: Int): DataFrame = {
     val tk = documents.select(toks.as("tk"))
     val uni = tk.select(explode(col("tk")).as("tok"))
@@ -79,7 +79,7 @@ object Text {
   }
 
   /** TextRank keyword centrality — see q99 below. Exposed for library
-    * use and the scale probe. */
+    * use. */
   def textrank(documents: DataFrame, iters: Int = 8, topK: Int = 100): DataFrame = {
     val S = 10000000000L
     val tk = documents.select(toks.as("tk"))
@@ -126,7 +126,7 @@ object Text {
   }
 
   /** Corpus-LM familiarity scoring over a (doc_id, text) DataFrame — see
-    * q79 below. Exposed for library use and the scale probe. */
+    * q79 below. Exposed for library use. */
   def lmFamiliarity(documents: DataFrame): DataFrame = {
     // 62-bit hashed trigram keys (q78's narrow-key rule, applied to the
     // second-heaviest text query): the count shuffle and the join back
@@ -257,9 +257,9 @@ object Text {
         (col("max_c").cast("double") / col("n_tokens")).as("top_share"))
   }
 
-  /** Span-corruption mask plan (q335's body), exposed for library use
-    * and the scale probe: deterministic non-overlapping (start, len)
-    * mask spans at ~15% token coverage, map-only. */
+  /** Span-corruption mask plan (q335's body), exposed for library use:
+    * deterministic non-overlapping (start, len) mask spans at ~15% token
+    * coverage, map-only. */
   def spanCorruptionPlan(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n"))
@@ -1956,9 +1956,9 @@ object Text {
     (merges, wt)
   }
 
-  /** BPE merge-table training — q118's body, exposed for library use and
-    * the scale probe. Returns the `steps`-row merge table
-    * (step, lhs, rhs, merged, pair_count) in training order. */
+  /** BPE merge-table training — q118's body, exposed for library use.
+    * Returns the `steps`-row merge table (step, lhs, rhs, merged,
+    * pair_count) in training order. */
   def bpeTrain(documents: DataFrame, steps: Int): DataFrame =
     bpeStates(documents, steps)._1.get
       .select(col("step"), col("l").as("lhs"), col("r").as("rhs"),

@@ -82,7 +82,7 @@ object QueryIndex {
          |`SparkEntry.registry` + a source scan. ${rows.size} registered
          |queries. "oracle" = exact DuckDB-oracle hash check in the driver
          |gate; "headline" = counted in Bench's `headline_total`. Specs =
-         |test files that name the query (laws, scale probes, allowlists).
+         |test files that name the query (laws, replication-scaling specs, allowlists).
          |
          |""".stripMargin
     // rows are appended OUTSIDE stripMargin: they start with '|'

@@ -3,14 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One session factory, one metrics collector, one parquet reader, one
-  * hashed-shingle definition — as code, not comments (the MaterializeLawSpec
-  * source-scan pattern). No SparkTestBase: this
+  * hashed-shingle definition, a fixed set of mains — as code, not
+  * comments (the MaterializeLawSpec source-scan pattern). No
+  * SparkTestBase: this
   * suite's forked JVM has no session until [[Session.local]] builds one,
   * so the settings checked are the factory's own. */
 class SessionLawSpec extends AnyFunSuite {
 
   private def offenders(pattern: String, allowedFile: String,
-      codeOnly: Boolean): Seq[String] = {
+      codeOnly: Boolean, root: String = "src/main/scala"): Seq[String] = {
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
@@ -18,7 +19,7 @@ class SessionLawSpec extends AnyFunSuite {
       val t = ln.trim
       t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
     }
-    scalaFiles(new java.io.File("src/main/scala"))
+    scalaFiles(new java.io.File(root))
       .filterNot(_.getName == allowedFile)
       .flatMap { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -59,6 +60,26 @@ class SessionLawSpec extends AnyFunSuite {
     assert(found.size == 1 &&
       found.head.startsWith("src/main/scala/graft/queries/Dedup.scala:"),
       s"derive hashed shingles from Dedup.shingleHashSet: ${found.mkString(", ")}")
+  }
+
+  test("mains only in the tool and driver entry points, none in tests") {
+    // a one-off dev main (a probe) lands as a spec or a committed
+    // finding instead; spelled in two pieces so this file never matches
+    val main = "def " + "main("
+    val files = offenders(main, allowedFile = "", codeOnly = true)
+      .map(_.split(':').head).distinct.sorted
+    assert(files == Seq(
+      "src/main/scala/graft/Bench.scala",
+      "src/main/scala/graft/Verify.scala",
+      "src/main/scala/graft/dialect/QueryRunner.scala",
+      "src/main/scala/graft/tools/ApiCatalog.scala",
+      "src/main/scala/graft/tools/Explain.scala",
+      "src/main/scala/graft/tools/QueryIndex.scala",
+      "src/main/scala/graft/tools/ShuffleAudit.scala",
+      "src/main/scala/graft/tools/ShuffleVerdict.scala"), files.mkString(", "))
+    val inTests = offenders(main, allowedFile = "", codeOnly = true,
+      root = "src/test/scala")
+    assert(inTests.isEmpty, s"no mains under src/test: ${inTests.mkString(", ")}")
   }
 
   test("Session.local() sets the fixed settings") {

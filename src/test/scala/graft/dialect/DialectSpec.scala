@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Dialect-parity goldens: the reference's own 9 test queries
-  * (/root/reference/testcases/query{1-7,9,10}.sql) parsed by our Parser,
+/** Dialect-parity goldens: the reference's 9 test queries
+  * (query{1-7,9,10}.sql under the test resources' `testcases/`,
+  * reconstructed from FIXTURES.md §A) parsed by our Parser,
   * planned by our Translator, and checked against independently-written
   * DataFrame expressions over deterministic fixture tables shaped like the
   * reference's .det schemas (see FIXTURES.md §A).
@@ -34,7 +35,7 @@ class DialectSpec extends AnyFunSuite with SparkTestBase {
     "CARTDETAILS" -> cartdetails, "BILL" -> bill)
 
   def refQuery(n: Int): String = {
-    val src = scala.io.Source.fromFile(s"/root/reference/testcases/query$n.sql")
+    val src = scala.io.Source.fromResource(s"testcases/query$n.sql")
     try src.mkString finally src.close()
   }
   def run(n: Int): DataFrame = Translator.run(spark, refQuery(n), tables)

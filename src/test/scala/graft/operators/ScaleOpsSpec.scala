@@ -137,7 +137,8 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("hyperplane LSH prunes candidates far below all-pairs at 4x replication") {
-    // deterministic counterpart of the ScaleProbe timings: with replicas
+    // deterministic counterpart of the embed_lsh_x* timings in
+    // SCALEPROBE_r8.txt–SCALEPROBE_r13_x64.txt: with replicas
     // made dissimilar (per-replica random sign flip per dimension), the
     // banding must emit a small fraction of the n^2/2 pair space
     import org.apache.spark.sql.DataFrame

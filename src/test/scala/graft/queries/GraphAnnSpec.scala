@@ -43,8 +43,9 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
       .agg(avg("recall")).head().getDouble(0)
     // brute-force exact recall is 1.0 by definition; the graph path at
     // (degree=12, probes=2, hops=3, ef=24) measures 0.912 at sf0.001
-    // (GraphParamProbe sweep) — a drop below the floor means the build
-    // or search shape broke, not noise (everything is deterministic)
+    // (the degree/probes/ef sweep in SCALEPROBE_final.txt) — a drop
+    // below the floor means the build or search shape broke, not noise
+    // (everything is deterministic)
     assert(rec >= 0.7, s"mean graph recall $rec below floor")
   }
 

@@ -21,9 +21,8 @@ import graft.dialect.Translator
 class DetEndToEndSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private val refDir = "/root/reference/testcases"
-  /** The reference's `.det` catalogs, copied from FIXTURES.md §A; the
-    * query texts are read from `refDir`. */
+  /** The reference's `.det` catalogs and query texts, written from
+    * FIXTURES.md §A into the test resources. */
   private def det(t: String): String = getClass.getResource(s"/det/$t.det").getPath
 
   /** generate -> .txt -> DSv2 read, per reference table. */
@@ -48,7 +47,7 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase {
     Seq("CUSTOMER", "CART", "CARTDETAILS", "BILL").map(t => t -> dsv2(t)).toMap
 
   def refQuery(n: Int): String = {
-    val src = scala.io.Source.fromFile(s"$refDir/query$n.sql")
+    val src = scala.io.Source.fromResource(s"testcases/query$n.sql")
     try src.mkString finally src.close()
   }
   def run(n: Int): DataFrame = Translator.run(spark, refQuery(n), tables)

@@ -242,12 +242,12 @@ class StatsSpec extends AnyFunSuite with SparkTestBase {
   test("reference QueryMain invocation shape writes the reference format") {
     // tables live next to the query file, exactly like a reference data dir
     val dir = tmp("refcli")
-    val det = "/root/reference/testcases/CUSTOMER.det"
+    val det = refDet("CUSTOMER")
     val gen = DetSource.generate(spark, det, 50)
     val lines = gen.collect().map(_.toSeq.map(String.valueOf).mkString("", "\t", "\t"))
     Files.write(Paths.get(s"$dir/CUSTOMER.txt"), lines.mkString("\n").getBytes("UTF-8"))
     Files.copy(Paths.get(det), Paths.get(s"$dir/CUSTOMER.det"))
-    Files.copy(Paths.get("/root/reference/testcases/query2.sql"),
+    Files.copy(Paths.get(getClass.getResource("/testcases/query2.sql").getPath),
       Paths.get(s"$dir/query2.sql"))
 
     val result = s"$dir/out.txt"
