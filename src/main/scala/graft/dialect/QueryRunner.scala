@@ -47,11 +47,11 @@ object QueryRunner {
     // a table file that exists but cannot be read fails the whole load,
     // naming the file: dropping it would surface later as a confusing
     // "table not found" (or, worse, a query over the remaining tables)
-    def load(parts: String*)(body: => org.apache.spark.sql.DataFrame) =
+    def load(files: String*)(body: => org.apache.spark.sql.DataFrame) =
       try Some(body) catch {
         case scala.util.control.NonFatal(e) =>
           throw new IllegalArgumentException(
-            s"cannot load table from ${parts.map(p => s"$dir/$p").mkString(" + ")}: $e", e)
+            s"cannot load table from ${files.mkString(" + ")}: $e", e)
       }
     names.flatMap { name =>
       val stat = s"$name.stat"
@@ -60,15 +60,13 @@ object QueryRunner {
           "a .stat is read for reference-format tables only; use ANALYZE TABLE for parquet")
         // Tables.load knows quirks of the standard tables (e.g. events'
         // nanosecond timestamps)
-        load(s"$name.parquet")(graft.Tables.load(spark, dir, name)).map(name -> _)
+        load(s"$dir/$name.parquet")(graft.Tables.load(spark, dir, name)).map(name -> _)
       } else {
-        val schema = if (has(s"$name.det") || !has(s"$name.md")) s"$name.det" else s"$name.md"
-        val rows = if (has(s"$name.tbl")) s"$name.tbl" else s"$name.txt"
-        if (!has(rows)) None
-        else load(schema, rows) {
+        val layout = graft.sources.DetDataSource.layout(s"$dir/$name")
+        layout.rows.flatMap(rows => load(layout.schema, rows) {
           if (has(stat)) graft.sources.Stats.enableCbo(spark)
           spark.read.format("graft.sources.DetDataSource").load(s"$dir/$name")
-        }.map(name -> _)
+        }).map(name -> _)
       }
     }.toMap
   }

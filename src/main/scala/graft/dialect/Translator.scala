@@ -34,20 +34,14 @@ import org.apache.spark.sql.functions._
   *     (RandomInitialPlan.java:51-54); we implement it for real — both
   *     the aggregated form and the bare grouped-distinct form — with
   *     standard-SQL validation (a non-aggregated SELECT column must
-  *     appear in GROUPBY). `strictParity = true` restores the
-  *     reference's abort for byte-parity runs.
+  *     appear in GROUPBY).
   */
 object Translator {
 
-  def run(spark: SparkSession, sql: String, tables: Map[String, DataFrame],
-      strictParity: Boolean = false): DataFrame =
-    build(spark, Parser.parse(sql), tables, strictParity)
+  def run(spark: SparkSession, sql: String, tables: Map[String, DataFrame]): DataFrame =
+    build(spark, Parser.parse(sql), tables)
 
-  def build(spark: SparkSession, q: Query, tables: Map[String, DataFrame],
-      strictParity: Boolean = false): DataFrame = {
-    if (strictParity && q.groupBy.nonEmpty)
-      sys.error("GROUPBY is not implemented " +
-        "(reference parity: RandomInitialPlan.java:51-54 aborts)")
+  def build(spark: SparkSession, q: Query, tables: Map[String, DataFrame]): DataFrame = {
     // Scans, each aliased by table name so `tbl.col` resolves qualified.
     def base(t: String): DataFrame =
       tables.getOrElse(t, sys.error(s"unknown table $t")).alias(t)

@@ -53,32 +53,18 @@ object Transforms {
   final case class Resized(doc_id: Long, width: Int, height: Int,
       target_w: Int, target_h: Int, scale: Double)
   final case class Frame(doc_id: Long, frame_idx: Int, frame_checksum: Long)
-  final case class Features(doc_id: Long, embedding: Array[Float])
 
-  /** STUB resize: aspect-preserving fit into a target box. */
-  def resize(m: MediaMeta, targetW: Int = 224, targetH: Int = 224): Resized = {
+  /** STUB resize: aspect-preserving fit into a 224 x 224 box. */
+  def resize(m: MediaMeta): Resized = {
+    val (targetW, targetH) = (224, 224)
     val s = math.min(targetW.toDouble / math.max(m.width, 1),
       targetH.toDouble / math.max(m.height, 1))
     Resized(m.doc_id, m.width, m.height,
       math.max(1, (m.width * s).toInt), math.max(1, (m.height * s).toInt), s)
   }
 
-  /** STUB frame sampling: every k-th frame, checksum derived per frame. */
-  def sampleFrames(m: MediaMeta, stride: Int = 4): Seq[Frame] =
-    (0 until m.n_frames by stride).map(i =>
+  /** STUB frame sampling: every 4th frame, checksum derived per frame. */
+  def sampleFrames(m: MediaMeta): Seq[Frame] =
+    (0 until m.n_frames by 4).map(i =>
       Frame(m.doc_id, i, m.checksum * 31 + i))
-
-  /** STUB feature extraction: deterministic pseudo-embedding from the
-    * checksum (a real stage would run the vision/audio model here). */
-  def extractFeatures(m: MediaMeta, dim: Int = 16): Features = {
-    val vs = new Array[Float](dim)
-    var h = m.checksum
-    var i = 0
-    while (i < dim) {
-      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-      vs(i) = (h % 1000000L) / 1000000.0f
-      i += 1
-    }
-    Features(m.doc_id, vs)
-  }
 }

@@ -28,21 +28,22 @@ import org.apache.spark.sql.graft.ColumnBridge
 object BloomJoin {
 
   /** One-row DataFrame holding the Bloom filter (binary) of `key` over
-    * `keys` — keys are hashed with xxhash64, matching [[prefilter]]. */
-  def bloomFilterOf(keys: DataFrame, key: Column,
-      expectedItems: Long, numBits: Long): DataFrame =
+    * `keys`, sized for 1e6 expected items in 8e6 bits — keys are hashed
+    * with xxhash64, matching [[prefilter]]. */
+  def bloomFilterOf(keys: DataFrame, key: Column): DataFrame = {
+    val (expectedItems, numBits) = (1000000L, 8000000L)
     keys.select(ColumnBridge.column(
       new BloomFilterAggregate(
         new XxHash64(Seq(ColumnBridge.expression(key))),
         Literal(expectedItems), Literal(numBits)).toAggregateExpression()).as("bf"))
+  }
 
   /** `fact` rows whose `factKey` might be in `dimKeys`' `dimKey` set
     * (exact-superset semantics: every joining row survives; a ~FP-rate
     * fraction of non-joining rows ride along and die in the real join). */
   def prefilter(fact: DataFrame, factKey: Column,
-      dimKeys: DataFrame, dimKey: Column,
-      expectedItems: Long = 1000000L, numBits: Long = 8000000L): DataFrame = {
-    val bloom = bloomFilterOf(dimKeys, dimKey, expectedItems, numBits)
+      dimKeys: DataFrame, dimKey: Column): DataFrame = {
+    val bloom = bloomFilterOf(dimKeys, dimKey)
     // the filter rides as a scalar subquery — evaluated once, inlined as
     // a literal into the fact-side predicate (InjectRuntimeFilter's own
     // transport); BloomFilterMightContain requires exactly this shape

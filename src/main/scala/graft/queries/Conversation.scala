@@ -34,8 +34,7 @@ object Conversation {
     * turn's raw payload (the scrub op's text; Catalyst prunes it from
     * the consumers that ignore it). Null timestamps are excluded (no
     * place on the time axis). One user-partitioned window pair. */
-  private[graft] def turns(events: DataFrame,
-      gapUs: Long = GapUs): DataFrame = {
+  private[graft] def turns(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
     events.filter(col("ts").isNotNull)
       .withColumn("us", unix_micros(col("ts")))
@@ -43,7 +42,7 @@ object Conversation {
       .withColumn("prev_us", lag("us", 1).over(w))
       .withColumn("is_new",
         when(col("prev_us").isNull ||
-          col("us") - col("prev_us") > gapUs, 1).otherwise(0))
+          col("us") - col("prev_us") > GapUs, 1).otherwise(0))
       .withColumn("conv_id", sum("is_new")
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("user_id", "conv_id", "event_id", "event_type", "us", "len",
@@ -70,10 +69,10 @@ object Conversation {
     * grouped exact-distinct on the content cell (q123's shape) joined
     * back pinned shuffled-hash (the cell table is corpus-derived — the
     * q135 rule); the verdict rollup is conversation-bounded. */
-  def convScrub(events: DataFrame, k: Long = 5L,
-      gapUs: Long = GapUs): DataFrame = {
+  def convScrub(events: DataFrame): DataFrame = {
+    val k = 5L
     val pii = "[a-z0-9._]+@[a-z0-9.]+\\.[a-z][a-z]+"
-    val tt = turns(events, gapUs)
+    val tt = turns(events)
       .withColumn("t", when(col("event_id") % 20 === 0,
         concat(coalesce(col("props"), lit("")),
           lit(" contact me at user"), col("event_id"),
@@ -107,10 +106,10 @@ object Conversation {
     * filter on keep must see an explicit verdict for every thread, not
     * silently drop the unparseable ones. Per-conversation lag + one
     * grouped aggregation, both conversation-bounded. */
-  def chatGate(events: DataFrame, gapUs: Long = GapUs): DataFrame = {
+  def chatGate(events: DataFrame): DataFrame = {
     val wconv = Window.partitionBy("user_id", "conv_id")
       .orderBy("us", "event_id")
-    turns(events, gapUs)
+    turns(events)
       .withColumn("pt", lag("event_type", 1).over(wconv))
       .groupBy("user_id", "conv_id")
       .agg(count(lit(1)).as("n_turns"),
@@ -148,14 +147,14 @@ object Conversation {
     * earlier-turns-only count would need a rows-based frame over a
     * dense turn index (a second lookup join); the token accounting —
     * the column the packer consumes — is identical either way. */
-  def sftExamples(events: DataFrame, budget: Long = 256L,
-      gapUs: Long = GapUs): DataFrame = {
+  def sftExamples(events: DataFrame): DataFrame = {
+    val budget = 256L
     val prior = Window.partitionBy("user_id", "conv_id")
       .orderBy("us", "event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     val fr = Window.partitionBy("user_id", "conv_id")
       .orderBy("prior_tokens").rangeBetween(-budget, 0)
-    turns(events, gapUs)
+    turns(events)
       .withColumn("prior_tokens",
         coalesce(sum(col("len").cast("long")).over(prior), lit(0L)))
       .withColumn("n_ctx_turns", count(lit(1)).over(fr) - 1)
@@ -173,8 +172,8 @@ object Conversation {
     * would dominate an SFT mix. Path assembly is a conversation-bounded
     * collect + sort; the template rollup is a narrow groupBy on the
     * path string. */
-  def convTemplates(events: DataFrame, gapUs: Long = GapUs): DataFrame =
-    turns(events, gapUs)
+  def convTemplates(events: DataFrame): DataFrame =
+    turns(events)
       .groupBy("user_id", "conv_id")
       .agg(array_join(
         transform(
@@ -214,11 +213,10 @@ object Conversation {
     * lengths — spans stay contiguous and gap-free) and the trainable
     * flag for `trainableRole` turns. One conversation-bounded
     * prefix-sum window over the q350 turn rule. */
-  def lossMask(events: DataFrame, trainableRole: String = "click",
-      gapUs: Long = GapUs): DataFrame = {
+  def lossMask(events: DataFrame, trainableRole: String = "click"): DataFrame = {
     val w = Window.partitionBy("user_id", "conv_id").orderBy("us", "event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    turns(events, gapUs)
+    turns(events)
       .withColumn("start_tok",
         coalesce(sum("len").over(w).cast("long"), lit(0L)))
       .withColumn("end_tok",
@@ -239,11 +237,11 @@ object Conversation {
     * lag + prefix-sum window pair and two rollups, all bounded by the
     * human-length episode (the q331 bound class) on the shared q350
     * turn rule. */
-  def loopDetect(events: DataFrame, minLoop: Long = 3L,
-      gapUs: Long = GapUs): DataFrame = {
+  def loopDetect(events: DataFrame): DataFrame = {
+    val minLoop = 3L
     val wconv = Window.partitionBy("user_id", "conv_id")
       .orderBy("us", "event_id")
-    val marked = turns(events, gapUs)
+    val marked = turns(events)
       .withColumn("pt", lag("event_type", 1).over(wconv))
       .withColumn("st", when(col("pt").isNull ||
         col("pt") =!= col("event_type"), 1L).otherwise(0L))

@@ -74,13 +74,13 @@ object Curation {
           .as("ensemble_score"))
   }
 
-  /** Multi-signal ensemble quality ranking — see q116 below. Exposed
-    * for library use. */
-  def ensembleScore(docs: org.apache.spark.sql.DataFrame,
-      topK: Int = 200): org.apache.spark.sql.DataFrame =
+  /** Multi-signal ensemble quality ranking (the top 200) — see q116
+    * below. Exposed for library use. */
+  def ensembleScore(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
     ensembleScores(docs).drop("n_tokens")
       .orderBy(col("ensemble_score").desc, col("doc_id"))
-      .limit(topK)
+      .limit(200)
 
   // Oracle-side mirror of [[gatesOk]], shared by every gate-consuming
   // oracle (q68/q82/q83) so the thresholds exist in exactly TWO places —

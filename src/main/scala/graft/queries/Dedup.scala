@@ -153,7 +153,7 @@ object Dedup {
        |  WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= $threshold)""".stripMargin
 
   /** Near-dup pair CTEs ending in `pairs(doc_a < doc_b, jaccard)` at
-    * `threshold`, via a shingle-token EQUIJOIN + group-count instead of
+    * jaccard >= 0.8, via a shingle-token EQUIJOIN + group-count instead of
     * the O(n^2) `list_intersect` self-join the oracles previously ran
     * (~13s -> ~0.2s at sf0.01 in DuckDB; at 10 queries sharing the shape
     * that cost starved the driver's gate — VERDICT r7). Bit-identical
@@ -162,7 +162,7 @@ object Dedup {
     * IEEE operation; pairs sharing zero shingles have jaccard 0 and
     * cannot pass any positive threshold, so the equijoin's candidate set
     * is complete. */
-  private[queries] def sqlPairCtes(threshold: Double = 0.8): String =
+  private[queries] def sqlPairCtes(): String =
     s"""$sqlShingleTokens,
        |shared AS MATERIALIZED (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
@@ -172,7 +172,7 @@ object Dedup {
        |  SELECT doc_a, doc_b, CAST(c AS DOUBLE) / (ca.n + cb.n - c) AS jaccard
        |  FROM shared JOIN cnt ca ON doc_a = ca.doc_id
        |              JOIN cnt cb ON doc_b = cb.doc_id
-       |  WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= $threshold)""".stripMargin
+       |  WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.8)""".stripMargin
 
   /** Full-rebuild connected-components oracle: recursive reachability
     * closure over the COMPLETE verified pair set, labels = component
@@ -475,7 +475,8 @@ object Dedup {
     * also occurs (verbatim, position-independent) in at least one OTHER
     * document. See q78 below for the distributed shape.
     */
-  def dupSpans(documents: DataFrame, W: Int = 5): DataFrame = {
+  def dupSpans(documents: DataFrame): DataFrame = {
+    val W = 5
     val docs = documents.select(col("doc_id"), split(col("text"), " ").as("tk"))
     val base = docs.select(col("doc_id"), size(col("tk")).as("n_tokens"))
     // the window KEY is a 62-bit hash of the window content, not the
@@ -732,9 +733,6 @@ object Dedup {
     *     comparison (q73's rule) — ~n^2/centroids comparisons spread over
     *     cell-keyed shuffle tasks; misses cross-cell pairs by the
     *     published contract. The only sane default at 100 TB.
-    *   - [[SemanticEdges.Lsh]]: hyperplane-LSH blocking + exact verify
-    *     (q55's shape) — near-linear, usable when the threshold is high
-    *     enough for the s-curve (>= ~0.8).
     *   - [[SemanticEdges.ExactTiled]]: the exact Omega(n^2) tiled join
     *     (q47's shape) — complete at any threshold, cost quadratic by
     *     nature; the OPT-IN for small corpora or oracle parity, never the
@@ -749,11 +747,6 @@ object Dedup {
       def pairs(emb: DataFrame): DataFrame =
         Similarity.clusterLocalNearPairs(emb, threshold, centroids)
     }
-    final case class Lsh(threshold: Double = 0.9, bands: Int = 128, bits: Int = 16)
-        extends SemanticEdges {
-      def pairs(emb: DataFrame): DataFrame =
-        Similarity.lshNearPairs(emb, threshold, bands, bits)
-    }
     final case class ExactTiled(threshold: Double = 0.45) extends SemanticEdges {
       def pairs(emb: DataFrame): DataFrame =
         Similarity.tiledNearPairs(emb, threshold)
@@ -765,10 +758,9 @@ object Dedup {
       * >= threshold (edges score exactly), so it is a SUBSET of
       * ExactTiled at the same threshold; recall is bounded by degree x
       * probes like any graph method (spec'd in GraphAnnSpec). */
-    final case class Graph(threshold: Double = 0.45, degree: Int = 12,
-        centroids: Int = 64, probes: Int = 2) extends SemanticEdges {
+    final case class Graph(threshold: Double = 0.45) extends SemanticEdges {
       def pairs(emb: DataFrame): DataFrame =
-        Similarity.knnGraph(emb, degree, centroids, probes)
+        Similarity.knnGraph(emb)
           .filter(col("cos_sim") >= threshold)
           .select(least(col("node"), col("nbr")).as("vec_a"),
             greatest(col("node"), col("nbr")).as("vec_b"), col("cos_sim"))
@@ -2332,7 +2324,7 @@ object Dedup {
     // exact text for the hash (62-bit collisions are the documented
     // ~0.003-at-10^10 tail) and keeps the rollup fully map-combinable.
     QueryDef("q126_boilerplate_report", (s, d) =>
-      paraTable(t(s, d, "documents"), 8, carry = Seq("source"))
+      paraTable(t(s, d, "documents"), carry = Seq("source"))
         .groupBy("h")
         .agg(count(lit(1)).as("n_occurrences"),
           count_distinct(col("doc_id")).as("n_docs"),
@@ -3470,13 +3462,14 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Tumbling w-token paragraph enumeration over a documents frame —
+  /** Tumbling 8-token paragraph enumeration over a documents frame —
     * (doc_id [, source], para_id, para_text, n_tokens, h) with the
     * portable 62-bit hash key. Map-only (q89's slice arithmetic — no
     * token-level shuffle); shared by q117 and the q126 boilerplate
     * report so the chunking rule exists once. */
-  private def paraTable(documents: DataFrame, w: Int,
+  private def paraTable(documents: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
+    val w = 8
     val tk = split(col("text"), " ")
     documents
       .select((Seq(col("doc_id"), tk.as("tk"), size(tk).as("n")) ++
@@ -3541,8 +3534,8 @@ object Dedup {
   /** The (source, para-hash, doc_id, para_id) occurrence stream the
     * boilerplate rule counts — q369's chunking (q117's paraTable with
     * the source carried), exposed for the q377 streaming face. */
-  def paraOccurrences(documents: DataFrame, w: Int = 8): DataFrame =
-    paraTable(documents, w, carry = Seq("source"))
+  def paraOccurrences(documents: DataFrame): DataFrame =
+    paraTable(documents, carry = Seq("source"))
       .select("source", "h", "doc_id", "para_id")
 
   /** Line-level boilerplate STRIP (q369's body) — the RefinedWeb/C4
@@ -3559,9 +3552,9 @@ object Dedup {
     * corpus-derived — the q135 rule; fanout is 1:1 per paragraph, so a
     * banner shared by millions of pages costs its occurrence count,
     * never df^2), and a per-doc rollup bounded by document length. */
-  def boilerplateStrip(documents: DataFrame, w: Int = 8,
-      k: Long = 3L): DataFrame = {
-    val paras = paraTable(documents, w, carry = Seq("source"))
+  def boilerplateStrip(documents: DataFrame): DataFrame = {
+    val k = 3L
+    val paras = paraTable(documents, carry = Seq("source"))
     val dfk = paras.groupBy("source", "h").agg(count(lit(1)).as("df"))
     paras.join(dfk.hint("shuffle_hash"), Seq("source", "h"))
       .withColumn("keep", col("df") < k)
@@ -3584,8 +3577,8 @@ object Dedup {
     * use. Keeps each paragraph's first (doc_id, para_id) occurrence
     * corpus-wide; returns per-doc retention stats + an md5 of the
     * reassembled retained text. */
-  def paragraphDedup(documents: DataFrame, w: Int = 8): DataFrame = {
-    val paras = paraTable(documents, w)
+  def paragraphDedup(documents: DataFrame): DataFrame = {
+    val paras = paraTable(documents)
     val first = paras
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("para_id"))).as("f"))

@@ -264,10 +264,10 @@ object Events {
 
   /** Watermark lateness report — the q189 body, exposed for fixture
     * specs. Replays the log in arrival (event_id) order against a
-    * `wUs`-microsecond watermark; the arrival-order running max is the
+    * 2-hour watermark; the arrival-order running max is the
     * two-phase prefix aggregation described at q189. */
-  def latenessReport(events: DataFrame,
-      wUs: Long = 2L * 3600L * 1000000L): DataFrame = {
+  def latenessReport(events: DataFrame): DataFrame = {
+    val wUs = 2L * 3600L * 1000000L
     val ev = events
       .select(col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -310,7 +310,8 @@ object Events {
   /** ACF over the per-type daily series — see q198. Library form so the
     * exactness law (a linear series correlates to 1 at every lag) is
     * spec-testable on synthetic streams. */
-  def acfDaily(events: DataFrame, maxLag: Int = 7): DataFrame = {
+  def acfDaily(events: DataFrame): DataFrame = {
+    val maxLag = 7
     val w = Window.partitionBy("event_type").orderBy("d_idx")
     val lagged = (1 to maxLag).foldLeft(dailyCounts(events)) {
       (df, l) => df.withColumn(s"y$l", lag(col("x"), l).over(w))

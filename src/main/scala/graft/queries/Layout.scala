@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Materialize._
 import graft.Report._
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,8 +33,9 @@ object Layout {
     * a fixed-shape batcher would pay inside each bucket (docs * max_len
     * - tokens). The table a training loader consults to trade bucket
     * count against padding. */
-  def lengthBuckets(docs: org.apache.spark.sql.DataFrame,
-      nBuckets: Int = 4): org.apache.spark.sql.DataFrame = {
+  def lengthBuckets(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val nBuckets = 4
     val dist = docs
       .select(size(split(col("text"), " ")).cast("long").as("n"))
       .groupBy("n").agg(count(lit(1)).as("c"))
@@ -54,15 +54,15 @@ object Layout {
   }
 
   /** Needle-insertion plan for long-context eval data: for every
-    * document long enough to host one, the exact token position a
+    * document long enough to host one (>= 32 tokens), the exact token position a
     * needle lands at for each retrieval depth in {10, 50, 90}% —
     * `depth * (n - 1) div 100`, pure integer arithmetic. Map-only (the
     * q335 span-plan class): no shuffle, no state, rides the scan. */
-  def needlePlan(docs: org.apache.spark.sql.DataFrame,
-      minTokens: Long = 32L): org.apache.spark.sql.DataFrame =
+  def needlePlan(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
     docs
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n"))
-      .filter(col("n") >= minTokens)
+      .filter(col("n") >= 32L)
       .withColumn("depth", explode(array(lit(10), lit(50), lit(90))))
       .withColumn("needle_pos", expr("depth * (n - 1) div 100"))
       .select("doc_id", "n", "depth", "needle_pos")
@@ -71,12 +71,12 @@ object Layout {
     * power-of-two length bucket (bucket = |bin(n)| - 1, an integer
     * bit-length — floor(log2) without float log), the integer repeat
     * factor that levels each bucket's token mass up toward the largest
-    * bucket, capped at `cap` epochs (the data-constrained repeat bound).
+    * bucket, capped at 8 epochs (the data-constrained repeat bound).
     * One distribution aggregation plus a single-row broadcast of the
     * max — the plan a length-extension run uses to oversample the long
     * tail. */
-  def lengthUpsample(docs: org.apache.spark.sql.DataFrame,
-      cap: Long = 8L): org.apache.spark.sql.DataFrame = {
+  def lengthUpsample(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val g = docs
       .select(size(split(col("text"), " ")).cast("long").as("n"))
       .withColumn("bucket", (length(bin(col("n"))) - 1).cast("long"))
@@ -84,7 +84,7 @@ object Layout {
       .agg(count(lit(1)).as("docs"), sum("n").as("tokens"))
     g.crossJoin(broadcast(g.agg(max("tokens").as("mt"))))
       .withColumn("repeat_factor",
-        least(lit(cap), expr("(mt + tokens - 1) div tokens")))
+        least(lit(8L), expr("(mt + tokens - 1) div tokens")))
       .withColumn("effective_tokens", col("tokens") * col("repeat_factor"))
       .select("bucket", "docs", "tokens", "repeat_factor", "effective_tokens")
   }

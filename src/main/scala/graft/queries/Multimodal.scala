@@ -610,19 +610,18 @@ object Multimodal {
   )
 
   /** The audio-alignment universe (q340): audio-format payloads plus,
-    * every `plantPeriod`-th audio doc, a deterministic SEGMENT-COPY
+    * every 15th audio doc, a deterministic SEGMENT-COPY
     * variant at doc_id + 2000000 — 11 filler bytes then the original
     * payload from byte 30 on, so the planted pair shares a long run at
-    * byte offset -18 (q106's versioning trick; 0 disables). Map-only. */
-  def audioCorpus(documents: org.apache.spark.sql.DataFrame,
-      plantPeriod: Long = 15L): org.apache.spark.sql.DataFrame = {
+    * byte offset -18 (q106's versioning trick). Map-only. */
+  def audioCorpus(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val base = documents
       .filter(octet_length(col("text")) % 3 === 1 &&
         octet_length(col("text")) >= 64)
       .select(col("doc_id"), col("text"))
-    if (plantPeriod <= 0L) base
-    else base.unionByName(
-      base.filter(col("doc_id") % plantPeriod === 0)
+    base.unionByName(
+      base.filter(col("doc_id") % 15L === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"),
           concat(lit("q" * 11),
             col("text").substr(lit(30), length(col("text")))).as("text")))
@@ -636,9 +635,9 @@ object Multimodal {
     * depends only on frame content, so a shared run anchors in BOTH
     * payloads at equal content positions; expected density 1/8. PURE
     * map-side (codegen'd windowHashes + an arithmetic filter). */
-  private[queries] def audioAnchors(documents: org.apache.spark.sql.DataFrame,
-      plantPeriod: Long = 15L): org.apache.spark.sql.DataFrame =
-    audioCorpus(documents, plantPeriod)
+  private[queries] def audioAnchors(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    audioCorpus(documents)
       .select(col("doc_id"), split(col("text"), "").as("tc"))
       .select(col("doc_id"), col("tc"), posexplode(graft.functions.ArrayExprs
         .windowHashes(col("tc"), 16)).as(Seq("p", "h")))
@@ -685,10 +684,9 @@ object Multimodal {
     * pair cost is <= C(dfCap, 2) and a billion-frame silence bucket
     * never forms. Group-bys ride the join's partitioning. */
   def audioAlign(documents: org.apache.spark.sql.DataFrame,
-      minAnchors: Long = 3L,
-      plantPeriod: Long = 15L,
       dfCap: Int = AnchorDfCap): org.apache.spark.sql.DataFrame = {
-    val anchors = audioAnchors(documents, plantPeriod)
+    val minAnchors = 3L
+    val anchors = audioAnchors(documents)
     val elig = anchors.groupBy("h").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2 && col("nd") <= dfCap).select("h")
     val byKey = anchors.join(elig, "h")
@@ -719,11 +717,11 @@ object Multimodal {
     * fenced/kept pair split. One anchor pass to the df table (map-side
     * partial agg); the sweep explodes the TINY df table over the cap
     * grid (the q280 one-pass-sweep trick). All exact int64. */
-  def audioAnchorLoad(documents: org.apache.spark.sql.DataFrame,
-      caps: Seq[Int] = LoadReportCaps): org.apache.spark.sql.DataFrame =
+  def audioAnchorLoad(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
     audioAnchors(documents)
       .groupBy("h").agg(count(lit(1)).as("nd"))
-      .select(col("nd"), explode(array(caps.map(lit): _*)).as("cap"))
+      .select(col("nd"), explode(array(LoadReportCaps.map(lit): _*)).as("cap"))
       .groupBy("cap")
       .agg(count(lit(1)).as("n_keys"),
         sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_pairing"),
@@ -735,18 +733,17 @@ object Multimodal {
       .withColumn("kept_pairs", col("pairs_total") - col("fenced_pairs"))
 
   /** The pHash family's hashing universe (q337/q339): img-format
-    * payloads plus, every `plantPeriod`-th doc, a deterministic
+    * payloads plus, every 10th doc, a deterministic
     * one-byte-edited variant at doc_id + 1000000 (both engines construct
-    * the identical input — q106's versioning trick; 0 disables).
+    * the identical input — q106's versioning trick).
     * Map-only. */
-  def phashCorpus(documents: org.apache.spark.sql.DataFrame,
-      plantPeriod: Long = 10L): org.apache.spark.sql.DataFrame = {
+  def phashCorpus(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val base = documents
       .filter(octet_length(col("text")) % 3 === 0)
       .select(col("doc_id"), col("text"))
-    if (plantPeriod <= 0L) base
-    else base.unionByName(
-      base.filter(col("doc_id") % plantPeriod === 0)
+    base.unionByName(
+      base.filter(col("doc_id") % 10L === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(substring(col("text"), 1, 10), lit("x"),
             col("text").substr(lit(12), length(col("text")))).as("text")))
@@ -763,9 +760,9 @@ object Multimodal {
       posexplode(blocks).as(Seq("blk", "bv")))
   }
 
-  private def phashSigs(documents: org.apache.spark.sql.DataFrame,
-      plantPeriod: Long): org.apache.spark.sql.DataFrame =
-    phashCorpus(documents, plantPeriod).select(col("doc_id"),
+  private def phashSigs(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    phashCorpus(documents).select(col("doc_id"),
       graft.functions.ArrayExprs.dhash64(col("text").cast("binary")).as("ph"))
 
   /** Block-bucket document-frequency cap of [[phashNearDups]] — the
@@ -791,9 +788,9 @@ object Multimodal {
   /** q337's body, exposed for library use: perceptual near-duplicate
     * pairs over the img-format payloads, dHash-keyed,
     * candidate-blocked by the 4x16-bit pigeonhole index, popcount-
-    * verified at `maxHamming` (<= 3 keeps the pigeonhole guarantee:
-    * 3 flipped bits cannot touch all 4 blocks). `plantPeriod` controls
-    * the deterministic planted-variant rate (0 disables planting).
+    * verified at hamming <= 3 (the pigeonhole guarantee's limit:
+    * 3 flipped bits cannot touch all 4 blocks), over [[phashCorpus]]'s
+    * universe with its planted variants.
     *
     * Candidate generation is the q229 df-capped posting join (see
     * [[BlockDfCap]]): per-bucket df first (map-side partial agg),
@@ -802,11 +799,8 @@ object Multimodal {
     * nested Generates — per-bucket pair cost <= C(cap, 2), and a
     * million-image blank-tile bucket never forms. */
   def phashNearDups(documents: org.apache.spark.sql.DataFrame,
-      maxHamming: Int = 3, plantPeriod: Long = 10L,
       blockDfCap: Int = BlockDfCap): org.apache.spark.sql.DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "pigeonhole block index guarantees completeness only for hamming <= 3")
-    val exploded = phashBlocks(phashSigs(documents, plantPeriod))
+    val exploded = phashBlocks(phashSigs(documents))
     val elig = exploded.groupBy("blk", "bv").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2 && col("nd") <= blockDfCap).select("blk", "bv")
     exploded.join(elig, Seq("blk", "bv"))
@@ -818,7 +812,7 @@ object Multimodal {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.ph").bitwiseXOR(col("b.ph"))).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
   }
 
   /** Block-bucket load report (q360) — the q266-style instrument for
@@ -828,12 +822,12 @@ object Multimodal {
     * distribution (one map-combined agg over the block stream — never
     * the pair join), then sweeps the cap grid over that tiny table.
     * All exact int64. */
-  def phashBlockLoad(documents: org.apache.spark.sql.DataFrame,
-      caps: Seq[Int] = LoadReportCaps): org.apache.spark.sql.DataFrame =
-    phashBlocks(phashSigs(documents, 10L))
+  def phashBlockLoad(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    phashBlocks(phashSigs(documents))
       .groupBy("blk", "bv").agg(count(lit(1)).as("nd"))
       .select(col("blk"), col("nd"),
-        explode(array(caps.map(lit): _*)).as("cap"))
+        explode(array(LoadReportCaps.map(lit): _*)).as("cap"))
       .groupBy("blk", "cap")
       .agg(count(lit(1)).as("n_buckets"),
         sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_pairing"),

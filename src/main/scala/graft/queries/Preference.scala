@@ -153,7 +153,7 @@ object Preference {
     * prep): per prompt (`props.k`), chosen = the strictly-best-scored
     * response, rejected = the strictly-worst (score = `value`,
     * `event_id` tie-break makes the argmax/argmin total), keeping
-    * prompts with >= minResponses responses and a strict score gap.
+    * prompts with >= 3 responses and a strict score gap.
     * Output: (k, n_responses, chosen_id, chosen_type, rejected_id,
     * rejected_type) — ids and counts only, no float columns.
     *
@@ -161,8 +161,8 @@ object Preference {
     * event_type) struct — map-side partial agg, so a prompt with a
     * billion responses never forms a window group or skews a sort;
     * this is why it is not the row_number() shape the oracle uses. */
-  def dpoPairs(events: DataFrame, minResponses: Long = 3L): DataFrame =
-    dpoPairLengths(events, minResponses)
+  def dpoPairs(events: DataFrame): DataFrame =
+    dpoPairLengths(events)
       .select("k", "n_responses", "chosen_id", "chosen_type",
         "rejected_id", "rejected_type")
 
@@ -177,7 +177,7 @@ object Preference {
     * comparison and q345 stays a pure projection of this (the
     * one-definition rule, spec-pinned). Same single partial-agg shape
     * as q345: no window, no join, no per-prompt sort. */
-  def dpoPairLengths(events: DataFrame, minResponses: Long = 3L): DataFrame =
+  def dpoPairLengths(events: DataFrame): DataFrame =
     events
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       .filter(col("k").isNotNull && col("value").isNotNull)
@@ -188,7 +188,7 @@ object Preference {
           col("len"))).as("b"),
         min(struct(col("value"), col("event_id"), col("event_type"),
           col("len"))).as("w"))
-      .filter(col("n_responses") >= minResponses &&
+      .filter(col("n_responses") >= 3L &&
         col("b.value") =!= col("w.value"))
       .select(col("k"), col("n_responses"),
         col("b.event_id").as("chosen_id"),
@@ -212,8 +212,8 @@ object Preference {
     * variance) emit NULL, not NaN. Exact int64 moments combined in
     * double space; one bounded arm-domain aggregation over the pair
     * set's 2-row-per-pair unpivot. */
-  def dpoLengthBias(events: DataFrame, minResponses: Long = 3L): DataFrame = {
-    val p = dpoPairLengths(events, minResponses)
+  def dpoLengthBias(events: DataFrame): DataFrame = {
+    val p = dpoPairLengths(events)
     val obs = p.select(col("chosen_type").as("arm"),
         col("chosen_len").as("x"), lit(true).as("ok"))
       .unionByName(p.select(col("rejected_type").as("arm"),
@@ -253,7 +253,8 @@ object Preference {
     * annotator-keyed duel window, then every aggregate lives on the
     * bounded (slice, pair, look) domain with map-side partials; the
     * stop lookup is a window over those bounded 6-row groups. */
-  def winrateSlices(events: DataFrame, looks: Int = 6): DataFrame = {
+  def winrateSlices(events: DataFrame): DataFrame = {
+    val looks = 6
     val dayUs = 86400000000L
     val d = duelsWide(events).filter(col("k").isNotNull)
       .select((col("k") % 8).as("slice"),
@@ -462,8 +463,9 @@ object Preference {
     * pre-reduces its partition to m rows before the shuffle, so a prompt
     * with a billion rollouts ships m rows per task, never a per-prompt
     * sort (the q48/q333 ranking shape). Prompts with fewer than m
-    * responses keep what they have. */
-  def bestOfN(events: DataFrame, m: Int = 4): DataFrame = {
+    * responses keep what they have. m is 4. */
+  def bestOfN(events: DataFrame): DataFrame = {
+    val m = 4
     val e = responses(events)
     import e.sparkSession.implicits._
     val topk = new graft.functions.TopKAgg(m).toColumn
@@ -773,7 +775,7 @@ object Preference {
     // the bounded TopKAgg partial aggregator (m rows per task cross the
     // shuffle — no per-prompt sort at any rollout count).
     QueryDef("q348_bon_manifest", (s, d) =>
-      bestOfN(t(s, d, "events"), 4).reportSorted("k", "rank"),
+      bestOfN(t(s, d, "events")).reportSorted("k", "rank"),
       Some("""WITH e AS (
              |  SELECT event_id, value,
              |    CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS INTEGER) AS k

@@ -95,8 +95,6 @@ object Relational {
   private def momentOut(c: Column): Column =
     (sum(c).cast(DecimalType(30, 4)) * k100 * k100)
       .cast("long").cast("double") / lit(10000.0)
-  private def sqlMomentOut(e: String): String =
-    s"CAST(CAST(CAST(sum($e) AS DECIMAL(30,4)) * 100 * 100 AS BIGINT) AS DOUBLE) / 10000.0"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1737,8 +1735,8 @@ object Relational {
     // The reference PARSES `GROUPBY attlist` but aborts at planning
     // (RandomInitialPlan.java:51-54); our dialect executes it
     // (dialect/Translator.scala — Spark groupBy under the translator's
-    // aggregate-attribute rules, with the reference's abort available
-    // behind the strictParity flag). This golden drives the WHOLE
+    // aggregate-attribute rules and standard-SQL validation). This
+    // golden drives the WHOLE
     // dialect path — parse, literal coercion, join recovery from the
     // comma-list, grouped aggregation — over the parquet tables, so
     // GROUPBY execution sits under the driver's DuckDB hash gate like

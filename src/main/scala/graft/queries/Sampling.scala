@@ -36,12 +36,12 @@ object Sampling {
   }
 
   /** Range-bucket count for two-phase prefix sums: at least 32, growing
-    * with the row count so per-bucket input stays near `target` rows no
+    * with the row count so per-bucket input stays near 100000 rows no
     * matter how large the corpus — a FIXED fan-out would re-create the
     * single-task skew at 100x scale. (h * nb stays far below 2^63 for any
-    * realistic corpus: h < 2^31 and nb = n/target.) */
-  private[queries] def prefixBuckets(n: Column, target: Long = 100000L): Column =
-    greatest(lit(32L), floor(n / lit(target)).cast("long"))
+    * realistic corpus: h < 2^31 and nb = n/100000.) */
+  private[queries] def prefixBuckets(n: Column): Column =
+    greatest(lit(32L), floor(n / lit(100000L)).cast("long"))
 
   /** Deterministic always-zero partition key for an INTENTIONALLY
     * single-task window over a provably bounded frame (the WindowLawSpec
@@ -125,15 +125,16 @@ object Sampling {
   private[queries] val sqlLehmer = sqlLehmerOf("doc_id")
 
   /** DSIR-style importance scores for EVERY document (no ranking cut) —
-    * the ensemble consumer's form (q116). */
-  def importanceScores(documents: org.apache.spark.sql.DataFrame,
-      targetLang: String = "en"): org.apache.spark.sql.DataFrame = {
+    * the ensemble consumer's form (q116). The target distribution is the
+    * "en" documents. */
+  def importanceScores(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val feats = documents
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
       .select(col("doc_id"), col("lang"),
         (graft.functions.ArrayExprs.polyFingerprint(array(col("tok"))) % 4096).as("f"))
     val weights = feats.groupBy("f")
-      .agg(sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("t_cnt"),
+      .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"),
         count(lit(1)).as("r_cnt"))
       .select(col("f"), expr("((t_cnt + 1) * 1000000) div (r_cnt + 1)").as("wf"))
     feats.join(broadcast(weights), "f")
@@ -144,12 +145,12 @@ object Sampling {
   }
 
   /** DSIR-style hashed-feature importance scoring — see q98 below.
-    * Exposed for library use. */
-  def importanceWeights(documents: org.apache.spark.sql.DataFrame,
-      targetLang: String = "en", topK: Int = 300): org.apache.spark.sql.DataFrame =
-    importanceScores(documents, targetLang)
+    * Exposed for library use: the top 300 by average weight. */
+  def importanceWeights(documents: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    importanceScores(documents)
       .orderBy(col("avg_weight").desc, col("doc_id"))
-      .limit(topK)
+      .limit(300)
 
   /** Shared DuckDB CTE chain for [[importanceScores]] — tok → hashed
     * feature → per-feature ratio weights → per-doc `sc` (doc_id, score,
@@ -285,10 +286,10 @@ object Sampling {
        |    FROM pd CROSS JOIN ps))""".stripMargin
 
   /** Whole-document next-fit packing, exposed for library use: q331's
-    * body ([[packGroups]] + [[nextFitAssign]]). */
-  def nextFitPack(docs: org.apache.spark.sql.DataFrame, cap: Long = 128L)
+    * body ([[packGroups]] + [[nextFitAssign]]) at cap 128. */
+  def nextFitPack(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    nextFitAssign(packGroups(docs), cap)
+    nextFitAssign(packGroups(docs), 128L)
 
   /** q331's complete oracle text at cap 128 — shared VERBATIM with the
     * streaming face (q336): a single-batch replay of the stream must
@@ -590,7 +591,7 @@ object Sampling {
     // oracle replays the identical recurrence as a recursive CTE whose
     // depth is the max group size, not the corpus.
     QueryDef("q331_pack_nextfit", (s, d) =>
-      nextFitPack(t(s, d, "documents"), 128L)
+      nextFitPack(t(s, d, "documents"))
         .orderBy("doc_id"),
       Some(sqlPackAssign128)),
 
@@ -611,7 +612,7 @@ object Sampling {
     QueryDef("q336_packing_ingest_face", (s, d) => {
       val n = Tables.rowCountFromFooters(s, d, "documents")
       graft.streaming.Streams.packIngest(
-          t(s, d, "documents"), math.max(32L, n / 64L), 128L)
+          t(s, d, "documents"), math.max(32L, n / 64L))
         .toDF()
         .select("doc_id", "len", "grp", "bin")
         .orderBy("doc_id")

@@ -166,11 +166,11 @@ object Similarity {
     * Tuning at scale: noise pairs collide in a band with ~2^-bits
     * probability, so expected false candidates are ~bands * 2^-bits * n^2 /
     * 2 — keep `bits` around log2(n) + 4 as the corpus grows (recall then
-    * sets `bands`; the defaults suit n ~ 1e4-1e5 at threshold 0.9). */
-  def lshNearPairs(emb: DataFrame, threshold: Double,
-      bands: Int = 128, bits: Int = 16): DataFrame = {
+    * sets `bands`; [[lshCandidatePairs]]'s 128 bands of 16 bits suit
+    * n ~ 1e4-1e5 at threshold 0.9). */
+  def lshNearPairs(emb: DataFrame, threshold: Double): DataFrame = {
     val e = quantize(emb)
-    val cand = lshCandidatePairs(emb, bands, bits)
+    val cand = lshCandidatePairs(emb)
     val a = e.select(col("vec_id").as("vec_a"), col("qv").as("qa"), col("n2").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("qv").as("qb"), col("n2").as("nb"))
     cand.join(a, "vec_a").join(b, "vec_b")
@@ -182,7 +182,8 @@ object Similarity {
   /** The candidate pairs the hyperplane-LSH blocking emits, BEFORE exact
     * verification — exposed so callers (and ScaleOpsSpec) can observe the
     * pruning ratio directly. */
-  def lshCandidatePairs(emb: DataFrame, bands: Int = 128, bits: Int = 16): DataFrame = {
+  def lshCandidatePairs(emb: DataFrame): DataFrame = {
+    val (bands, bits) = (128, 16)
     val sig = quantize(emb).select(col("vec_id"),
       graft.functions.ArrayExprs.hyperplaneBands(col("qv"), bands, bits).as("bands"))
     // materialize the signature explosion once: the self-join would
@@ -205,7 +206,8 @@ object Similarity {
     * tagged against the anchor's hardest positive. Negatives rank
     * through the bounded TopKAgg aggregator (q50's shape); the positive
     * side is one map-combined max. */
-  def hardNegatives(emb: DataFrame, k: Int = 5): DataFrame = {
+  def hardNegatives(emb: DataFrame): DataFrame = {
+    val k = 5
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb
@@ -321,9 +323,10 @@ object Similarity {
     * corpus, and a (cell, dim) sum whose map-side combine caps the
     * exchange at tasks x k x 64 rows — no corpus x corpus anything, no
     * driver-side data. Empty cells drop (standard Lloyd), so the result
-    * can have fewer than k clusters. k and iters are fixed, bounded
+    * can have fewer than k clusters. k (8) and iters are fixed, bounded
     * knobs, exactly like the IVF centroid count. */
-  def kmeansRefine(emb: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
+  def kmeansRefine(emb: DataFrame, iters: Int = 2): DataFrame = {
+    val k = 8
     val e = quantize(emb).materialize
     var cents = e.orderBy(lehmer(col("vec_id")), col("vec_id")).limit(k)
       .select(col("vec_id").as("c_id"), col("qv").as("cv"), col("n2").as("cn"))
@@ -368,12 +371,12 @@ object Similarity {
     * deterministic and SQL-expressible, so the whole operator hash-matches
     * a DuckDB oracle; recall vs the exact ranking is spec'd separately.
     *
-    * Defaults suit the test corpus (500-2000 vectors -> ~8-30 per cell);
-    * at real scale pick centroids ~ 4096 (or ~sqrt(n)) and nprobe for the
-    * recall/cost point — the rule stays the same. */
-  def ivfTopK(emb: DataFrame, queryPred: Column, k: Int = 10,
-      centroids: Int = 64, nprobe: Int = 16): DataFrame =
-    ivfQuery(ivfIndex(emb, centroids), emb.filter(queryPred), k, nprobe)
+    * The fixed k 10, 64 centroids and nprobe 16 suit the test corpus
+    * (500-2000 vectors -> ~8-30 per cell); at real scale pick centroids
+    * ~ 4096 (or ~sqrt(n)) and nprobe for the recall/cost point — the
+    * rule stays the same. */
+  def ivfTopK(emb: DataFrame, queryPred: Column): DataFrame =
+    ivfQuery(ivfIndex(emb), emb.filter(queryPred))
 
   /** A built IVF index: `cents` (the O(centroids) coarse quantizer) and
     * `assigned` (one row per corpus vector with its cell id). In
@@ -435,8 +438,7 @@ object Similarity {
     * work on dead postings (a probe scans the cell's full stored run
     * in a real posting layout). Both sides are one map-combined rollup
     * of the assignment tables; the report is centroids-sized. */
-  def ivfCompactionReport(full: IvfIndex, live: IvfIndex,
-      minLiveFrac: Double = 0.5): DataFrame =
+  def ivfCompactionReport(full: IvfIndex, live: IvfIndex): DataFrame =
     full.assigned.groupBy("cell").agg(count(lit(1)).as("n_total"))
       .join(live.assigned.groupBy("cell").agg(count(lit(1)).as("nl")),
         Seq("cell"), "left")
@@ -445,7 +447,7 @@ object Similarity {
         (coalesce(col("nl"), lit(0L)).cast("double")
           / col("n_total").cast("double")).as("live_frac"),
         (coalesce(col("nl"), lit(0L)).cast("double")
-          < lit(minLiveFrac) * col("n_total").cast("double"))
+          < lit(0.5) * col("n_total").cast("double"))
           .as("needs_compaction"))
 
   /** Bounded-degree kNN graph — the base layer of a graph ANN index
@@ -468,16 +470,10 @@ object Similarity {
     * sqrt(n) the build is ~n^1.5 comparisons, the standard graph-ANN
     * build budget. In production the edge table persists (parquet,
     * bucketed by node) and amortizes over every query batch. */
-  def knnGraph(emb: DataFrame, degree: Int = 12, centroids: Int = 64,
-      probes: Int = 2): DataFrame =
-    knnGraphOf(quantize(emb).materialize, degree, centroids, probes)
-
-  /** [[knnGraph]] over an already-quantized corpus (vec_id, qv, n2) —
-    * shared so graphSearch builds index and search from ONE quantized
-    * scan. Input must be materialized (localCheckpoint/cache): the
-    * assignment and both pair sides re-read it. */
-  private def knnGraphOf(e: DataFrame, degree: Int, centroids: Int,
-      probes: Int): DataFrame = {
+  def knnGraph(emb: DataFrame): DataFrame = {
+    val (degree, centroids, probes) = (12, 64, 2)
+    // materialized: the assignment and both pair sides re-read it
+    val e = quantize(emb).materialize
     val asg = assignProbed(centsOf(e, centroids), e, probes)
     edgesOf(asg, asg, e, degree)
   }
@@ -498,7 +494,7 @@ object Similarity {
       assigned: DataFrame, edges: DataFrame, degree: Int, probes: Int)
 
   /** Build the full graph index over a (vec_id, embedding) corpus with
-    * [[knnGraph]]'s defaults: degree 12, 2 probed cells of 64 centroids.
+    * [[knnGraph]]'s parameters: degree 12, 2 probed cells of 64 centroids.
     * The index CARRIES its build parameters — maintenance
     * (knnGraphExtend) reuses them, so a batch can never be appended under
     * a different degree/probe contract than the corpus was built with. */
@@ -642,7 +638,7 @@ object Similarity {
     * scales with corpus size except the (persisted) edge build.
     *
     * The index is [[knnGraphIndex]]'s; k, hops and ef are
-    * [[graphSearchIndexed]]'s defaults (10, 3, 24). */
+    * [[graphSearchIndexed]]'s (10, 3, 24). */
   def graphSearch(emb: DataFrame, queryPred: Column): DataFrame =
     graphSearchIndexed(knnGraphIndex(emb), queryPred)
 
@@ -652,8 +648,8 @@ object Similarity {
     * a search pays zero build work. GraphAnnSpec's persistence law pins
     * that a parquet round-trip of all four index tables serves
     * byte-identical search and extend results. */
-  def graphSearchIndexed(index: KnnGraphIndex, queryPred: Column,
-      k: Int = 10, hops: Int = 3, ef: Int = 24): DataFrame = {
+  def graphSearchIndexed(index: KnnGraphIndex, queryPred: Column): DataFrame = {
+    val (k, hops, ef) = (10, 3, 24)
     val e = index.vecs
     val cents = index.cents
     val edges = index.edges
@@ -708,9 +704,8 @@ object Similarity {
     * size, so the final scoring join is query-bounded like the beam
     * itself; under-fill stays visible as < k returned rows. */
   def graphSearchFiltered(emb: DataFrame, queryPred: Column,
-      allowed: DataFrame, k: Int = 10, degree: Int = 12,
-      centroids: Int = 64, probes: Int = 2, hops: Int = 3,
-      ef: Int = 24): DataFrame = {
+      allowed: DataFrame): DataFrame = {
+    val (k, degree, centroids, probes, hops, ef) = (10, 12, 64, 2, 3, 24)
     val e = quantize(emb).materialize
     val cents = centsOf(e, centroids)
     val asg = assignProbed(cents, e, probes)
@@ -876,7 +871,7 @@ object Similarity {
     * side; under-fill remains visible to the caller as < k returned
     * rows per query (q317 reports it as n_ret). */
   def ivfQueryFiltered(index: IvfIndex, queries: DataFrame,
-      allowed: DataFrame, k: Int = 10, nprobe: Int = 16): DataFrame =
+      allowed: DataFrame): DataFrame =
     ivfQuery(
       // corpus-sized semi-join on BOTH sides at scale: pin the honest
       // shuffled-hash arm (the q135/q278 convention) so AQE's
@@ -884,7 +879,7 @@ object Similarity {
       index.copy(assigned = index.assigned.join(
         allowed.select(col("vec_id").as("n_id")).hint("shuffle_hash"),
         Seq("n_id"), "left_semi")),
-      queries, k, nprobe)
+      queries)
 
   /** ADAPTIVE filtered IVF query — the operator that ACTS on q318's
     * tuning knee (q322; the r11 verdict's ask #2). [[ivfQueryFiltered]]
@@ -1093,7 +1088,8 @@ object Similarity {
 
   /** Brute-force exact cosine top-k for the bounded query set — q48's
     * body, shared with the q112 recall attestation. */
-  private def bruteTopK(e: DataFrame, k: Int = 10): DataFrame = {
+  private def bruteTopK(e: DataFrame): DataFrame = {
+    val k = 10
     val queries = e.filter(queryFilter)
       .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
     val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb"))
@@ -1277,7 +1273,8 @@ object Similarity {
 
   /** Train the PQ codebook (per-subspace Lloyd's, `iters` refinements)
     * and return (codebook (sub, c_id, cv, cn), sub-vector table). */
-  def pqCodebook(emb: DataFrame, iters: Int = 2): (DataFrame, DataFrame) = {
+  def pqCodebook(emb: DataFrame): (DataFrame, DataFrame) = {
+    val iters = 2
     val e = quantize(emb).materialize
     val subs = pqSubs(e).materialize
     var cb = e.orderBy(lehmer(col("vec_id")), col("vec_id")).limit(pqK)
@@ -1309,9 +1306,9 @@ object Similarity {
     * and keep the k best per anchor via the exact int64 bottom-k
     * aggregator (partial-aggregable: the exchange carries k rows per
     * (anchor, task), never the scored corpus). */
-  def pqAdcTopK(spark: SparkSession, cb: DataFrame, subs: DataFrame,
-      k: Int = 10): DataFrame = {
+  def pqAdcTopK(spark: SparkSession, cb: DataFrame, subs: DataFrame): DataFrame = {
     import spark.implicits._
+    val k = 10
     val enc = pqAssign(cb, subs)
     val anchors = subs.filter(col("vec_id") < pqAnchors)
       .select(col("vec_id").as("q_id"), col("sub"), col("sv").as("av"),
@@ -2198,7 +2195,7 @@ object Similarity {
     // int64 per-dim sum, one IEEE double divide + floor per mean) is
     // reproduced bit-for-bit, so the whole trained clustering hash-matches.
     QueryDef("q93_kmeans", (s, d) =>
-      kmeansRefine(t(s, d, "embeddings"), k = 8, iters = 2),
+      kmeansRefine(t(s, d, "embeddings")),
       Some(s"""WITH q AS (
              |  SELECT vec_id, $sqlQuant AS qv FROM embeddings),
              |n AS (
@@ -2226,7 +2223,7 @@ object Similarity {
     // q93 training plan plus ONE 8-row rollup; the share fraction runs a
     // window over the k-row summary, never the corpus.
     QueryDef("q103_cluster_quality", (s, d) => {
-      val asg = kmeansRefine(t(s, d, "embeddings"), k = 8, iters = 2)
+      val asg = kmeansRefine(t(s, d, "embeddings"))
       asg.groupBy("cell")
         .agg(count(lit(1)).as("n_vectors"), sum("d2").as("sum_d2"),
           max("d2").as("radius_d2"))
@@ -2278,7 +2275,7 @@ object Similarity {
     // Scale shape: the q93 training plan + an 8-row stats broadcast +
     // one map pass.
     QueryDef("q111_embed_outliers", (s, d) => {
-      val asg = kmeansRefine(t(s, d, "embeddings"), k = 8, iters = 2)
+      val asg = kmeansRefine(t(s, d, "embeddings"))
       val stats = asg.groupBy("cell")
         .agg(count(lit(1)).as("nv"), sum("d2").as("sum_d2"))
         .select(col("cell"), expr("sum_d2 div nv").as("avg_d2"))
@@ -3391,7 +3388,7 @@ object Similarity {
     // document metadata, a (cell, lang) map-combined rollup, and the
     // share window over the tiny rollup table only — never the corpus.
     QueryDef("q149_cluster_mix", (s, d) => {
-      val asg = kmeansRefine(t(s, d, "embeddings"), k = 8, iters = 2)
+      val asg = kmeansRefine(t(s, d, "embeddings"))
         .select(col("vec_id").as("doc_id"), col("cell"))
       val meta = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"))

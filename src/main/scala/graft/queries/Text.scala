@@ -80,7 +80,8 @@ object Text {
 
   /** TextRank keyword centrality — see q99 below. Exposed for library
     * use. */
-  def textrank(documents: DataFrame, iters: Int = 8, topK: Int = 100): DataFrame = {
+  def textrank(documents: DataFrame): DataFrame = {
+    val (iters, topK) = (8, 100)
     val S = 10000000000L
     val tk = documents.select(toks.as("tk"))
     val bgd = tk.select(explode(arrays_zip(

@@ -61,12 +61,11 @@ class DetDataSource extends TableProvider {
     else Option(options.get("path")).getOrElse(sys.error("det source: no path given"))
   }
 
-  private def exists(file: String): Boolean = Files.exists(Paths.get(file))
-
   /** The `.det` catalog; None for a table with a `.md` and no `.det`. */
-  private def det(path: String): Option[DetSource.DetSchema] =
-    if (exists(path + ".det") || !exists(path + ".md")) Some(DetSource.parseDet(path + ".det"))
-    else None
+  private def det(path: String): Option[DetSource.DetSchema] = {
+    val schema = DetDataSource.layout(path).schema
+    if (schema.endsWith(".det")) Some(DetSource.parseDet(schema)) else None
+  }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = basePath(options)
@@ -76,7 +75,7 @@ class DetDataSource extends TableProvider {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val path = basePath(new CaseInsensitiveStringMap(properties))
-    val rows = if (exists(path + ".tbl")) path + ".tbl" else path + ".txt"
+    val rows = DetDataSource.layout(path).rows.getOrElse(path + ".txt")
     if (rows.endsWith(".tbl")) {
       val in = new DataInputStream(Files.newInputStream(Paths.get(rows)))
       try TblSource.readHeader(in) finally in.close()
@@ -89,10 +88,27 @@ class DetDataSource extends TableProvider {
   /** `<path>.stat` as Catalyst statistics, if it sits beside the table. */
   private def statsBeside(path: String, schema: StructType): Option[Stats.StatTable] = {
     val stat = path + ".stat"
-    if (!exists(stat)) None
+    if (!Files.exists(Paths.get(stat))) None
     else try Some(Stats.statTable(stat, schema.fieldNames.toSeq, det(path))) catch {
       case NonFatal(e) => Stats.warnIgnored(stat, e.toString); None
     }
+  }
+}
+
+object DetDataSource {
+  /** The files of the reference table at base path `path`: `schema` is
+    * the `.det`, else the `.md` (the `.det` when neither exists, so the
+    * load names it as missing); `rows` is the `.tbl`, else the `.txt`,
+    * and None when neither exists. The one place that decides the
+    * layout: the scan and [[graft.dialect.QueryRunner.loadTables]] both
+    * ask it. */
+  final case class Layout(schema: String, rows: Option[String])
+
+  def layout(path: String): Layout = {
+    def exists(ext: String) = Files.exists(Paths.get(path + ext))
+    Layout(
+      if (exists(".det") || !exists(".md")) path + ".det" else path + ".md",
+      Seq(".tbl", ".txt").find(exists).map(path + _))
   }
 }
 

@@ -46,9 +46,10 @@ object DetSource {
 
   /** Deterministic fixture generator for a `.det` schema — the reference's
     * RandomDB is time-seeded and therefore unreproducible
-    * (RandomDB.java:14); this one derives every value from (seed, row,
+    * (RandomDB.java:14); this one derives every value from (seed 42, row,
     * column) hashes. PK columns get a permutation of [0, n). */
-  def generate(spark: SparkSession, detPath: String, n: Int, seed: Long = 42L): DataFrame = {
+  def generate(spark: SparkSession, detPath: String, n: Int): DataFrame = {
+    val seed = 42L
     val schema = parseDet(detPath)
     def h(row: Int, c: Int): Long = {
       var x = seed ^ (row * 2654435761L) ^ (c * 40503L)

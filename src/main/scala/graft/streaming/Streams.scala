@@ -148,6 +148,10 @@ object Streams {
   def curatedIngest(incoming: DataFrame, corpus: DataFrame): DataFrame =
     dedupedIngest(incoming.filter(graft.queries.Curation.gatesOk), corpus)
 
+  // the bounded-eval-set caps of the two eval-broadcast faces below
+  private val MaxEvalDocs = 100000
+  private val MaxEvalKeys = 10000000L
+
   /** Streaming decontamination: drop every incoming document that shares
     * a 3-token shingle with the (bounded, static) eval set — the
     * streaming face of `Dedup.decontaminate`, with the same broadcast
@@ -161,26 +165,25 @@ object Streams {
     * The bounded-eval-set contract is ENFORCED, not assumed: a corpus
     * passed as `evalDocs` would silently build a multi-GB single array
     * cell (and eventually hit the 2 GB array limit) — so construction
-    * runs one bounded job (a limit-capped count, cost O(maxEvalDocs)
+    * runs one bounded job (a limit-capped count, cost O(MaxEvalDocs)
     * regardless of the table's size) and fails fast instead. The doc
     * count alone cannot bound the PAYLOAD — few-but-enormous eval docs
     * still blow the single-cell broadcast (ADVICE r12) — so the
     * distinct-shingle count is guarded too; that second job explodes an
     * already doc-bounded set, so its cost is the same one pass the real
     * broadcast build pays every micro-batch anyway. */
-  def decontaminatedIngest(incoming: DataFrame, evalDocs: DataFrame,
-      maxEvalDocs: Int = 100000, maxEvalKeys: Long = 10000000L): DataFrame = {
-    val n = evalDocs.limit(maxEvalDocs + 1).count()
-    require(n <= maxEvalDocs,
-      s"decontaminatedIngest: eval set exceeds $maxEvalDocs documents — its " +
+  def decontaminatedIngest(incoming: DataFrame, evalDocs: DataFrame): DataFrame = {
+    val n = evalDocs.limit(MaxEvalDocs + 1).count()
+    require(n <= MaxEvalDocs,
+      s"decontaminatedIngest: eval set exceeds $MaxEvalDocs documents — its " +
         "distinct shingle set must broadcast as ONE array cell per micro-batch; " +
-        "raise maxEvalDocs only if executor memory allows")
+        "raise MaxEvalDocs only if executor memory allows")
     def sh = graft.functions.ArrayExprs.shingles(split(col("text"), " "), 3)
     val nk = evalDocs.select(explode(sh).as("t"))
       .agg(count_distinct(col("t"))).head().getLong(0)
-    require(nk <= maxEvalKeys,
+    require(nk <= MaxEvalKeys,
       s"decontaminatedIngest: eval set carries $nk distinct shingles > " +
-        s"$maxEvalKeys — the single-cell broadcast payload would exceed the " +
+        s"$MaxEvalKeys — the single-cell broadcast payload would exceed the " +
         "practical executor limit even though the document count passes")
     // collect_set deduplicates on its own — no pre-distinct, which would
     // add an exchange re-executed on the static side of every micro-batch
@@ -205,11 +208,10 @@ object Streams {
     * q320 row for that doc (the q324 face is driver-gated against
     * q320's own oracle). The bounded-eval-set contract is enforced the
     * same way as [[decontaminatedIngest]]'s. */
-  def contaminationIngest(incoming: DataFrame, evalDocs: DataFrame,
-      maxEvalDocs: Int = 100000, maxEvalKeys: Long = 10000000L): DataFrame = {
-    val n = evalDocs.limit(maxEvalDocs + 1).count()
-    require(n <= maxEvalDocs,
-      s"contaminationIngest: eval set exceeds $maxEvalDocs documents — its " +
+  def contaminationIngest(incoming: DataFrame, evalDocs: DataFrame): DataFrame = {
+    val n = evalDocs.limit(MaxEvalDocs + 1).count()
+    require(n <= MaxEvalDocs,
+      s"contaminationIngest: eval set exceeds $MaxEvalDocs documents — its " +
         "distinct window set must broadcast as ONE array cell per micro-batch")
     def wins(c: org.apache.spark.sql.Column) = array_distinct(
       graft.functions.ArrayExprs.windowHashes(split(c, " "), 8))
@@ -220,9 +222,9 @@ object Streams {
     // broadcast build repeats each micro-batch anyway
     val nw = evalDocs.select(explode(wins(col("text"))).as("win"))
       .agg(count_distinct(col("win"))).head().getLong(0)
-    require(nw <= maxEvalKeys,
+    require(nw <= MaxEvalKeys,
       s"contaminationIngest: eval set carries $nw distinct windows > " +
-        s"$maxEvalKeys — the single-cell broadcast payload would exceed the " +
+        s"$MaxEvalKeys — the single-cell broadcast payload would exceed the " +
         "practical executor limit even though the document count passes")
     val bench = evalDocs
       .select(explode(wins(col("text"))).as("win"))
@@ -567,8 +569,9 @@ object Streams {
     * distinct paragraph ever seen ([[noveltyIngest]]'s lifetime-state
     * contract, sharded by hash across executors at scale); the per-doc
     * retention rollup downstream is stateless over this append stream. */
-  def paragraphDedupIngest(docs: DataFrame, w: Int = 8): Dataset[ParaKeep] = {
+  def paragraphDedupIngest(docs: DataFrame): Dataset[ParaKeep] = {
     import docs.sparkSession.implicits._
+    val w = 8
     val tk = split(col("text"), " ")
     docs
       .select(col("doc_id"), tk.as("tk"), size(tk).as("n"))
@@ -619,8 +622,9 @@ object Streams {
     * from the corpus snapshot's parquet footer count so twin and batch
     * agree); state is one 2-long record per group, sharded by group key
     * across executors at scale. */
-  def packIngest(docs: DataFrame, nGroups: Long, cap: Long = 128L): Dataset[PackAssign] = {
+  def packIngest(docs: DataFrame, nGroups: Long): Dataset[PackAssign] = {
     import docs.sparkSession.implicits._
+    val cap = 128L
     val M = 2147483647L
     val stride = M / nGroups + 1
     docs
@@ -856,9 +860,9 @@ object Streams {
     * FALSE structural conjunct wins over an unparseable token total
     * (keep = false, not null), and a parseable-token conversation needs
     * all three conjuncts — the batch coalesce(a AND b AND c, false). */
-  def convGateIngest(turns: Dataset[ConvTurn],
-      gapUs: Long = 28800L * 1000000L): Dataset[ConvGate] = {
+  def convGateIngest(turns: Dataset[ConvTurn]): Dataset[ConvGate] = {
     import turns.sparkSession.implicits._
+    val gapUs = graft.queries.Conversation.GapUs
     def close(u: Long, cid: Long, a: ConvAcc): ConvGate =
       ConvGate(u, cid, a.nTurns, a.last - a.start, a.roles.size.toLong,
         if (a.hasLen) Some(a.sumLen) else None, a.nBreaks,
@@ -921,9 +925,9 @@ object Streams {
     * forms from two occurrences in one trigger and a third in the
     * next (the StreamingSpec arrival contract). A full replay emits
     * exactly the batch third-occurrence set — the q377 driver gate. */
-  def boilerIngest(paras: Dataset[ParaOcc],
-      k: Long = 3L): Dataset[BoilerCross] = {
+  def boilerIngest(paras: Dataset[ParaOcc]): Dataset[BoilerCross] = {
     import paras.sparkSession.implicits._
+    val k = 3L
     paras.groupByKey(p => (p.source, p.h))
       .flatMapGroupsWithState[Long, BoilerCross](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -968,8 +972,9 @@ object Streams {
   /** Stateful sessionization: 30-minute inactivity gap closes a session.
     * State is one small record per active user, timed out by the event
     * clock — bounded regardless of stream length. */
-  def sessionize(events: Dataset[Event], gapUs: Long = 1800L * 1000000L): Dataset[Session] = {
+  def sessionize(events: Dataset[Event]): Dataset[Session] = {
     import events.sparkSession.implicits._
+    val gapUs = 1800L * 1000000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
@@ -1018,9 +1023,9 @@ object Streams {
     * with the batch holds for per-user in-order delivery, which the
     * batch-equality spec drives (late arrivals get the state as of
     * processing — the online contract). */
-  def rollingLimits(events: Dataset[Event], frameUs: Long = 3600L * 1000000L,
-      limit: Int = 100): Dataset[Rolled] = {
+  def rollingLimits(events: Dataset[Event], limit: Int = 100): Dataset[Rolled] = {
     import events.sparkSession.implicits._
+    val frameUs = 3600L * 1000000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[RollState, Rolled](

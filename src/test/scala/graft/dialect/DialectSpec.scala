@@ -137,19 +137,11 @@ class DialectSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("GROUPBY validation: a non-aggregated SELECT column must be a " +
-    "group key; strictParity restores the reference's abort") {
+    "group key") {
     val ex = intercept[RuntimeException](Translator.run(spark,
       "SELECT CART.remarks,COUNT(CART.cartid) FROM CART GROUPBY CART.status",
       tables))
     assert(ex.getMessage.contains("not in GROUPBY"))
-    // the reference aborts on any GROUPBY (RandomInitialPlan.java:51-54)
-    val ab = intercept[RuntimeException](Translator.run(spark,
-      "SELECT CART.status,COUNT(CART.cartid) FROM CART GROUPBY CART.status",
-      tables, strictParity = true))
-    assert(ab.getMessage.contains("reference parity"))
-    // the flag leaves GROUPBY-free queries untouched
-    assert(Translator.run(spark,
-      "SELECT CART.cartid FROM CART", tables, strictParity = true).count() == 15)
   }
 
   test("GROUPBY golden over a join, against independently-written " +

@@ -1288,7 +1288,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("q93 kmeans equals a driver-side Lloyd replay and refinement helps") {
     val df = embFixture(200, 20)
-    def run(iters: Int) = Similarity.kmeansRefine(df, k = 8, iters = iters)
+    def run(iters: Int) = Similarity.kmeansRefine(df, iters = iters)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val got = run(2)
     // driver-side replay of the exact grid arithmetic: hash-rank seeds,

@@ -185,7 +185,7 @@ class PreferenceSpec extends AnyFunSuite with SparkTestBase {
 
   test("best-of-n manifest: <= m rows per prompt, rank-1 is the group max") {
     val ev = Tables.load(spark, sfDir, "events")
-    val bon = Preference.bestOfN(ev, 4)
+    val bon = Preference.bestOfN(ev)
     assert(bon.filter(col("rank") > 4 || col("rank") < 1).count() == 0)
     val overfull = bon.groupBy("k").count().filter(col("count") > 4).count()
     assert(overfull == 0)
@@ -321,7 +321,7 @@ class PreferenceSpec extends AnyFunSuite with SparkTestBase {
     val scores = ev
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       .select(col("k"), col("event_id"), col("value"))
-    val top1 = Preference.bestOfN(ev, 4).filter(col("rank") === 1)
+    val top1 = Preference.bestOfN(ev).filter(col("rank") === 1)
       .join(scores, Seq("k", "event_id"))
       .select(col("k"), col("value").as("bon_v"))
     val mism = dpo.select(col("k"), col("chosen_id").as("event_id"))

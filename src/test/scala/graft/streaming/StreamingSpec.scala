@@ -563,7 +563,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       dir.resolve("documents.parquet"),
       java.nio.file.Paths.get(s"$sfDir/documents.parquet"))
     val incoming = spark.readStream.schema(docs.schema).parquet(dir.toString)
-    val q = Streams.packIngest(incoming, ng, 128L)
+    val q = Streams.packIngest(incoming, ng)
       .writeStream.outputMode("append")
       .format("memory").queryName("pack_out").start()
     try q.processAllAvailable() finally q.stop()
@@ -586,7 +586,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val incoming = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString + "/wave_*")
-    val q = Streams.packIngest(incoming, ng, 128L)
+    val q = Streams.packIngest(incoming, ng)
       .writeStream.outputMode("append")
       .format("memory").queryName("pack_out2").start()
     try {
