@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver's testdata layout
   * (`<sfDir>/<table>.parquet`, see TESTDATA.md).
@@ -27,29 +27,34 @@ object Tables {
     * loads of one table self-join like two tables. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
-      // The driver has shipped events.ts under two physical schemas across
-      // rounds: parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
-      // rejects, surfacing as int64 nanos under the legacy flag) and plain
-      // timestamp[us]. Branch on the *loaded* dtype instead of hard-coding
-      // either generation, so a testdata regeneration can't break loads.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val path = s"$sfDir/events.parquet"
-      val schema = parquetSchema(spark, path)
-      val raw = spark.read.schema(schema).parquet(path)
-      schema("ts").dataType match {
-        case LongType =>
-          // int64 nanos → truncate to µs, same as DuckDB's CAST(ts AS TIMESTAMP).
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType =>
-          // timestamp[us] without TZ annotation loads as TIMESTAMP_NTZ; cast
-          // to the session type (UTC) so downstream code sees one type.
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ =>
-          raw
-      }
+      val schema = eventsSchema(spark, path)
+      withSessionTs(spark.read.schema(schema).parquet(path), schema("ts").dataType)
     case _ =>
       val path = s"$sfDir/$name.parquet"
       spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema of the events parquet at `path`, inferred with the
+    * legacy `nanosAsLong` flag on. The driver has shipped events.ts under
+    * two physical schemas across rounds: parquet TIMESTAMP(NANOS) (which
+    * Spark's vectorized reader rejects, surfacing as int64 nanos under the
+    * flag) and plain timestamp[us]; the batch load and the streaming
+    * source both read this schema and hand its `ts` type to
+    * [[withSessionTs]], so neither hard-codes either generation. */
+  private[graft] def eventsSchema(spark: SparkSession, path: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    parquetSchema(spark, path)
+  }
+
+  /** `raw` with its `ts` column, loaded as `tsType`, normalized to the
+    * session TIMESTAMP: int64 nanos truncated to µs (DuckDB's
+    * CAST(ts AS TIMESTAMP)), TIMESTAMP_NTZ (timestamp[us] without a TZ
+    * annotation) cast to the session type (UTC), anything else as is. */
+  private[graft] def withSessionTs(raw: DataFrame, tsType: DataType): DataFrame = tsType match {
+    case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+    case _                => raw
   }
 
   /** Inferred schemas by qualified path, each with the [[Stamp]] it was

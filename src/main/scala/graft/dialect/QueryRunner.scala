@@ -24,7 +24,9 @@ object QueryRunner {
   /** Discover and load every table in `dir`: `<name>.parquet` through
     * [[graft.Tables.load]], else any reference-format table through the
     * [[graft.sources.DetDataSource]] scan (schema from `.det`, else `.md`;
-    * rows from `.tbl`, else `.txt`). A name with no rows file is skipped.
+    * rows from `.tbl`, else `.txt`). Names come from `.parquet`, `.tbl`,
+    * `.det` and `.md` files, never from a `.txt` alone; a name with no
+    * rows file is skipped.
     *
     * A reference data directory may ship `<name>.stat` (numtuples +
     * per-column NDVs, PlanCost.java:219-263). The scan reads it and
@@ -43,6 +45,9 @@ object QueryRunner {
       case f if f.endsWith(".parquet") => f.stripSuffix(".parquet")
       case f if f.endsWith(".tbl")     => f.stripSuffix(".tbl")
       case f if f.endsWith(".det")     => f.stripSuffix(".det")
+      // a .md schema names a table too (served with its .tbl or .txt);
+      // a .txt alone does not, so stray text files never become tables
+      case f if f.endsWith(".md")      => f.stripSuffix(".md")
     }.distinct
     // a table file that exists but cannot be read fails the whole load,
     // naming the file: dropping it would surface later as a confusing

@@ -34,20 +34,13 @@ object Conversation {
     * turn's raw payload (the scrub op's text; Catalyst prunes it from
     * the consumers that ignore it). Null timestamps are excluded (no
     * place on the time axis). One user-partitioned window pair. */
-  private[graft] def turns(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    events.filter(col("ts").isNotNull)
+  private[graft] def turns(events: DataFrame): DataFrame =
+    Events.gapSessions(events.filter(col("ts").isNotNull)
       .withColumn("us", unix_micros(col("ts")))
-      .withColumn("len", get_json_object(col("props"), "$.k").cast("int"))
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull ||
-          col("us") - col("prev_us") > GapUs, 1).otherwise(0))
-      .withColumn("conv_id", sum("is_new")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("len", get_json_object(col("props"), "$.k").cast("int")),
+      "us", GapUs, "conv_id")
       .select("user_id", "conv_id", "event_id", "event_type", "us", "len",
         "props")
-  }
 
   /** Conversation-granularity PII/safety scrub (q365): q114's span
     * rules applied PER TURN (turn text = props, with q114's

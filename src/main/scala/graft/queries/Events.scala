@@ -378,18 +378,36 @@ object Events {
       .select("event_type", "d_idx", "x", "ewma")
   }
 
+  /** The inactivity gap that closes a session (q31's rule): 30 minutes
+    * in microseconds. The streaming twin, `Streams.sessionize`, reads it
+    * too. */
+  val SessionGapUs: Long = 1800L * 1000000L
+
+  /** Gap sessions: per user, in (`order`, event_id) order, a row opens a
+    * new session when it is the user's first or comes more than `gapUs`
+    * after the previous row (`us`, epoch microseconds); `id` numbers the
+    * user's sessions from 1 (the running sum of `is_new`). Adds
+    * prev_us, is_new and `id`. */
+  private[graft] def gapSessions(ev: DataFrame, order: String, gapUs: Long,
+      id: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(order, "event_id")
+    ev.withColumn("prev_us", lag("us", 1).over(w))
+      .withColumn("is_new",
+        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1).otherwise(0))
+      .withColumn(id, sum("is_new")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** q31's sessions over raw events: `us` from `ts`, then [[gapSessions]]
+    * in (ts, event_id) order with the [[SessionGapUs]] gap. */
+  private def sessions(events: DataFrame): DataFrame =
+    gapSessions(events.withColumn("us", unix_micros(col("ts"))), "ts", SessionGapUs,
+      "session_id")
+
   /** Daily peak session concurrency (sweep-line) — see q218. */
   def sessionConcurrency(events: DataFrame): DataFrame = {
     val hourUs = 3600L * 1000000L
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sess = events
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull ||
-          col("us") - col("prev_us") > 1800L * 1000000L, 1).otherwise(0))
-      .withColumn("session_id", sum("is_new")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = sessions(events)
       .groupBy("user_id", "session_id")
       .agg(min("us").as("start_us"), max("us").as("end_us"))
     val bounds = sess
@@ -500,15 +518,7 @@ object Events {
     // The scalable shape: one shuffle on user_id, two window passes, no
     // driver-side state. Durations in exact integer microseconds.
     QueryDef("q31_sessionize", (s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, d, "events")
-        .withColumn("us", unix_micros(col("ts")))
-        .withColumn("prev_us", lag("us", 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800L * 1000000L, 1).otherwise(0))
-        .withColumn("session_id", sum("is_new")
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      sessions(t(s, d, "events"))
         .groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"),
           (max("us") - min("us")).as("dur_us"))
@@ -691,16 +701,7 @@ object Events {
     // map-combined path count with a distributed top-20 — no corpus-wide
     // window, no pairwise joins.
     QueryDef("q108_session_paths", (s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val sess = t(s, d, "events")
-        .withColumn("us", unix_micros(col("ts")))
-        .withColumn("prev_us", lag("us", 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800L * 1000000L, 1).otherwise(0))
-        .withColumn("session_id", sum("is_new")
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val seqs = sess.groupBy("user_id", "session_id")
+      val seqs = sessions(t(s, d, "events")).groupBy("user_id", "session_id")
         .agg(sort_array(collect_list(
           struct(col("us"), col("event_id"), col("event_type")))).as("evs"))
         .select(transform(col("evs"), e => e.getField("event_type")).as("seq"))

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Materialize._
 import graft.Report._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
@@ -44,6 +44,24 @@ object Similarity {
     * (ADVICE r11: an independent literal 500 would stay consistently
     * wrong if either factor changed). */
   private val SweepK = 10
+
+  /** The coarse layer of every index in this file, IVF and graph alike:
+    * the `Centroids` lowest hash-rank vectors ([[centsOf]]). */
+  val Centroids = 64
+
+  /** The graph-ANN build contract, read by every graph entry point and
+    * by the oracles ([[sqlGraphCtes]]): each node keeps its `GraphDegree`
+    * best neighbors among the cell-mates of its `GraphProbes` nearest
+    * cells. */
+  private[queries] val GraphDegree = 12
+  private val GraphProbes = 2
+
+  /** The graph beam search ([[graphSearchIndexed]], [[graphSearchFiltered]]
+    * and [[sqlBeamCtes]]): top `SearchK` after `SearchHops` expansions of
+    * a beam `SearchEf` wide. */
+  private val SearchK = 10
+  private val SearchHops = 3
+  private val SearchEf = 24
 
   /** q323's cosine threshold, shared between plan and oracle. 0.35 on
     * the synthetic near-noise embeddings yields a non-degenerate flag
@@ -174,7 +192,7 @@ object Similarity {
     val a = e.select(col("vec_id").as("vec_a"), col("qv").as("qa"), col("n2").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("qv").as("qb"), col("n2").as("nb"))
     cand.join(a, "vec_a").join(b, "vec_b")
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+      .withColumn("cos_sim", pairCosine)
       .filter(col("cos_sim") >= threshold)
       .select("vec_a", "vec_b", "cos_sim")
   }
@@ -201,6 +219,81 @@ object Similarity {
   private def cosine(qa: Column, na: Column, qb: Column, nb: Column): Column =
     dot(qa, qb).cast("double") / sqrt(na.cast("double")) / sqrt(nb.cast("double"))
 
+  /** [[cosine]] of a query-side row (qa, na) and a corpus-side row (qb, nb). */
+  private def pairCosine: Column = cosine(col("qa"), col("na"), col("qb"), col("nb"))
+
+  /** The query side of a scored pair: (q_id, extra..., qa, na). */
+  private def querySide(e: DataFrame, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as("q_id")) ++ extra ++
+      Seq(col("qv").as("qa"), col("n2").as("na")): _*)
+
+  /** The corpus side of a scored pair: (n_id, extra..., qb, nb). */
+  private def corpusSide(e: DataFrame, extra: Column*): DataFrame =
+    e.select(Seq(col("vec_id").as("n_id")) ++ extra ++
+      Seq(col("qv").as("qb"), col("n2").as("nb")): _*)
+
+  /** The bounded query set's query side. */
+  private def queriesOf(e: DataFrame): DataFrame = querySide(e.filter(queryFilter))
+
+  /** The kNN family's per-query order: cosine descending, ties to the
+    * smaller id. */
+  private def byCosine: WindowSpec =
+    Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
+
+  /** Exact cosine top-10 — q48's body and the truth side of the recall
+    * readouts: every `queries` row (q_id, qa, na) broadcast against each
+    * other corpus row of `e` (only ids in `allowed`, when given), ranked
+    * [[byCosine]]: (q_id, rank, n_id, cos_sim). */
+  private def exactTopK(queries: DataFrame, e: DataFrame,
+      allowed: Option[DataFrame]): DataFrame =
+    broadcast(queries)
+      .join(corpusSide(allowed.fold(e)(e.join(_, Seq("vec_id"), "left_semi"))),
+        col("q_id") =!= col("n_id"))
+      .withColumn("cos_sim", pairCosine)
+      .withColumn("rank", row_number().over(byCosine))
+      .filter(col("rank") <= 10)
+      .select("q_id", "rank", "n_id", "cos_sim")
+
+  /** Exact squared-distance top-10 of `queries` (q_id, qa, na) broadcast
+    * against each other `corpus` row (n_id, qb, nb), ties to the smaller
+    * id: (q_id, n_id) — the truth side of the PQ/SQ8/MRL recall readouts. */
+  private def d2Top10(queries: DataFrame, corpus: DataFrame): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("n_id").asc)
+    broadcast(queries).join(corpus, col("q_id") =!= col("n_id"))
+      .withColumn("d2", col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 10)
+      .select(col("q_id"), col("n_id"))
+  }
+
+  /** Rows of `a` (keys..., n_id) that `b` also holds, counted per `keys`. */
+  private def hitCounts(a: DataFrame, b: DataFrame, keys: String*): DataFrame =
+    a.join(b, Seq("q_id", "n_id"), "left_semi")
+      .groupBy(keys.head, keys.tail: _*).agg(count(lit(1)).as("n_hits"))
+
+  private def nHits: Column = coalesce(col("n_hits"), lit(0L))
+
+  /** Recall@10 readout: per `base` row, n_hits = rows of `a` that `b`
+    * also holds, and n_hits / 10 as `recall`; a key with no hits reads 0. */
+  private def recallAt10(base: DataFrame, a: DataFrame, b: DataFrame,
+      recall: String, keys: String*): DataFrame =
+    base.join(hitCounts(a, b, keys: _*), keys, "left")
+      .select(keys.map(col) ++
+        Seq(nHits.as("n_hits"), (nHits.cast("double") / 10).as(recall)): _*)
+
+  /** Fill-and-recall readout of a filtered search `a` (q_id, n_id) against
+    * its exact truth `b`: per `base` query, the `lead` columns, then
+    * n_ret (rows returned), n_hits and recall = n_hits over the truth's
+    * row count; a query `a` returned nothing for reads 0, 0 and 0.0. */
+  private[queries] def fillRecall(base: DataFrame, a: DataFrame, b: DataFrame,
+      lead: Column*): DataFrame =
+    base
+      .join(a.groupBy("q_id").agg(count(lit(1)).as("n_ret")), Seq("q_id"), "left")
+      .join(b.groupBy("q_id").agg(count(lit(1)).as("n_brute")), Seq("q_id"), "left")
+      .join(hitCounts(a, b, "q_id"), Seq("q_id"), "left")
+      .select(lead ++ Seq(coalesce(col("n_ret"), lit(0L)).as("n_ret"), nHits.as("n_hits"),
+        (nHits.cast("double") / col("n_brute").cast("double")).as("recall")): _*)
+
   /** Hard-negative mining (q333's body), exposed for library use: per
     * bounded anchor, the top-k most-similar different-label vectors
     * tagged against the anchor's hardest positive. Negatives rank
@@ -213,13 +306,10 @@ object Similarity {
     val e = emb
       .select(col("vec_id"), col("label"), quant(col("embedding")).as("qv"))
       .withColumn("n2", dot(col("qv"), col("qv")))
-    val anchors = e.filter(queryFilter).select(
-      col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("qv").as("qa"), col("n2").as("na"))
+    val anchors = querySide(e.filter(queryFilter), col("label").as("q_label"))
     val scored = broadcast(anchors)
-      .join(e.select(col("vec_id").as("n_id"), col("label").as("n_label"),
-        col("qv").as("qb"), col("n2").as("nb")), col("q_id") =!= col("n_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+      .join(corpusSide(e, col("label").as("n_label")), col("q_id") =!= col("n_id"))
+      .withColumn("cos_sim", pairCosine)
       .select("q_id", "n_id", "q_label", "n_label", "cos_sim")
     val pos = scored.filter(col("n_label") === col("q_label"))
       .groupBy("q_id").agg(max("cos_sim").as("pos_cos"))
@@ -250,7 +340,7 @@ object Similarity {
   def bitextMargin(emb: DataFrame): DataFrame = {
     val kAvg = 4
     val e = quantize(emb).materialize
-    val asg = assignProbed(centsOf(e, 64), e, 2).materialize
+    val asg = assignProbed(centsOf(e, Centroids), e).materialize
     // Cell-LOCAL scoring: attach each side's vectors to its probed
     // assignments (vectors cross the wire once per PROBE, ~2x corpus
     // volume), score inside the cell join, then dedup the narrow
@@ -271,9 +361,7 @@ object Similarity {
       .select(col("cell"), col("vec_id").as("y_id"),
         col("qv").as("qb"), col("n2").as("nb"))
     val scored = ex.join(ey.hint("shuffle_hash"), Seq("cell"))
-      .withColumn("cosq", floor(
-        cosine(col("qa"), col("na"), col("qb"), col("nb")) * lit(1e9))
-        .cast("long"))
+      .withColumn("cosq", floor(pairCosine * lit(1e9)).cast("long"))
       .select("x_id", "y_id", "cosq").distinct()
       .materialize // x-side stats, y-side stats, and the pair join read it
     val wx = Window.partitionBy("x_id").orderBy(col("cosq").desc, col("y_id"))
@@ -390,10 +478,9 @@ object Similarity {
     * its nearest centroid — argmax via max_by over a (cos, -id) struct,
     * partially aggregable, so the shuffle carries one row per vector,
     * not one per (vector, centroid). */
-  def ivfIndex(emb: DataFrame, centroids: Int = 64): IvfIndex = {
+  def ivfIndex(emb: DataFrame, centroids: Int = Centroids): IvfIndex = {
     val e = quantize(emb)
-    val cents = e.orderBy(lehmer(col("vec_id")), col("vec_id")).limit(centroids)
-      .select(col("vec_id").as("c_id"), col("qv").as("cv"), col("n2").as("cn"))
+    val cents = centsOf(e, centroids)
     IvfIndex(cents, assignTo(cents, e))
   }
 
@@ -471,16 +558,15 @@ object Similarity {
     * build budget. In production the edge table persists (parquet,
     * bucketed by node) and amortizes over every query batch. */
   def knnGraph(emb: DataFrame): DataFrame = {
-    val (degree, centroids, probes) = (12, 64, 2)
     // materialized: the assignment and both pair sides re-read it
     val e = quantize(emb).materialize
-    val asg = assignProbed(centsOf(e, centroids), e, probes)
-    edgesOf(asg, asg, e, degree)
+    val asg = assignProbed(centsOf(e, Centroids), e)
+    edgesOf(asg, asg, e)
   }
 
   /** The frozen coarse layer: deterministic hash-rank sample — THE single
-    * centroid-selection rule for the graph family (build, search entry,
-    * index struct), so the three can never drift. */
+    * centroid-selection rule for the IVF and graph families (build,
+    * search entry, index struct), so they can never drift. */
   private def centsOf(e: DataFrame, centroids: Int): DataFrame =
     e.orderBy(lehmer(col("vec_id")), col("vec_id")).limit(centroids)
       .select(col("vec_id").as("c_id"), col("qv").as("cv"), col("n2").as("cn"))
@@ -491,38 +577,35 @@ object Similarity {
     * (parquet, edges bucketed by node) and amortize over query
     * batches — exactly [[IvfIndex]]'s contract, graph-shaped. */
   case class KnnGraphIndex(cents: DataFrame, vecs: DataFrame,
-      assigned: DataFrame, edges: DataFrame, degree: Int, probes: Int)
+      assigned: DataFrame, edges: DataFrame)
 
-  /** Build the full graph index over a (vec_id, embedding) corpus with
-    * [[knnGraph]]'s parameters: degree 12, 2 probed cells of 64 centroids.
-    * The index CARRIES its build parameters — maintenance
-    * (knnGraphExtend) reuses them, so a batch can never be appended under
-    * a different degree/probe contract than the corpus was built with. */
+  /** Build the full graph index over a (vec_id, embedding) corpus under
+    * the graph build contract ([[GraphDegree]], [[GraphProbes]] probed
+    * cells of [[Centroids]]), which maintenance (knnGraphExtend,
+    * knnGraphRelink) reads too, so a batch can never be appended under a
+    * different degree/probe contract than the corpus was built with. */
   def knnGraphIndex(emb: DataFrame): KnnGraphIndex = {
-    val (degree, probes) = (12, 2)
     val e = quantize(emb).materialize
-    val cents = centsOf(e, 64)
-    val asg = assignProbed(cents, e, probes).materialize
-    KnnGraphIndex(cents, e, asg, edgesOf(asg, asg, e, degree), degree, probes)
+    val cents = centsOf(e, Centroids)
+    val asg = assignProbed(cents, e).materialize
+    KnnGraphIndex(cents, e, asg, edgesOf(asg, asg, e))
   }
 
-  /** Multi-probe cell assignment: (vec_id, cell), `probes` rows per
-    * vector, cells ranked by cosine to the frozen coarse layer. */
-  private def assignProbed(cents: DataFrame, e: DataFrame,
-      probes: Int): DataFrame = {
+  /** Multi-probe cell assignment: (vec_id, cell), [[GraphProbes]] rows
+    * per vector, cells ranked by cosine to the frozen coarse layer. */
+  private def assignProbed(cents: DataFrame, e: DataFrame): DataFrame = {
     val wc = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
     e.crossJoin(broadcast(cents))
       .withColumn("c_cos", cosine(col("qv"), col("n2"), col("cv"), col("cn")))
       .withColumn("rn", row_number().over(wc))
-      .filter(col("rn") <= probes)
+      .filter(col("rn") <= GraphProbes)
       .select(col("vec_id"), col("c_id").as("cell"))
   }
 
   /** Bounded-degree edge lists for the nodes of `left`: candidates are
     * `left`-to-`right` cell-mates under the probed assignment, scored
-    * with the node-side norm first, top-`degree` kept per node. */
-  private def edgesOf(left: DataFrame, right: DataFrame, vecs: DataFrame,
-      degree: Int): DataFrame = {
+    * with the node-side norm first, top-[[GraphDegree]] kept per node. */
+  private def edgesOf(left: DataFrame, right: DataFrame, vecs: DataFrame): DataFrame = {
     val cp = left.select(col("cell"), col("vec_id").as("node"))
       .join(right.select(col("cell"), col("vec_id").as("nbr")), Seq("cell"))
       .filter(col("node") =!= col("nbr"))
@@ -530,9 +613,9 @@ object Similarity {
     val wn = Window.partitionBy("node").orderBy(col("cos_sim").desc, col("nbr"))
     cp.join(vecs.select(col("vec_id").as("node"), col("qv").as("qa"), col("n2").as("na")), "node")
       .join(vecs.select(col("vec_id").as("nbr"), col("qv").as("qb"), col("n2").as("nb")), "nbr")
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+      .withColumn("cos_sim", pairCosine)
       .withColumn("rank", row_number().over(wn))
-      .filter(col("rank") <= degree)
+      .filter(col("rank") <= GraphDegree)
       .select(col("node"), col("rank"), col("nbr"), col("cos_sim"))
   }
 
@@ -606,17 +689,17 @@ object Similarity {
       .filter(col("needs_relink"))
       .select(col("node").as("vec_id"))
     val fasg = live.assigned.join(flagged, Seq("vec_id"), "left_semi")
-    edgesOf(fasg, live.assigned, live.vecs, index.degree)
+    edgesOf(fasg, live.assigned, live.vecs)
   }
 
   /** The edge increment [[knnGraphExtend]] appends: the batch nodes'
     * neighbor lists, candidates drawn from corpus + batch members of
-    * the batch's probed cells — under the INDEX's own degree/probe
-    * parameters, never caller-supplied ones. */
+    * the batch's probed cells — under the graph build contract, never
+    * caller-supplied parameters. */
   def extendedEdgesOf(index: KnnGraphIndex, batch: DataFrame): DataFrame = {
     val b = quantize(batch).materialize
-    val asgB = assignProbed(index.cents, b, index.probes).materialize
-    edgesOf(asgB, index.assigned.union(asgB), index.vecs.union(b), index.degree)
+    val asgB = assignProbed(index.cents, b).materialize
+    edgesOf(asgB, index.assigned.union(asgB), index.vecs.union(b))
   }
 
   /** Greedy beam search over the [[knnGraph]] edge lists — the query
@@ -637,8 +720,8 @@ object Similarity {
     * and the per-query top-ef is a window over bounded groups. Nothing
     * scales with corpus size except the (persisted) edge build.
     *
-    * The index is [[knnGraphIndex]]'s; k, hops and ef are
-    * [[graphSearchIndexed]]'s (10, 3, 24). */
+    * The index is [[knnGraphIndex]]'s; k, hops and ef are [[SearchK]],
+    * [[SearchHops]] and [[SearchEf]]. */
   def graphSearch(emb: DataFrame, queryPred: Column): DataFrame =
     graphSearchIndexed(knnGraphIndex(emb), queryPred)
 
@@ -649,46 +732,53 @@ object Similarity {
     * that a parquet round-trip of all four index tables serves
     * byte-identical search and extend results. */
   def graphSearchIndexed(index: KnnGraphIndex, queryPred: Column): DataFrame = {
-    val (k, hops, ef) = (10, 3, 24)
     val e = index.vecs
-    val cents = index.cents
     val edges = index.edges
       .select(col("node"), col("nbr")).materialize
-    val qs = e.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      .materialize
-    val wq = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-    var beam = qs.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qa"), col("na"),
-        col("c_id").as("n_id"), col("cv").as("qb"), col("cn").as("nb"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= ef)
-      .select("q_id", "n_id", "cos_sim")
-      .materialize
-    for (_ <- 1 to hops) {
-      val frontier = beam.select(col("q_id"), col("n_id"))
-      val expanded = frontier.join(edges, frontier("n_id") === edges("node"))
-        .select(col("q_id"), col("nbr").as("n_id"))
-        .union(frontier)
-        .distinct()
+    val qs = querySide(e.filter(queryPred)).materialize
+    var beam = entryBeam(qs, index.cents)
+    for (_ <- 1 to SearchHops) {
       val prev = beam
-      beam = expanded
-        .join(e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")), "n_id")
-        .join(broadcast(qs), "q_id")
-        .filter(col("n_id") =!= col("q_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= ef)
+      beam = hop(beam, edges, e, qs)
+        .filter(col("rn") <= SearchEf)
         .select("q_id", "n_id", "cos_sim")
         .materialize
       prev.release() // superseded beam — see Materialize.release
     }
-    beam.withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= k)
+    beam.withColumn("rank", row_number().over(byCosine))
+      .filter(col("rank") <= SearchK)
       .select("q_id", "rank", "n_id", "cos_sim")
       .orderBy("q_id", "rank")
+  }
+
+  /** The entry beam of a graph search, materialized: per query of `qs`
+    * (q_id, qa, na), the [[SearchEf]] best coarse-layer centroid nodes. */
+  private def entryBeam(qs: DataFrame, cents: DataFrame): DataFrame =
+    qs.crossJoin(broadcast(cents))
+      .select(col("q_id"), col("qa"), col("na"),
+        col("c_id").as("n_id"), col("cv").as("qb"), col("cn").as("nb"))
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("cos_sim", pairCosine)
+      .withColumn("rn", row_number().over(byCosine))
+      .filter(col("rn") <= SearchEf)
+      .select("q_id", "n_id", "cos_sim")
+      .materialize
+
+  /** One beam-search hop: the beam's out-edges plus the beam itself,
+    * scored against their query and ranked per query ([[byCosine]]):
+    * (q_id, n_id, both sides' vectors and norms, cos_sim, rn). */
+  private def hop(beam: DataFrame, edges: DataFrame, e: DataFrame,
+      qs: DataFrame): DataFrame = {
+    val frontier = beam.select(col("q_id"), col("n_id"))
+    frontier.join(edges, frontier("n_id") === edges("node"))
+      .select(col("q_id"), col("nbr").as("n_id"))
+      .union(frontier)
+      .distinct()
+      .join(corpusSide(e), "n_id")
+      .join(broadcast(qs), "q_id")
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("cos_sim", pairCosine)
+      .withColumn("rn", row_number().over(byCosine))
   }
 
   /** Filtered graph-ANN search — [[graphSearch]] under a corpus-side
@@ -705,28 +795,15 @@ object Similarity {
     * itself; under-fill stays visible as < k returned rows. */
   def graphSearchFiltered(emb: DataFrame, queryPred: Column,
       allowed: DataFrame): DataFrame = {
-    val (k, degree, centroids, probes, hops, ef) = (10, 12, 64, 2, 3, 24)
     val e = quantize(emb).materialize
-    val cents = centsOf(e, centroids)
-    val asg = assignProbed(cents, e, probes)
-    val edges = edgesOf(asg, asg, e, degree)
+    val cents = centsOf(e, Centroids)
+    val asg = assignProbed(cents, e)
+    val edges = edgesOf(asg, asg, e)
       .select(col("node"), col("nbr")).materialize
-    val qs = e.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      .materialize
-    val wq = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-    var beam = qs.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qa"), col("na"),
-        col("c_id").as("n_id"), col("cv").as("qb"), col("cn").as("nb"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= ef)
-      .select("q_id", "n_id", "cos_sim")
-      .materialize
+    val qs = querySide(e.filter(queryPred)).materialize
+    var beam = entryBeam(qs, cents)
     var seen: DataFrame = null
-    for (_ <- 1 to hops) {
-      val frontier = beam.select(col("q_id"), col("n_id"))
+    for (_ <- 1 to SearchHops) {
       // ONE materialized frame per hop (r15, guide §2.4 / §1.2): the
       // expansion is SCORED before materializing, so the hop's
       // candidate set, the next beam (a lazy top-ef filter over the
@@ -738,15 +815,7 @@ object Similarity {
       // rn <= ef cut, and the post-loop n_id != q_id filter moved
       // inside the hop — identical rows reach the final ranking.
       // retained (not released): these blocks ARE the seen set.
-      val scored = frontier.join(edges, frontier("n_id") === edges("node"))
-        .select(col("q_id"), col("nbr").as("n_id"))
-        .union(frontier)
-        .distinct()
-        .join(e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")), "n_id")
-        .join(broadcast(qs), "q_id")
-        .filter(col("n_id") =!= col("q_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rn", row_number().over(wq))
+      val scored = hop(beam, edges, e, qs)
         .select("q_id", "n_id", "cos_sim", "rn")
         .materialize
       val hopSeen = scored.select("q_id", "n_id", "cos_sim")
@@ -756,14 +825,13 @@ object Similarity {
       // so releasing it would be a no-op (ADVICE r15) — release exactly
       // the entry beam, once its successor frame is materialized
       if (seen eq hopSeen) beam.release()
-      beam = scored.filter(col("rn") <= ef)
+      beam = scored.filter(col("rn") <= SearchEf)
         .select("q_id", "n_id", "cos_sim")
     }
-    val wk = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
     seen.distinct()
       .join(allowed.select(col("vec_id").as("n_id")), Seq("n_id"), "left_semi")
-      .withColumn("rank", row_number().over(wk))
-      .filter(col("rank") <= k)
+      .withColumn("rank", row_number().over(byCosine))
+      .filter(col("rank") <= SearchK)
       .select("q_id", "rank", "n_id", "cos_sim")
   }
 
@@ -787,7 +855,7 @@ object Similarity {
     * so Catalyst plans no ReusedExchange) — `localCheckpoint` materializes
     * the assignment once; production would persist the index anyway
     * (see [[ivfIndex]]). */
-  def semDedup(emb: DataFrame, threshold: Double, centroids: Int = 64): DataFrame = {
+  def semDedup(emb: DataFrame, threshold: Double, centroids: Int = Centroids): DataFrame = {
     val asg = ivfIndex(emb, centroids).assigned.materialize
     val drops = withinCellPairs(asg, threshold)
       .select(col("vec_b").as("vec_id")).distinct()
@@ -807,7 +875,7 @@ object Similarity {
     // reproduced exactly (vec_a < vec_b by construction here)
     a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+      .withColumn("cos_sim", pairCosine)
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -821,7 +889,7 @@ object Similarity {
     * the published SemDeDup contract (the exact path stays available as
     * [[tiledNearPairs]]). */
   def clusterLocalNearPairs(emb: DataFrame, threshold: Double,
-      centroids: Int = 64): DataFrame =
+      centroids: Int = Centroids): DataFrame =
     withinCellPairs(ivfIndex(emb, centroids).assigned.materialize, threshold)
       .select("vec_a", "vec_b", "cos_sim")
 
@@ -831,15 +899,9 @@ object Similarity {
     * query id is never returned. */
   def ivfQuery(index: IvfIndex, queries: DataFrame, k: Int = 10,
       nprobe: Int = 16): DataFrame = {
-    val wProbe = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id"))
-    val probes = quantize(queries)
-      .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      .crossJoin(broadcast(index.cents))
-      .withColumn("c_cos", cosine(col("qa"), col("na"), col("cv"), col("cn")))
-      .withColumn("crn", row_number().over(wProbe))
+    val probes = cellRanks(querySide(quantize(queries)), index.cents)
       .filter(col("crn") <= nprobe)
       .select(col("q_id"), col("qa"), col("na"), col("c_id").as("cell"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
     // probes are bounded (queries x nprobe — the q48 anchor class), so
     // broadcasting them into the corpus-sized posting table is the
     // honest arm at any scale; the explicit hint pins what AQE left to
@@ -848,11 +910,20 @@ object Similarity {
     // r14 ShuffleVerdict gate)
     broadcast(probes).join(index.assigned, "cell")
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-      .withColumn("rank", row_number().over(w))
+      .withColumn("cos_sim", pairCosine)
+      .withColumn("rank", row_number().over(byCosine))
       .filter(col("rank") <= k)
       .select("q_id", "rank", "n_id", "cos_sim")
   }
+
+  /** Every cell of `cents` ranked per query of `queries` (q_id, qa, na)
+    * by centroid cosine, ties to the smaller cell id: `crn` 1 is the
+    * nearest cell — the IVF probe order. */
+  private def cellRanks(queries: DataFrame, cents: DataFrame): DataFrame =
+    queries.crossJoin(broadcast(cents))
+      .withColumn("c_cos", cosine(col("qa"), col("na"), col("cv"), col("cn")))
+      .withColumn("crn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id"))))
 
   /** PREDICATE-AWARE (filtered) IVF top-k — the retrieval shape
     * production vector search almost always runs: "top-k WHERE
@@ -899,23 +970,18 @@ object Similarity {
     * AdaptiveAnn tests: fill = k whenever >= k eligible rows exist, and
     * per-query recall >= the fixed-baseNprobe arm (probe sets only ever
     * grow; candidate growth is hit-monotone against a fixed truth).
-    * The index has 64 centroids and a baseNprobe of 16. */
+    * The index has [[Centroids]] centroids and a baseNprobe of 16. */
   def ivfQueryAdaptive(emb: DataFrame, e: DataFrame, allowedPred: Column,
       k: Int = 10): (DataFrame, DataFrame) = {
-    val (baseNprobe, centroids) = (16, 64)
-    val cents = centsOf(e, centroids)
+    val baseNprobe = 16
+    val cents = centsOf(e, Centroids)
     val allowedIds = emb.filter(allowedPred).select(col("vec_id").as("n_id"))
     val eligible = assignTo(cents, e)
       .join(allowedIds, Seq("n_id"), "left_semi")
       .materialize // histogram + self-cell + the probe scan read it
-    val queries = e.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      .materialize
+    val queries = queriesOf(e).materialize
     // every cell ranked per query, the ivfQuery probe order
-    val wProbe = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id"))
-    val cellRank = queries.crossJoin(broadcast(cents))
-      .withColumn("c_cos", cosine(col("qa"), col("na"), col("cv"), col("cn")))
-      .withColumn("crn", row_number().over(wProbe))
+    val cellRank = cellRanks(queries, cents)
       .select(col("q_id"), col("c_id").as("cell"), col("crn"))
       .materialize // routing + the probe scan read it
     val cellElig = eligible.groupBy("cell").agg(count(lit(1)).as("ce"))
@@ -933,22 +999,21 @@ object Similarity {
       .agg(min(when(col("cum") >= k, col("crn"))).as("p_fill"),
         sum("elig").as("n_eligible"))
       .withColumn("n_probed",
-        greatest(lit(baseNprobe), coalesce(col("p_fill"), lit(centroids))))
+        greatest(lit(baseNprobe), coalesce(col("p_fill"), lit(Centroids))))
       .withColumn("route",
         when(col("p_fill").isNull, lit("exhaust"))
           .when(col("p_fill") <= baseNprobe, lit("base"))
           .otherwise(lit("escalate")))
       .materialize // probe scan + report read it
     // the filtered IVF scan over each query's OWN probe depth
-    val wB = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
     val itop = cellRank
       .join(np.select("q_id", "n_probed"), "q_id")
       .filter(col("crn") <= col("n_probed"))
       .join(queries, "q_id")
       .join(eligible, "cell")
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-      .withColumn("rank", row_number().over(wB))
+      .withColumn("cos_sim", pairCosine)
+      .withColumn("rank", row_number().over(byCosine))
       .filter(col("rank") <= k)
       .select("q_id", "n_id")
     (np, itop)
@@ -968,7 +1033,7 @@ object Similarity {
   private def semanticDecon(emb: DataFrame, evalPred: Column,
       theta: Double): DataFrame = {
     val e = quantize(emb).materialize
-    val cents = centsOf(e, 64)
+    val cents = centsOf(e, Centroids)
     val asg = assignTo(cents, e).materialize // both arms + both sides
     val evalIds = emb.filter(evalPred).select(col("vec_id").as("n_id"))
       .withColumn("is_eval", lit(true))
@@ -1088,18 +1153,7 @@ object Similarity {
 
   /** Brute-force exact cosine top-k for the bounded query set — q48's
     * body, shared with the q112 recall attestation. */
-  private def bruteTopK(e: DataFrame): DataFrame = {
-    val k = 10
-    val queries = e.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-    val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-    broadcast(queries).join(corpus, col("q_id") =!= col("n_id"))
-      .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
-  }
+  private def bruteTopK(e: DataFrame): DataFrame = exactTopK(queriesOf(e), e, None)
 
   /** Exact squared grid distance between a corpus row `a` (qv, n2) and a
     * centroid row `c` (cv, cn) — the kmeansRefine metric. */
@@ -1140,28 +1194,28 @@ object Similarity {
     * hash-rank centroids → probed assignment → cell-mate pairs) —
     * shared by the cosine graph ([[sqlGraphCtes]]) and the
     * distance-ranked LOF neighborhood (q202). */
-  private def sqlCandCtes(centroids: Int, probes: Int): String =
+  private def sqlCandCtes: String =
     s"""q AS MATERIALIZED (
        |  SELECT vec_id, $sqlQuant AS qv FROM embeddings),
        |n AS MATERIALIZED (
        |  SELECT vec_id, qv, ${sqlDot("qv", "qv")} AS n2 FROM q),
        |c AS MATERIALIZED (
        |  SELECT vec_id AS c_id, qv, n2 FROM n
-       |  ORDER BY ${Sampling.sqlLehmerOf("vec_id")}, vec_id LIMIT $centroids),
+       |  ORDER BY ${Sampling.sqlLehmerOf("vec_id")}, vec_id LIMIT $Centroids),
        |asg AS MATERIALIZED (
        |  SELECT vec_id, c_id AS cell FROM (
        |    SELECT n.vec_id, c.c_id,
        |      row_number() OVER (PARTITION BY n.vec_id
        |        ORDER BY ${sqlCos("n", "c")} DESC, c.c_id ASC) AS rn
        |    FROM n CROSS JOIN c)
-       |  WHERE rn <= $probes),
+       |  WHERE rn <= $GraphProbes),
        |cp AS MATERIALIZED (
        |  SELECT DISTINCT a.vec_id AS node, b.vec_id AS nbr
        |  FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id)"""
       .stripMargin
 
-  private def sqlGraphCtes(degree: Int, centroids: Int, probes: Int): String =
-    s"""${sqlCandCtes(centroids, probes)},
+  private def sqlGraphCtes: String =
+    s"""${sqlCandCtes},
        |graph AS MATERIALIZED (
        |  SELECT node, rank, nbr, cos_sim FROM (
        |    SELECT node, nbr, cos_sim,
@@ -1171,14 +1225,14 @@ object Similarity {
        |      SELECT cp.node, cp.nbr, ${sqlCos("x", "y")} AS cos_sim
        |      FROM cp JOIN n x ON cp.node = x.vec_id
        |              JOIN n y ON cp.nbr = y.vec_id))
-       |  WHERE rank <= $degree)""".stripMargin
+       |  WHERE rank <= $GraphDegree)""".stripMargin
 
   /** Oracle CTEs for the unrolled beam search over `graph` (appended
     * after [[sqlGraphCtes]]): bounded query set `qs`, centroid-layer
     * entry beam `beam0`, then per hop an expansion `expH` (beam ∪ beam's
     * out-edges) re-ranked to the top-ef `beamH`. Mirrors
     * [[graphSearch]]'s loop exactly, one CTE pair per hop. */
-  private def sqlBeamCtes(hops: Int, ef: Int): String = {
+  private def sqlBeamCtes: String = {
     val entry =
       s"""qs AS MATERIALIZED (
          |  SELECT vec_id AS q_id, qv, n2 FROM n WHERE vec_id < $nQueries),
@@ -1190,8 +1244,8 @@ object Similarity {
          |    FROM (
          |      SELECT f.q_id, c.c_id AS n_id, ${sqlCos("f", "c")} AS cos_sim
          |      FROM qs f CROSS JOIN c WHERE c.c_id != f.q_id))
-         |  WHERE rn <= $ef)""".stripMargin
-    val hopCtes = (1 to hops).map { h =>
+         |  WHERE rn <= $SearchEf)""".stripMargin
+    val hopCtes = (1 to SearchHops).map { h =>
       s"""exp$h AS MATERIALIZED (
          |  SELECT DISTINCT q_id, n_id FROM (
          |    SELECT bd.q_id, g.nbr AS n_id
@@ -1208,7 +1262,7 @@ object Similarity {
          |      FROM exp$h x JOIN qs f ON x.q_id = f.q_id
          |                   JOIN n y ON x.n_id = y.vec_id
          |      WHERE x.n_id != x.q_id))
-         |  WHERE rn <= $ef)""".stripMargin
+         |  WHERE rn <= $SearchEf)""".stripMargin
     }
     (entry +: hopCtes).mkString(",\n")
   }
@@ -1486,7 +1540,7 @@ object Similarity {
   def lofOverGraph(emb: DataFrame): DataFrame = {
     val degree = 12
     val e = quantize(emb).materialize
-    val asg = assignProbed(centsOf(e, 64), e, 2)
+    val asg = assignProbed(centsOf(e, Centroids), e)
     val cp = asg.select(col("cell"), col("vec_id").as("node"))
       .join(asg.select(col("cell"), col("vec_id").as("nbr")), Seq("cell"))
       .filter(col("node") =!= col("nbr"))
@@ -1663,12 +1717,9 @@ object Similarity {
       val spark = s
       import spark.implicits._
       val e = quantized(s, d)
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb"))
-      val scored = broadcast(queries).join(corpus, col("q_id") =!= col("n_id"))
+      val scored = broadcast(queriesOf(e)).join(corpusSide(e), col("q_id") =!= col("n_id"))
         .select(col("q_id"),
-          cosine(col("qa"), col("na"), col("qb"), col("nb")).as("cos_sim"), col("n_id"))
+          pairCosine.as("cos_sim"), col("n_id"))
         .as[(Long, Double, Long)]
       val topk = new graft.functions.TopKAgg(10).toColumn
       scored
@@ -1949,7 +2000,7 @@ object Similarity {
       val dead = emb.filter(col("vec_id") % 2 === 0).select("vec_id")
       graphRepairReport(idx, dead).orderBy("node")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |dead AS (SELECT vec_id FROM n WHERE vec_id % 2 = 0),
              |bef AS (
              |  SELECT node, CAST(count(*) AS BIGINT) AS deg_before
@@ -1987,7 +2038,7 @@ object Similarity {
       val dead = emb.filter(col("vec_id") % 2 === 0).select("vec_id")
       knnGraphRelink(idx, dead).orderBy("node", "rank")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |dead AS (SELECT vec_id FROM n WHERE vec_id % 2 = 0),
              |bef AS (
              |  SELECT node, CAST(count(*) AS BIGINT) AS deg_before
@@ -2090,7 +2141,7 @@ object Similarity {
     // engines decide every pair identically.
     QueryDef("q334_bitext_margin", (s, d) =>
       bitextMargin(t(s, d, "embeddings")).orderBy("x_id"),
-      Some(s"""WITH ${sqlCandCtes(64, 2)},
+      Some(s"""WITH ${sqlCandCtes},
              |cpx AS MATERIALIZED (
              |  SELECT DISTINCT a.vec_id AS x_id, b.vec_id AS y_id
              |  FROM asg a JOIN asg b ON a.cell = b.cell
@@ -2366,14 +2417,8 @@ object Similarity {
       val ivf = ivfTopK(t(s, d, "embeddings"), queryFilter)
         .select(col("q_id"), col("n_id"))
       val brute = bruteTopK(e).select(col("q_id"), col("n_id"))
-      val hits = ivf.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      e.filter(queryFilter).select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10).as("recall"))
-        .reportSorted("q_id")
+      recallAt10(e.filter(queryFilter).select(col("vec_id").as("q_id")), ivf, brute,
+        "recall", "q_id").reportSorted("q_id")
     },
       Some(s"""WITH q AS (
              |  SELECT vec_id, $sqlQuant AS qv FROM embeddings),
@@ -2445,36 +2490,15 @@ object Similarity {
     QueryDef("q317_ivf_filtered", (s, d) => {
       val emb = t(s, d, "embeddings")
       val e = quantize(emb).materialize // index build + both brute arms
-      val cents = centsOf(e, 64)
+      val cents = centsOf(e, Centroids)
       val idx = IvfIndex(cents, assignTo(cents, e).materialize)
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val wB = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
+      val queries = queriesOf(e)
       def arm(tag: String, pred: Column): DataFrame = {
         val allowed = emb.filter(pred).select("vec_id")
         val ivf = ivfQueryFiltered(idx, emb.filter(queryFilter), allowed)
           .select(col("q_id"), col("n_id"))
-        val brute = broadcast(queries)
-          .join(e.join(allowed, Seq("vec_id"), "left_semi")
-            .select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")),
-            col("q_id") =!= col("n_id"))
-          .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-          .withColumn("rank", row_number().over(wB))
-          .filter(col("rank") <= 10)
-          .select("q_id", "n_id")
-        val nret = ivf.groupBy("q_id").agg(count(lit(1)).as("n_ret"))
-        val bcnt = brute.groupBy("q_id").agg(count(lit(1)).as("n_brute"))
-        val hits = ivf.join(brute, Seq("q_id", "n_id"), "left_semi")
-          .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-        queries.select("q_id")
-          .join(nret, Seq("q_id"), "left")
-          .join(bcnt, Seq("q_id"), "left")
-          .join(hits, Seq("q_id"), "left")
-          .select(lit(tag).as("sel"), col("q_id"),
-            coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            (coalesce(col("n_hits"), lit(0L)).cast("double")
-              / col("n_brute").cast("double")).as("recall"))
+        val brute = exactTopK(queries, e, Some(allowed)).select("q_id", "n_id")
+        fillRecall(queries.select("q_id"), ivf, brute, lit(tag).as("sel"), col("q_id"))
       }
       arm("broad", col("label") % 2 === 0)
         .unionAll(arm("narrow", col("label") === 3))
@@ -2577,26 +2601,21 @@ object Similarity {
     QueryDef("q318_filtered_ann_sweep", (s, d) => {
       val emb = t(s, d, "embeddings")
       val e = quantize(emb).materialize
-      val cents = centsOf(e, 64)
+      val cents = centsOf(e, Centroids)
       val labels = emb.select(col("vec_id").as("n_id"), col("label"))
       val corpus = assignTo(cents, e).join(labels, "n_id").materialize
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-        .materialize
+      val queries = queriesOf(e).materialize
       val grid = (1L to 10L).map(Tuple1(_))
       val gridDf = s.createDataFrame(grid).toDF("t")
       val wT = Window.partitionBy("t", "q_id")
         .orderBy(col("cos_sim").desc, col("n_id"))
       // IVF arm: probe -> score once -> sweep the grid
-      val wProbe = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id"))
-      val probes = queries.crossJoin(broadcast(cents))
-        .withColumn("c_cos", cosine(col("qa"), col("na"), col("cv"), col("cn")))
-        .withColumn("crn", row_number().over(wProbe))
+      val probes = cellRanks(queries, cents)
         .filter(col("crn") <= 16)
         .select(col("q_id"), col("qa"), col("na"), col("c_id").as("cell"))
       val ivfTop = probes.join(corpus, "cell")
         .filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+        .withColumn("cos_sim", pairCosine)
         .crossJoin(broadcast(gridDf))
         .filter(col("label") < col("t"))
         .withColumn("rank", row_number().over(wT))
@@ -2604,9 +2623,8 @@ object Similarity {
         .select("t", "q_id", "n_id")
       // exact filtered brute arm, same one-pass sweep
       val bruteTop = broadcast(queries)
-        .join(e.select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb"))
-          .join(labels, "n_id"), col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+        .join(corpusSide(e).join(labels, "n_id"), col("q_id") =!= col("n_id"))
+        .withColumn("cos_sim", pairCosine)
         .crossJoin(broadcast(gridDf))
         .filter(col("label") < col("t"))
         .withColumn("rank", row_number().over(wT))
@@ -2729,16 +2747,10 @@ object Similarity {
       val q = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("qv"))
         .withColumn("n2", dot(col("qv"), col("qv")))
-      val anchors = q.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          col("qv").as("qa"), col("n2").as("na"))
-      val corpus = q.select(col("vec_id").as("n_id"), col("label").as("n_label"),
-        col("qv").as("qb"), col("n2").as("nb"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-      broadcast(anchors)
-        .join(corpus, col("q_label") =!= col("n_label"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rank", row_number().over(w))
+      broadcast(querySide(q.filter(queryFilter), col("label").as("q_label")))
+        .join(corpusSide(q, col("label").as("n_label")), col("q_label") =!= col("n_label"))
+        .withColumn("cos_sim", pairCosine)
+        .withColumn("rank", row_number().over(byCosine))
         .filter(col("rank") <= 5)
         .select("q_id", "q_label", "rank", "n_id", "n_label", "cos_sim")
         .reportSorted("q_id", "rank")
@@ -2776,16 +2788,10 @@ object Similarity {
       val q = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("qv"))
         .withColumn("n2", dot(col("qv"), col("qv")))
-      val anchors = q.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          col("qv").as("qa"), col("n2").as("na"))
-      val corpus = q.select(col("vec_id").as("n_id"), col("label").as("n_label"),
-        col("qv").as("qb"), col("n2").as("nb"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-      broadcast(anchors)
-        .join(corpus, col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rank", row_number().over(w).cast("long"))
+      broadcast(querySide(q.filter(queryFilter), col("label").as("q_label")))
+        .join(corpusSide(q, col("label").as("n_label")), col("q_id") =!= col("n_id"))
+        .withColumn("cos_sim", pairCosine)
+        .withColumn("rank", row_number().over(byCosine).cast("long"))
         .withColumn("rel", col("n_label") === col("q_label"))
         .groupBy("q_id", "q_label")
         .agg(
@@ -2961,7 +2967,7 @@ object Similarity {
     QueryDef("q137_knn_graph", (s, d) =>
       knnGraph(t(s, d, "embeddings"))
         .orderBy("node", "rank"),
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)}
+      Some(s"""WITH ${sqlGraphCtes}
              |SELECT node, CAST(rank AS INTEGER) AS rank, nbr, cos_sim
              |FROM graph ORDER BY node, rank""".stripMargin)),
 
@@ -2979,8 +2985,8 @@ object Similarity {
     // by q139.
     QueryDef("q138_graph_search", (s, d) =>
       graphSearch(t(s, d, "embeddings"), queryFilter),
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
-             |${sqlBeamCtes(3, 24)}
+      Some(s"""WITH ${sqlGraphCtes},
+             |${sqlBeamCtes}
              |SELECT q_id, CAST(rank AS INTEGER) AS rank, n_id, cos_sim FROM (
              |  SELECT q_id, n_id, cos_sim,
              |    row_number() OVER (PARTITION BY q_id
@@ -3000,17 +3006,11 @@ object Similarity {
       val g = graphSearch(t(s, d, "embeddings"), queryFilter)
         .select("q_id", "n_id")
       val brute = bruteTopK(e).select("q_id", "n_id")
-      val hits = g.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      e.filter(queryFilter).select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10).as("recall"))
-        .reportSorted("q_id")
+      recallAt10(e.filter(queryFilter).select(col("vec_id").as("q_id")), g, brute,
+        "recall", "q_id").reportSorted("q_id")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
-             |${sqlBeamCtes(3, 24)},
+      Some(s"""WITH ${sqlGraphCtes},
+             |${sqlBeamCtes},
              |gtop AS MATERIALIZED (
              |  SELECT q_id, n_id FROM (
              |    SELECT q_id, n_id,
@@ -3056,34 +3056,12 @@ object Similarity {
       val allowed = emb.filter(col("label") === 3).select("vec_id")
       val g = graphSearchFiltered(emb, queryFilter, allowed)
         .select("q_id", "n_id")
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val wB = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-      val brute = broadcast(queries)
-        .join(e.join(allowed, Seq("vec_id"), "left_semi")
-          .select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")),
-          col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rank", row_number().over(wB))
-        .filter(col("rank") <= 10)
-        .select("q_id", "n_id")
-      val nret = g.groupBy("q_id").agg(count(lit(1)).as("n_ret"))
-      val bcnt = brute.groupBy("q_id").agg(count(lit(1)).as("n_brute"))
-      val hits = g.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      queries.select("q_id")
-        .join(nret, Seq("q_id"), "left")
-        .join(bcnt, Seq("q_id"), "left")
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double")
-            / col("n_brute").cast("double")).as("recall"))
-        .reportSorted("q_id")
+      val queries = queriesOf(e)
+      val brute = exactTopK(queries, e, Some(allowed)).select("q_id", "n_id")
+      fillRecall(queries.select("q_id"), g, brute, col("q_id")).reportSorted("q_id")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
-             |${sqlBeamCtes(3, 24)},
+      Some(s"""WITH ${sqlGraphCtes},
+             |${sqlBeamCtes},
              |seen AS MATERIALIZED (
              |  SELECT DISTINCT q_id, n_id FROM (
              |    SELECT q_id, n_id FROM exp1
@@ -3157,29 +3135,19 @@ object Similarity {
       val g = graphSearchFiltered(emb, queryFilter, allowed)
         .select("q_id", "rank", "n_id", "cos_sim")
         .materialize // fill counts + the kept branch read it
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
       val nret = g.groupBy("q_id").agg(count(lit(1)).as("n_ret"))
-      val routed = queries.join(nret, Seq("q_id"), "left")
+      val routed = queriesOf(e).join(nret, Seq("q_id"), "left")
         .filter(coalesce(col("n_ret"), lit(0L)) < k)
         .select("q_id", "qa", "na")
-      val wB = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-      val brute = broadcast(routed)
-        .join(e.join(allowed, Seq("vec_id"), "left_semi")
-          .select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")),
-          col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rank", row_number().over(wB))
-        .filter(col("rank") <= k)
-        .select("q_id", "rank", "n_id", "cos_sim")
+      val brute = exactTopK(routed, e, Some(allowed))
       g.join(routed.select("q_id"), Seq("q_id"), "left_anti")
         .withColumn("route", lit("graph"))
         .unionAll(brute.withColumn("route", lit("exact_fallback")))
         .select("q_id", "route", "rank", "n_id", "cos_sim")
         .reportSorted("q_id", "rank")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
-             |${sqlBeamCtes(3, 24)},
+      Some(s"""WITH ${sqlGraphCtes},
+             |${sqlBeamCtes},
              |seen AS MATERIALIZED (
              |  SELECT DISTINCT q_id, n_id FROM (
              |    SELECT q_id, n_id FROM exp1
@@ -3253,31 +3221,10 @@ object Similarity {
       val k = 10
       val (np, itop) = ivfQueryAdaptive(emb, e, col("label") === 3, k)
       // exact filtered brute truth — q317's narrow arm
-      val queries = e.filter(queryFilter)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val wB = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("n_id"))
-      val brute = broadcast(queries)
-        .join(e.join(emb.filter(col("label") === 3).select("vec_id"),
-            Seq("vec_id"), "left_semi")
-          .select(col("vec_id").as("n_id"), col("qv").as("qb"), col("n2").as("nb")),
-          col("q_id") =!= col("n_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
-        .withColumn("rank", row_number().over(wB))
-        .filter(col("rank") <= k)
-        .select("q_id", "n_id")
-      val nret = itop.groupBy("q_id").agg(count(lit(1)).as("n_ret"))
-      val bcnt = brute.groupBy("q_id").agg(count(lit(1)).as("n_brute"))
-      val hits = itop.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      np.join(nret, Seq("q_id"), "left")
-        .join(bcnt, Seq("q_id"), "left")
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"), col("route"), col("n_probed"),
-          col("n_eligible"),
-          coalesce(col("n_ret"), lit(0L)).as("n_ret"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double")
-            / col("n_brute").cast("double")).as("recall"))
+      val brute = exactTopK(queriesOf(e), e,
+        Some(emb.filter(col("label") === 3).select("vec_id"))).select("q_id", "n_id")
+      fillRecall(np, itop, brute,
+        col("q_id"), col("route"), col("n_probed"), col("n_eligible"))
         .reportSorted("q_id")
     },
       Some(s"""WITH q AS (
@@ -3546,26 +3493,11 @@ object Similarity {
     // distance distribution — both pinned in PqSpec.
     QueryDef("q152_pq_recall", (s, d) => {
       val e = quantized(s, d)
-      val anchors = e.filter(col("vec_id") < pqAnchors)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"),
-        col("n2").as("nb"))
-      val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("n_id").asc)
-      val exact = broadcast(anchors).join(corpus, col("q_id") =!= col("n_id"))
-        .withColumn("d2", col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select(col("q_id"), col("n_id"))
+      val exact = d2Top10(querySide(e.filter(col("vec_id") < pqAnchors)), corpusSide(e))
       val (cb, subs) = pqCodebook(t(s, d, "embeddings"))
       val adc = pqAdcTopK(s, cb, subs).select(col("q_id"), col("n_id"))
-      val hits = exact.join(adc, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      e.filter(col("vec_id") < pqAnchors).select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10).as("recall_at_10"))
-        .reportSorted("q_id")
+      recallAt10(e.filter(col("vec_id") < pqAnchors).select(col("vec_id").as("q_id")),
+        exact, adc, "recall_at_10", "q_id").reportSorted("q_id")
     },
       Some(s"""WITH $sqlPqCtes,
              |$sqlAdcCtes,
@@ -3601,7 +3533,7 @@ object Similarity {
     // per node at the end.
     QueryDef("q158_triangle_count", (s, d) =>
       triangleStats(t(s, d, "embeddings")).orderBy("node"),
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |und AS MATERIALIZED (
              |  SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
              |  FROM graph),
@@ -3668,14 +3600,13 @@ object Similarity {
         .filter(col("lex_rank") <= 50).select("q_id", "doc_id", "lex_rank")
       // semantic: exact grid cosine, bounded anchors, rank <= 50
       val eq = quantized(s, d)
-      val qs = eq.filter(col("vec_id") < pqAnchors)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
+      val qs = querySide(eq.filter(col("vec_id") < pqAnchors))
       val wSem = Window.partitionBy("q_id")
         .orderBy(col("cos_sim").desc, col("doc_id"))
       val sem = broadcast(qs)
         .join(eq.select(col("vec_id").as("doc_id"), col("qv").as("qb"),
           col("n2").as("nb")), col("q_id") =!= col("doc_id"))
-        .withColumn("cos_sim", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+        .withColumn("cos_sim", pairCosine)
         .withColumn("sem_rank", row_number().over(wSem))
         .filter(col("sem_rank") <= 50).select("q_id", "doc_id", "sem_rank")
       // RRF fusion over the union of both lists
@@ -3781,7 +3712,7 @@ object Similarity {
              |    SELECT q_id, q_id AS node, CAST(150000000 AS BIGINT) AS val
              |    FROM qs)
              |  GROUP BY 1, 2)""".stripMargin
-        s"""WITH ${sqlGraphCtes(12, 64, 2)},
+        s"""WITH ${sqlGraphCtes},
            |od AS MATERIALIZED (
            |  SELECT node, CAST(count(*) AS BIGINT) AS deg
            |  FROM graph GROUP BY node),
@@ -3818,13 +3749,11 @@ object Similarity {
     QueryDef("q184_mmr_rerank", (s, d) => {
       val nAnchors = 10
       val e = quantize(t(s, d, "embeddings"))
-      val q = e.filter(col("vec_id") < nAnchors)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-      val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"),
-        col("n2").as("nb"))
+      val q = querySide(e.filter(col("vec_id") < nAnchors))
+      val corpus = corpusSide(e)
       val wTop = Window.partitionBy("q_id").orderBy(col("rel").desc, col("n_id"))
       val cand = broadcast(q).join(corpus, col("q_id") =!= col("n_id"))
-        .withColumn("rel", cosine(col("qa"), col("na"), col("qb"), col("nb")))
+        .withColumn("rel", pairCosine)
         .withColumn("rk", row_number().over(wTop))
         .filter(col("rk") <= 12)
         .select("q_id", "n_id", "rel", "qb", "nb")
@@ -3941,7 +3870,7 @@ object Similarity {
     // ratio fold — both conventions applied identically in both engines.
     QueryDef("q202_lof", (s, d) =>
       lofOverGraph(t(s, d, "embeddings")).orderBy("node"),
-      Some(s"""WITH ${sqlCandCtes(64, 2)},
+      Some(s"""WITH ${sqlCandCtes},
              |ed0 AS MATERIALIZED (
              |  SELECT cp.node, cp.nbr,
              |    x.n2 + y.n2 - 2 * ${sqlDot("x.qv", "y.qv")} AS d2
@@ -4019,7 +3948,7 @@ object Similarity {
              |  JOIN k$r a ON p.u = a.u
              |  JOIN k$r b ON p.v = b.u)""".stripMargin
         }.mkString(",\n")
-        s"""WITH ${sqlGraphCtes(12, 64, 2)},
+        s"""WITH ${sqlGraphCtes},
            |und AS MATERIALIZED (
            |  SELECT DISTINCT u, v FROM (
            |    SELECT node AS u, nbr AS v FROM graph WHERE cos_sim >= 0.2
@@ -4098,7 +4027,7 @@ object Similarity {
              |  SELECT seed, node FROM v${h - 1}
              |  UNION ALL SELECT seed, node FROM f$h)""".stripMargin
         }.mkString(",\n")
-        s"""WITH ${sqlGraphCtes(12, 64, 2)},
+        s"""WITH ${sqlGraphCtes},
            |und AS MATERIALIZED (
            |  SELECT DISTINCT u, v FROM (
            |    SELECT node AS u, nbr AS v FROM graph
@@ -4174,7 +4103,7 @@ object Similarity {
       linkPredictRA(t(s, d, "embeddings"))
         .orderBy(col("score_fp").desc, col("u"), col("v"))
         .limit(50),
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |und AS MATERIALIZED (
              |  SELECT DISTINCT u, v FROM (
              |    SELECT node AS u, nbr AS v FROM graph
@@ -4363,14 +4292,11 @@ object Similarity {
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("qv"))
         .withColumn("n2", dot(col("qv"), col("qv")))
-      val queries = e.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          col("qv").as("qa"), col("n2").as("na"))
-      val corpus = e.select(col("vec_id").as("n_id"),
-        col("label").as("n_label"), col("qv").as("qb"), col("n2").as("nb"))
+      val queries = querySide(e.filter(col("vec_id") < 50), col("label").as("q_label"))
+      val corpus = corpusSide(e, col("label").as("n_label"))
       val scored = broadcast(queries).join(corpus, col("q_id") =!= col("n_id"))
         .select(col("q_id"), col("q_label"),
-          cosine(col("qa"), col("na"), col("qb"), col("nb")).as("score"),
+          pairCosine.as("score"),
           (col("n_label") === col("q_label")).as("pos"))
       val dist = scored.groupBy("q_id", "q_label", "score")
         .agg(count(lit(1)).as("cnt"),
@@ -4453,7 +4379,7 @@ object Similarity {
         col("n2").as("nb"), col("tv").as("tb"), col("tn2").as("tnb"))
       val scored = broadcast(queries).join(corpus, col("q_id") =!= col("n_id"))
         .select(col("q_id"), col("n_id"),
-          cosine(col("qa"), col("na"), col("qb"), col("nb")).as("cf"),
+          pairCosine.as("cf"),
           (graft.functions.ArrayExprs.dotq(col("ta"), col("tb")).cast("double") /
             sqrt(col("tna").cast("double")) / sqrt(col("tnb").cast("double")))
             .as("ct"))
@@ -4656,7 +4582,7 @@ object Similarity {
             .as("share_of_true"))
         .reportSorted("true_label", "pred_label")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |lb AS MATERIALIZED (SELECT vec_id, label FROM embeddings),
              |vt AS MATERIALIZED (
              |  SELECT g.node, l.label AS nlbl, count(*) AS c
@@ -4705,7 +4631,7 @@ object Similarity {
         .select(col("node"), col("label"), col("comm_size"))
         .orderBy("node")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |$sqlLpaCtes,
              |sz AS (
              |  SELECT label, CAST(count(*) AS BIGINT) AS comm_size
@@ -4741,20 +4667,14 @@ object Similarity {
       // same materialized frame (the oracle's isc/crn structure,
       // mirrored). Identical per-p rows: same probe order
       // (c_cos desc, c_id), same scoring, same rank window.
-      val wProbe = Window.partitionBy("q_id")
-        .orderBy(col("c_cos").desc, col("c_id"))
-      val probes16 = quantize(emb.filter(queryFilter))
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"), col("n2").as("na"))
-        .crossJoin(broadcast(idx.cents))
-        .withColumn("c_cos", cosine(col("qa"), col("na"), col("cv"), col("cn")))
-        .withColumn("crn", row_number().over(wProbe))
+      val probes16 = cellRanks(querySide(quantize(emb.filter(queryFilter))), idx.cents)
         .filter(col("crn") <= 16)
         .select(col("q_id"), col("qa"), col("na"), col("c_id").as("cell"),
           col("crn"))
       val scored = broadcast(probes16).join(idx.assigned, "cell")
         .filter(col("q_id") =!= col("n_id"))
         .withColumn("cos_sim",
-          cosine(col("qa"), col("na"), col("qb"), col("nb")))
+          pairCosine)
         .select("q_id", "n_id", "cos_sim", "crn")
         .materialize // three sweep cells read it
       val wRank = Window.partitionBy("q_id")
@@ -4890,7 +4810,7 @@ object Similarity {
           col("m").as("n_und_edges"),
           when(den === 0.0, 0.0).otherwise(num / den).as("assortativity"))
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |gd AS MATERIALIZED (SELECT node, nbr FROM graph),
              |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_directed FROM gd),
              |mu AS (
@@ -4945,7 +4865,7 @@ object Similarity {
             .as("share"))
         .reportSorted("in_deg")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |ind AS MATERIALIZED (
              |  SELECT nbr AS node, CAST(count(*) AS BIGINT) AS in_deg
              |  FROM graph GROUP BY nbr),
@@ -5004,7 +4924,7 @@ object Similarity {
             .as("q_global"))
         .orderBy("label")
     },
-      Some(s"""WITH ${sqlGraphCtes(12, 64, 2)},
+      Some(s"""WITH ${sqlGraphCtes},
              |$sqlLpaCtes,
              |und AS MATERIALIZED (
              |  SELECT node, nbr FROM sym WHERE node < nbr),
@@ -5063,40 +4983,14 @@ object Similarity {
           " - 128)"))
         .select(col("vec_id"), col("cq"))
         .withColumn("c2", dot(col("cq"), col("cq")))
-      val anchors = e.filter(col("vec_id") < pqAnchors)
-        .select(col("vec_id").as("q_id"), col("qv").as("qa"),
-          col("n2").as("na"))
-      val corpus = e.select(col("vec_id").as("n_id"), col("qv").as("qb"),
-        col("n2").as("nb"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("d2").asc, col("n_id").asc)
-      val exact = broadcast(anchors).join(corpus, col("q_id") =!= col("n_id"))
-        .withColumn("d2",
-          col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select(col("q_id"), col("n_id"))
+      val exact = d2Top10(querySide(e.filter(col("vec_id") < pqAnchors)), corpusSide(e))
       val cAnchors = coded.filter(col("vec_id") < pqAnchors)
         .select(col("vec_id").as("q_id"), col("cq").as("qa"),
           col("c2").as("na"))
       val cCorpus = coded.select(col("vec_id").as("n_id"),
         col("cq").as("qb"), col("c2").as("nb"))
-      val approx = broadcast(cAnchors)
-        .join(cCorpus, col("q_id") =!= col("n_id"))
-        .withColumn("d2",
-          col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select(col("q_id"), col("n_id"))
-      val hits = exact.join(approx, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-      e.filter(col("vec_id") < pqAnchors).select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10)
-            .as("recall_at_10"))
-        .reportSorted("q_id")
+      recallAt10(e.filter(col("vec_id") < pqAnchors).select(col("vec_id").as("q_id")),
+        exact, d2Top10(cAnchors, cCorpus), "recall_at_10", "q_id").reportSorted("q_id")
     },
       Some(s"""WITH q AS MATERIALIZED (
              |  SELECT vec_id, $sqlQuant AS qv FROM embeddings),
@@ -5153,17 +5047,7 @@ object Similarity {
     QueryDef("q376_mrl_recall", (s, d) => {
       val e = quantized(s, d)
       val mrlDims = Seq(32, 16)
-      val wE = Window.partitionBy("q_id")
-        .orderBy(col("d2").asc, col("n_id").asc)
-      val exact = broadcast(e.filter(col("vec_id") < pqAnchors)
-          .select(col("vec_id").as("q_id"), col("qv").as("qa"),
-            col("n2").as("na")))
-        .join(e.select(col("vec_id").as("n_id"), col("qv").as("qb"),
-          col("n2").as("nb")), col("q_id") =!= col("n_id"))
-        .withColumn("d2",
-          col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
-        .withColumn("rn", row_number().over(wE)).filter(col("rn") <= 10)
-        .select("q_id", "n_id")
+      val exact = d2Top10(querySide(e.filter(col("vec_id") < pqAnchors)), corpusSide(e))
       val trunc = e
         .select(col("vec_id"),
           explode(array(mrlDims.map(lit): _*)).as("dims"), col("qv"))
@@ -5181,17 +5065,10 @@ object Similarity {
           col("na") + col("nb") - lit(2L) * dot(col("qa"), col("qb")))
         .withColumn("rn", row_number().over(wA)).filter(col("rn") <= 10)
         .select("dims", "q_id", "n_id")
-      val hits = approx.join(exact, Seq("q_id", "n_id"), "left_semi")
-        .groupBy("dims", "q_id").agg(count(lit(1)).as("n_hits"))
-      e.filter(col("vec_id") < pqAnchors)
+      recallAt10(e.filter(col("vec_id") < pqAnchors)
         .select(col("vec_id").as("q_id"),
-          explode(array(mrlDims.map(lit): _*)).as("dims"))
-        .join(hits, Seq("dims", "q_id"), "left")
-        .select(col("dims"), col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / 10)
-            .as("recall_at_10"))
-        .reportSorted("dims", "q_id")
+          explode(array(mrlDims.map(lit): _*)).as("dims")),
+        approx, exact, "recall_at_10", "dims", "q_id").reportSorted("dims", "q_id")
     }, {
       def dotLen(a: String, b: String, len: Int) =
         s"CAST(list_sum(list_transform(range(1, ${len + 1}), " +

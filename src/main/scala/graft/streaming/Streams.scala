@@ -35,23 +35,19 @@ object Streams {
   /** Streaming source over a directory of events parquet files (Spark's
     * file stream source requires a directory; new files appearing in it
     * become new micro-batches). The `ts` physical type is probed from the
-    * files already present (same dtype branch as [[graft.Tables.load]]),
-    * then normalized to a session-TZ TIMESTAMP either way. */
+    * files already present and normalized to a session-TZ TIMESTAMP by
+    * the batch load's own rule ([[graft.Tables.eventsSchema]],
+    * [[graft.Tables.withSessionTs]]). */
   def source(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Probe the ts physical type from files already present; an EMPTY
-    // source directory (the normal startup order — start the query,
-    // files arrive later) cannot be probed, so fall back to the current
-    // testdata generation (timestamp[us], which loads as NTZ). The
-    // fallback only matters until the first file lands; a nanos-era
+    // An EMPTY source directory (the normal startup order — start the
+    // query, files arrive later) cannot be probed, so fall back to the
+    // current testdata generation (timestamp[us], which loads as NTZ).
+    // The fallback only matters until the first file lands; a nanos-era
     // directory always has its files present before replay.
-    val tsType = scala.util.Try(graft.Tables.parquetSchema(spark, dir)("ts").dataType)
+    val tsType = scala.util.Try(graft.Tables.eventsSchema(spark, dir)("ts").dataType)
       .getOrElse(TimestampNTZType)
-    val raw = spark.readStream.schema(eventsRawSchema(tsType)).parquet(dir)
-    tsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _        => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.Tables.withSessionTs(spark.readStream.schema(eventsRawSchema(tsType)).parquet(dir),
+      tsType)
   }
 
   /** Watermarked tumbling-window counts per event type (1h windows). */
@@ -969,12 +965,13 @@ object Streams {
       .as[Event]
   }
 
-  /** Stateful sessionization: 30-minute inactivity gap closes a session.
+  /** Stateful sessionization: the batch sessions' 30-minute inactivity
+    * gap ([[graft.queries.Events.SessionGapUs]]) closes a session.
     * State is one small record per active user, timed out by the event
     * clock — bounded regardless of stream length. */
   def sessionize(events: Dataset[Event]): Dataset[Session] = {
     import events.sparkSession.implicits._
-    val gapUs = 1800L * 1000000L
+    val gapUs = graft.queries.Events.SessionGapUs
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](

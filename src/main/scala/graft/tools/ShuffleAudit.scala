@@ -28,6 +28,25 @@ package graft.tools
   * exch/bexch = shuffle/broadcast exchange nodes in those final plans;
   * aqe = the number of query executions (actions) the query triggered.
   *
+  * and a plan certificate, the first 16 hex digits of the SHA-256 of the
+  * query DataFrame's canonicalized optimized plan (verbose tree string):
+  *
+  *   PLANHASH <name> <hex>
+  *
+  * PLANSIG and PROFILE count the operators of every execution after AQE
+  * re-planning, which races stage completion, so they can differ between
+  * two runs of one commit; PLANHASH reads the logical plan before any
+  * execution, so two builds that compose the same operators print the
+  * same digest (lambda bodies excepted, see [[planHash]]). Exception: a
+  * few plans print one of two or three digests depending on what the JVM
+  * did before (q72, q74, q126, q131, q169, q206, q211, q214, q220, q287
+  * over repeated audits of two commits). For DISTINCT aggregates over two
+  * column sets (q72, q126, q206, q211) the cause is Catalyst's rewrite
+  * into an Expand ordered by hashes of expression ids; for the others it
+  * is not traced. Compare such a query against every digest the other
+  * commit's audits printed. A frame the query materializes eagerly shows
+  * up in it only as its scan, not as the operators that built it.
+  *
   * Two audit outputs from fresh JVMs feed [[ShuffleVerdict]], the
   * mechanical byte-surface regression gate, which reads the SHUFFLE and
   * PLANSIG lines only.
@@ -53,6 +72,21 @@ object ShuffleAudit {
       s"$k=${nodes.collect { case (cls, n) if cls.startsWith(op) => n }.sum}"
     }.mkString(" ")
 
+  /** The PLANHASH digest of a DataFrame's canonicalized optimized plan.
+    * Two tokens of the tree string name JVM state, not the plan, and are
+    * cut to their class before hashing: a Scala lambda's hidden class
+    * (`Similarity$$$Lambda$3562/0x00007fcb84f6e390@7b9b244e`, whose number
+    * and address vary between JVMs) and the identity hash of a graft
+    * object printed by its default `toString` (`TopKAgg@651a399`). */
+  def planHash(df: org.apache.spark.sql.DataFrame): String = {
+    val tree = df.queryExecution.optimizedPlan.canonicalized.treeString(verbose = true)
+      .replaceAll("""\$\$Lambda[^,\s)\]]*""", "\\$\\$Lambda")
+      .replaceAll("""(graft\.[\w.$]+)@[0-9a-f]+""", "$1@")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(tree.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val prefixes = args.drop(1)
@@ -69,7 +103,8 @@ object ShuffleAudit {
       .foreach { q =>
         p.reset()
         try {
-          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val df = q.build(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
           // a drain timeout means the QUERY succeeded but the bus lagged —
           // report the (possibly partial) counters with a marker, not FAILED
           val marker = if (p.drain()) "" else " metrics-incomplete"
@@ -83,6 +118,7 @@ object ShuffleAudit {
           println(s"PROFILE ${q.name} jobs=${p.jobs} stages=${p.stages} tasks=${p.tasks} " +
             s"exch=${nodes("ShuffleExchangeExec")} bexch=${nodes("BroadcastExchangeExec")} " +
             s"aqe=${p.executions}")
+          println(s"PLANHASH ${q.name} ${planHash(df)}")
         } catch {
           case e: Throwable => println(s"SHUFFLE ${q.name} FAILED ${e.getMessage}")
         }

@@ -220,6 +220,20 @@ class DialectSpec extends AnyFunSuite with SparkTestBase {
     assert(got2.count() == customer.filter($"gender" === 1).count() * cart.count())
   }
 
+  test("loadTables discovers a .md + .txt table, and no table from a .txt alone") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("load-md-txt")
+    Files.copy(Paths.get(getClass.getResource("/tbl/md_table.md").toURI), dir.resolve("M.md"))
+    // md_table.md's columns: (cid INT, gender INT, firstname STRING, score REAL)
+    Files.write(dir.resolve("M.txt"), "1\t0\tfoo\t0.5\t\n2\t1\tbar\t1.5\t\n".getBytes("UTF-8"))
+    Files.write(dir.resolve("notes.txt"), "not a table\n".getBytes("UTF-8"))
+    val tables = QueryRunner.loadTables(spark, dir.toString)
+    assert(tables.keySet == Set("M"))
+    assert(tables("M").count() == 2)
+    assert(tables("M").filter($"gender" === 1).select("firstname").as[String].collect()
+      .toSeq == Seq("bar"))
+  }
+
   test("loadTables fails loudly, naming the file, on an unreadable table") {
     // a silently dropped table would surface later as "table not found"
     // or, worse, as a query over the remaining tables

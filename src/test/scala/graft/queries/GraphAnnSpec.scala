@@ -49,6 +49,16 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
     assert(rec >= 0.7, s"mean graph recall $rec below floor")
   }
 
+  test("the fill-and-recall readout reads 0, 0 and 0.0 for a query the search returned nothing for") {
+    import spark.implicits._
+    val base = Seq(1L, 2L).toDF("q_id")
+    val approx = Seq((1L, 10L), (1L, 11L)).toDF("q_id", "n_id")
+    val truth = Seq((1L, 10L), (1L, 12L), (2L, 20L)).toDF("q_id", "n_id")
+    val got = Similarity.fillRecall(base, approx, truth, col("q_id")).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+    assert(got == Map(1L -> ((2L, 1L, 0.5)), 2L -> ((0L, 0L, 0.0))))
+  }
+
   test("q317: filtered-IVF recall holds at both selectivities and beats post-filtering") {
     val out = SparkEntry.queries("q317_ivf_filtered")(spark, sfDir).cache()
     // recall floor per arm vs the exact FILTERED brute force: nprobe 16
@@ -302,14 +312,13 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
       spark.read.parquet(s"$dir/cents.parquet"),
       spark.read.parquet(s"$dir/vecs.parquet"),
       spark.read.parquet(s"$dir/assigned.parquet"),
-      spark.read.parquet(s"$dir/edges.parquet"),
-      idx.degree, idx.probes)
+      spark.read.parquet(s"$dir/edges.parquet"))
     val pred = col("vec_id") % 97 === 0
     assertSameRows(
       Similarity.graphSearchIndexed(reloaded, pred),
       Similarity.graphSearchIndexed(idx, pred))
     // and the reloaded index extends identically: same frozen coarse
-    // layer, same carried degree/probe parameters, same edge increment
+    // layer, same degree/probe contract, same edge increment
     val batch = emb.filter(col("vec_id") % 5 === 0)
     assertSameRows(
       Similarity.extendedEdgesOf(reloaded, batch),
@@ -371,7 +380,7 @@ class GraphAnnSpec extends AnyFunSuite with SparkTestBase {
     val newDeg = relink.groupBy("node").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     newDeg.foreach { case (n, c) =>
-      assert(c <= idx.degree, s"node $n over degree: $c")
+      assert(c <= Similarity.GraphDegree, s"node $n over degree: $c")
       assert(c >= flagged(n), s"node $n relinked below its degraded degree")
     }
     rep.unpersist(); relink.unpersist()
