@@ -174,8 +174,8 @@ object QueryIndex {
       "`Stats.statTable` -> DSv2 `DetScan` statistics for every reference layout (null count and min/max from a `.det`); CBO plan flip proven in-spec",
       Nil, Seq("statTable", "StatsSpec")),
     ("2.2 Select σ (`Select.java:9-281`)",
-      "`queries/Relational.scala`; typed literal coercion `dialect/Translator.scala`",
-      Seq("q02_filter_project", "q03_filter_ops"), Nil),
+      "`queries/Relational.scala`; typed literal coercion `dialect/Translator.scala`; comparison constants bound by reference at physical planning (one generated source per query shape) `plans/BindConstants.scala`",
+      Seq("q02_filter_project", "q03_filter_ops"), Seq("BindConstants")),
     ("2.2 Predicate model, comma-AND (`parser.cup:170-206`)",
       "`dialect/Parser.scala`, `dialect/Ast.scala`; lexer corners in DialectSpec",
       Nil, Seq("dialect.Parser", "DialectSpec")),

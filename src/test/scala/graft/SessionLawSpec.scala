@@ -62,6 +62,18 @@ class SessionLawSpec extends AnyFunSuite {
       s"derive hashed shingles from Dedup.shingleHashSet: ${found.mkString(", ")}")
   }
 
+  test("planner strategies are installed only at the known install points") {
+    // experimental.extraStrategies plans every later query of a session,
+    // so an install is a reviewed, idempotent entry point: AsOf.join for
+    // its operator, BindConstants.install (called by Translator.build) for
+    // the bound comparison constants
+    val found = Seq("extraStrategies =", "extraStrategies ++=", "extraStrategies :+=",
+      "extraStrategies_=(").flatMap(offenders(_, allowedFile = "", codeOnly = true))
+    assert(found.map(_.split(':').head).sorted == Seq(
+      "src/main/scala/graft/plans/AsOfJoin.scala",
+      "src/main/scala/graft/plans/BindConstants.scala"), found.mkString(", "))
+  }
+
   test("mains only in the tool and driver entry points, none in tests") {
     // a one-off dev main (a probe) lands as a spec or a committed
     // finding instead; spelled in two pieces so this file never matches
