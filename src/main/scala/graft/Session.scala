@@ -24,7 +24,12 @@ import org.apache.spark.sql.SparkSession
   *     description string once ran the driver out of memory (q208). The
   *     cap bounds the string, not the plan; [[Profile]] counts plan nodes
   *     by tree walk and never renders one;
-  *   - UTC session time zone, UI off, log level WARN.
+  *   - UTC session time zone, UI off, log level WARN;
+  *   - the planner strategy [[graft.plans.BindConstants]]: comparison
+  *     constants are read from the generated class's `references` array,
+  *     so a query shape compiles one generated source whatever its
+  *     constants (the dialect's `col op const` selections draw fresh
+  *     ones per run). It changes no plan.
   */
 object Session {
   def local(): SparkSession = {
@@ -40,6 +45,7 @@ object Session {
       .config("graft.materialize.mode", sys.env.getOrElse("GRAFT_MATERIALIZE_MODE", "local"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.BindConstants.install(spark)
     spark
   }
 }

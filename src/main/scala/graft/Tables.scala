@@ -137,8 +137,13 @@ object Tables {
     * failure is logged loudly and any stale same-named view is dropped,
     * so a query that DOES touch the broken table fails fast with
     * TABLE_OR_VIEW_NOT_FOUND instead of silently reading stale data.
+    *
+    * It also installs [[graft.plans.BindConstants]] (a no-op in a
+    * [[Session.local]] session, which has it), so a session built
+    * elsewhere plans every query over these tables as graft's own do.
     */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
+  def registerAll(spark: SparkSession, sfDir: String): Unit = {
+    graft.plans.BindConstants.install(spark)
     all.foreach { n =>
       try load(spark, sfDir, n).createOrReplaceTempView(n)
       catch {
@@ -147,4 +152,5 @@ object Tables {
           spark.catalog.dropTempView(n)
       }
     }
+  }
 }

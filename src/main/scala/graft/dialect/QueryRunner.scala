@@ -35,9 +35,16 @@ object QueryRunner {
     * Loading is metadata-only: no data is copied and nothing is
     * registered in the session catalog. A `.stat` beside a parquet table
     * is ignored with a WARNING (the reference never ships parquet; its
-    * Spark-native stats route is `ANALYZE TABLE`, [[graft.sources.Stats.analyze]]). */
+    * Spark-native stats route is `ANALYZE TABLE`, [[graft.sources.Stats.analyze]]).
+    *
+    * It also installs [[graft.plans.BindConstants]] (a no-op in a
+    * [[graft.Session.local]] session, which has it), so a session built
+    * elsewhere plans its dialect queries, whose selections are all
+    * `col op const`, with one generated source per shape from the first
+    * ([[graft.Tables.registerAll]] does the same for the parquet tables). */
   def loadTables(spark: org.apache.spark.sql.SparkSession, dir: String)
       : Map[String, org.apache.spark.sql.DataFrame] = {
+    graft.plans.BindConstants.install(spark)
     import scala.jdk.CollectionConverters._
     val files = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSeq
     def has(n: String) = files.contains(n)

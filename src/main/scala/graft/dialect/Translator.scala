@@ -3,8 +3,6 @@ package graft.dialect
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.BindConstants
-
 /** Translates a parsed dialect [[Query]] into a DataFrame plan.
   *
   * This replaces the reference's entire planning/execution stack
@@ -43,15 +41,7 @@ object Translator {
   def run(spark: SparkSession, sql: String, tables: Map[String, DataFrame]): DataFrame =
     build(spark, Parser.parse(sql), tables)
 
-  /** The DataFrame plan of `q` over `tables`. Installs
-    * [[graft.plans.BindConstants]] in `spark` (once per session): the
-    * dialect's selections are `col op const`, and with the constants
-    * bound by reference each query shape compiles its generated code
-    * once, whatever constants a run draws. The strategy then plans every
-    * later query of the session too; it changes no plan, only where the
-    * generated code reads the constants from. */
   def build(spark: SparkSession, q: Query, tables: Map[String, DataFrame]): DataFrame = {
-    BindConstants.install(spark)
     // Scans, each aliased by table name so `tbl.col` resolves qualified.
     def base(t: String): DataFrame =
       tables.getOrElse(t, sys.error(s"unknown table $t")).alias(t)

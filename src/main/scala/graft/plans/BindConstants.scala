@@ -2,11 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, InSet, LeafExpression, Literal, MultiLikeBase, StringPredicate, StringRegexExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** A comparison constant that the generated code reads from the class's
   * `references` array instead of spelling it in the Java source.
@@ -15,12 +15,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * (`amount < 1000`), so a query shape re-run with other constants
   * compiles new classes and runs code the JIT has not seen. This leaf
   * generates the same source for every value: the value is one
-  * `addReferenceObj` entry, copied once into a class field when the
+  * `addReferenceObj` entry, unboxed once into a class field when the
   * generated class is initialised. It renders (`toString`, `sql`) and
   * compares exactly like the literal it replaces, so explain output,
   * plan strings and exchange reuse see no difference. It is not
-  * foldable, which is why [[BindConstants]] binds only operands whose
-  * codegen does not specialise on foldable children. */
+  * foldable, which is why [[BindConstants]] binds only comparison
+  * operands. */
 final case class BoundConstant(literal: Literal) extends LeafExpression {
   override def dataType: DataType = literal.dataType
   override def nullable: Boolean = false
@@ -30,21 +30,25 @@ final case class BoundConstant(literal: Literal) extends LeafExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val javaType = CodeGenerator.javaType(dataType)
-    val boxed = CodeGenerator.boxedType(dataType)
-    val ref = ctx.addReferenceObj("bound", literal.value, boxed)
-    // a boxed primitive is unboxed once, at init; a UTF8String is the value
-    val read = if (boxed == javaType) ref else s"$ref.${javaType}Value()"
-    val field = ctx.addMutableState(javaType, "bound", v => s"$v = $read;")
+    val ref = ctx.addReferenceObj("bound", literal.value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "bound", v => s"$v = $ref.${javaType}Value();")
     ExprCode.forNonNullValue(JavaCode.global(field, dataType))
   }
 }
 
 /** Physical planning with comparison constants bound by reference: every
   * `FilterExec` is planned with the non-null literal operand of each
-  * `< <= > >= = <=>` over an int, long, float, double or string column
-  * replaced by a [[BoundConstant]], so one query shape compiles one
-  * generated source whatever its constants are, hits Spark's codegen
-  * cache, and runs classes the JIT has already compiled.
+  * `< <= > >= = <=>` over an int, long, float or double column replaced
+  * by a [[BoundConstant]], so one query shape compiles one generated
+  * source whatever its constants are, hits Spark's codegen cache, and
+  * runs classes the JIT has already compiled. (Catalyst already reads a
+  * string or other non-primitive literal from `references`.)
+  *
+  * It is installed when a session is built ([[graft.Session.local]]),
+  * and, in a session built elsewhere, by the table loaders
+  * ([[graft.dialect.QueryRunner.loadTables]], [[graft.Tables.registerAll]])
+  * before its first query over their tables, so a session plans every
+  * query the same way.
   *
   * The rewrite happens only here, after the optimizer: cost-based join
   * reorder and the planner's size estimates have already read the real
@@ -62,11 +66,9 @@ final case class BoundConstant(literal: Literal) extends LeafExpression {
   * installed the strategy, never `SparkSession.active`: AQE re-plans on
   * other threads.
   *
-  * Literals under `Like`/`RLike`/`LikeAll`/`StartsWith`/`EndsWith`/
-  * `Contains`/`In`/`InSet` are never bound: their codegen specialises on
-  * foldable operands (a non-foldable pattern would be compiled per row).
-  * An operand is bound only when the other side is not foldable, so no
-  * comparison changes foldability either. */
+  * Only comparison operands are bound, and only when the other side is
+  * not foldable, so no expression that specialises on a foldable operand
+  * (LIKE's pattern, IN's list) and no comparison changes foldability. */
 final class BindConstants private (session: SparkSession) extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -91,14 +93,12 @@ object BindConstants {
         new BindConstants(spark) +: spark.experimental.extraStrategies
 
   private def bindable(l: Literal): Boolean = l.value != null && (l.dataType match {
-    case IntegerType | LongType | FloatType | DoubleType | StringType => true
+    case IntegerType | LongType | FloatType | DoubleType => true
     case _ => false
   })
 
   /** `condition` with each bindable comparison operand bound. */
   private def bind(condition: Expression): Expression = condition match {
-    case _: StringRegexExpression | _: MultiLikeBase | _: StringPredicate | _: In | _: InSet =>
-      condition
     case c @ BinaryComparison(l, r) =>
       def operand(e: Expression, other: Expression): Expression = e match {
         case lit: Literal if bindable(lit) && !other.foldable => BoundConstant(lit)

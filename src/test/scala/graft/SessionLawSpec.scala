@@ -65,8 +65,8 @@ class SessionLawSpec extends AnyFunSuite {
   test("planner strategies are installed only at the known install points") {
     // experimental.extraStrategies plans every later query of a session,
     // so an install is a reviewed, idempotent entry point: AsOf.join for
-    // its operator, BindConstants.install (called by Translator.build) for
-    // the bound comparison constants
+    // its operator, BindConstants.install (called where sessions are built
+    // and by the table loaders) for the bound comparison constants
     val found = Seq("extraStrategies =", "extraStrategies ++=", "extraStrategies :+=",
       "extraStrategies_=(").flatMap(offenders(_, allowedFile = "", codeOnly = true))
     assert(found.map(_.split(':').head).sorted == Seq(
@@ -109,6 +109,8 @@ class SessionLawSpec extends AnyFunSuite {
       assert(conf.get("graft.materialize.mode") ==
         sys.env.getOrElse("GRAFT_MATERIALIZE_MODE", "local"))
       assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel.toString == "WARN")
+      assert(spark.experimental.extraStrategies
+        .count(_.isInstanceOf[graft.plans.BindConstants]) == 1)
     } finally spark.stop()
   }
 }

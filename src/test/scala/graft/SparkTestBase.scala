@@ -3,12 +3,17 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 trait SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  /** Plans as `Session.local` does: with comparison constants bound. */
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    graft.plans.BindConstants.install(s)
+    s
+  }
 
   val sfDir = "/root/testdata/sf0.001"
 

@@ -133,9 +133,16 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkP
   private def filterConditions(df: DataFrame): Seq[Expression] =
     collect(df.queryExecution.executedPlan) { case f: FilterExec => f.condition }
 
-  test("Translator.build installs the constant-binding strategy once per session") {
-    (1 to 3).foreach(_ => run(6))
-    assert(spark.experimental.extraStrategies.count(_.isInstanceOf[BindConstants]) == 1)
+  test("the constant-binding strategy is installed once per session") {
+    def installed(s: org.apache.spark.sql.SparkSession) =
+      s.experimental.extraStrategies.count(_.isInstanceOf[BindConstants])
+    (1 to 3).foreach { _ => BindConstants.install(spark); QueryRunner.loadTables(spark, workDir); run(6) }
+    assert(installed(spark) == 1)
+    // a session built without it gets it when it loads tables
+    val (dialect, parquet) = (spark.newSession(), spark.newSession())
+    assert(installed(dialect) == 0 && installed(parquet) == 0)
+    (1 to 3).foreach { _ => QueryRunner.loadTables(dialect, workDir); graft.Tables.registerAll(parquet, sfDir) }
+    assert(installed(dialect) == 1 && installed(parquet) == 1)
   }
 
   test("a dialect query explains as it does without the strategy") {
@@ -157,8 +164,7 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkP
 
   test("LIKE, RLIKE, IN, INSET and startsWith keep foldable literals; " +
     "comparisons beside them bind") {
-    run(2) // installs the strategy through the dialect's path
-    val plain = spark.newSession()
+    val plain = spark.newSession() // a new session starts with no extra strategies
     val plainCustomer = plain.read.format("graft.sources.DetDataSource").load(s"$workDir/CUSTOMER")
     val cases: Seq[(Column, Class[_])] = Seq(
       col("firstname").like("a_%") -> classOf[Like],
@@ -233,7 +239,7 @@ class DetEndToEndSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkP
 
   test("each query shape compiles one generated source whatever its constants") {
     val loaded = QueryRunner.loadTables(spark, statDir)
-    // the twins run in a session of their own, which Translator never touched
+    // the twins run in a session of their own, without the strategy
     val plain = spark.newSession()
     loaded.keys.foreach(t => plain.read.format("graft.sources.DetDataSource")
       .load(s"$statDir/$t").createOrReplaceTempView(t))
