@@ -2,90 +2,121 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the array-heavy pipeline operators.
+/** Native kernels for the array-heavy pipeline operators.
   *
   * Spark's higher-order array functions (`transform`/`aggregate`/
   * `zip_with`) evaluate their lambda per element through the interpreter —
   * they are not codegen'd. For signature/dot-product inner loops over
   * thousands of elements per row that interpretive overhead dominates the
-  * query (measured 15-26 s/query at sf0.1); these expressions replace the
+  * query (measured 15-26 s/query at sf0.1); these kernels replace the
   * lambda pipelines with tight JVM loops, 20-50x faster.
   *
-  * Every expression implements `doGenCode` as a static call into
-  * [[ArrayOps]] (the same pattern Spark's own collection expressions use),
-  * so none of them breaks whole-stage codegen for the stage it sits in.
+  * Each builder is one Catalyst `StaticInvoke` of a method of [[ArrayOps]]
+  * (or [[SubwordOps]]), the way Spark builds its own per-row utilities:
+  * generated code calls `graft.functions.ArrayOps.fn(args)` inside the
+  * whole-stage method, and the interpreted path calls the same method by
+  * reflection. A new kernel is one `ArrayOps` method plus one builder;
+  * SessionLawSpec fails on any other Expression class in this package.
+  * [[DHash64]] and [[NextFitBins]] stay classes for their analysis-time
+  * type gates, which `StaticInvoke`'s implicit casts would relax.
   */
 object ArrayExprs {
 
-  /** Exact dot product of two ARRAY<BIGINT> columns (whole-stage codegen). */
+  private val Strings = ArrayType(StringType)
+  private val Longs = ArrayType(LongType)
+  private val LongArray = ArrayType(LongType, containsNull = false)
+
+  /** `ops.fn(args)` as a column. Each argument is declared with its type:
+    * the analyzer casts a compatible column to it and rejects any other.
+    * A null argument gives a null result; the kernels never return null,
+    * so the column is nullable exactly when an argument is. */
+  private def invoke(ops: AnyRef, fn: String, out: DataType,
+      args: (Expression, DataType)*): Column =
+    ColumnBridge.column(StaticInvoke(ops.getClass, out, fn, args.map(_._1), args.map(_._2),
+      returnNullable = false))
+
+  private def e(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** Exact dot product of two ARRAY<BIGINT> columns. */
   def dotq(a: Column, b: Column): Column =
-    ColumnBridge.column(ArrayLongDot(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    invoke(ArrayOps, "dot", LongType, e(a) -> Longs, e(b) -> Longs)
 
   /** k-permutation MinHash signature of an ARRAY<STRING> shingle set. */
   def minhashSig(shingles: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), k))
+    invoke(ArrayOps, "minhashSig", LongArray, e(shingles) -> Strings, Literal(k) -> IntegerType)
 
   /** PORTABLE 32-permutation affine minhash signature of an ARRAY<BIGINT>
     * hash set — the q227 family ((pa·(h mod p) + pb) mod p, constants
     * from the Lehmer stream seeded 42) whose DuckDB oracles replay it
-    * verbatim. One tight pass over the array (whole-stage codegen). */
+    * verbatim. One tight pass over the array. */
   def affineMinhashSig(hashes: Column): Column =
-    ColumnBridge.column(AffineMinHashSig(ColumnBridge.expression(hashes)))
+    invoke(ArrayOps, "affineMinhashSig", LongArray, e(hashes) -> Longs)
 
   /** 64-bit SimHash of an ARRAY<STRING> token sequence. */
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
+    invoke(ArrayOps, "simhash64", LongType, e(tokens) -> Strings)
 
   /** Distinct n-token shingles ("a b c") of an ARRAY<STRING> token sequence. */
   def shingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(Shingles(ColumnBridge.expression(tokens), n))
+    invoke(ArrayOps, "shingles", ArrayType(StringType, containsNull = false),
+      e(tokens) -> Strings, Literal(n) -> IntegerType)
 
   /** Order-sensitive polynomial fingerprint of an ARRAY<STRING> token
     * sequence (portable: the DuckDB oracle computes the same fold). */
   def polyFingerprint(tokens: Column): Column =
-    ColumnBridge.column(PolyFingerprint(ColumnBridge.expression(tokens)))
+    invoke(ArrayOps, "polyFingerprint", LongType, e(tokens) -> Strings)
 
   /** Random-hyperplane LSH band hashes of a quantized ARRAY<BIGINT> vector. */
-  def hyperplaneBands(qv: Column, bands: Int, bits: Int): Column =
-    ColumnBridge.column(HyperplaneBands(ColumnBridge.expression(qv), bands, bits))
+  def hyperplaneBands(qv: Column, bands: Int, bits: Int): Column = {
+    require(bands * bits <= 4096, "at most 4096 hyperplanes are precomputed")
+    invoke(ArrayOps, "hyperplaneBands", ArrayType(IntegerType, containsNull = false),
+      e(qv) -> Longs, Literal(bands) -> IntegerType, Literal(bits) -> IntegerType)
+  }
 
   /** Max multiplicity of any element in an ARRAY<STRING> token sequence —
     * the top-token count of the Gopher repetition gate, map-side. */
   def topTokenCount(tokens: Column): Column =
-    ColumnBridge.column(TopTokenCount(ColumnBridge.expression(tokens)))
+    invoke(ArrayOps, "topTokenCount", IntegerType, e(tokens) -> Strings)
 
   /** 62-bit hashes of the n-w+1 space-joined w-token windows of an
-    * ARRAY<STRING> token sequence — the narrow dup-span group/join key. */
+    * ARRAY<STRING> token sequence — the narrow dup-span group/join key:
+    * the shuffle carries 8-byte longs instead of reconstructed text. */
   def windowHashes(tokens: Column, w: Int): Column =
-    ColumnBridge.column(WindowHashes(ColumnBridge.expression(tokens), w))
+    invoke(ArrayOps, "windowHashes", LongArray, e(tokens) -> Strings, Literal(w) -> IntegerType)
 
   /** |a ∩ b| of two ARRAY<BIGINT> columns whose elements are DISTINCT per
-    * side (the per-doc key-set contract of the winnow-blocked verify). */
+    * side (the per-doc key-set contract of the winnow-blocked verify).
+    * `size(array_intersect(a, b))` computes the same number but boxes
+    * every long and allocates the intersection array just to take its
+    * length. */
   def overlapCount(a: Column, b: Column): Column =
-    ColumnBridge.column(OverlapCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    invoke(ArrayOps, "overlapCount", IntegerType, e(a) -> Longs, e(b) -> Longs)
 
   /** Greedy longest-match subword tokenization of an ARRAY<STRING> word
-    * sequence under a fixed merge vocabulary (see [[SubwordVocab]]). */
+    * sequence under a fixed merge vocabulary (see [[SubwordVocab]]). The
+    * prebuilt lookup table rides in the plan as an object literal, which
+    * generated code reads from its `references`. */
   def subwordTokens(words: Column, vocab: Seq[String] = SubwordVocab.Default): Column =
-    ColumnBridge.column(SubwordTokens(ColumnBridge.expression(words), vocab))
+    invoke(SubwordOps, "subwordTokens", ArrayType(StringType, containsNull = false),
+      e(words) -> Strings,
+      Literal.fromObject(new SubwordTable(vocab)) -> ObjectType(classOf[SubwordTable]))
 
   /** Next-fit bin assignment over an ARRAY<BIGINT> of sequence lengths:
     * out(i) = bin index of item i under capacity `cap` (see
     * [[ArrayOps.nextFitBins]] for the exact recurrence). */
   def nextFitBins(lens: Column, cap: Long): Column =
-    ColumnBridge.column(NextFitBins(ColumnBridge.expression(lens), cap))
+    ColumnBridge.column(NextFitBins(e(lens), cap))
 
   /** 64-bit perceptual difference-hash of a BINARY media payload. */
   def dhash64(payload: Column): Column =
-    ColumnBridge.column(DHash64(ColumnBridge.expression(payload)))
+    ColumnBridge.column(DHash64(e(payload)))
 
   private[functions] def xxh64(s: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
@@ -113,6 +144,21 @@ object ArrayOps {
     h
   }
 
+  /** Σ a(i)*b(i) over the common prefix of two long arrays. Inputs are
+    * pre-quantized (bounded), so 64-bit arithmetic cannot overflow by
+    * construction. */
+  def dot(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) { acc += a.getLong(i) * b.getLong(i); i += 1 }
+    acc
+  }
+
+  /** MinHash signature: sig(j) = min over shingles s of xxh64(xxh64(s, 42), j)
+    * for j in [0, k). One pass over the shingle array; the per-shingle base
+    * hash is mixed k times with `hashLong` (a few ns each) instead of
+    * re-hashing the string k times. */
   def minhashSig(arr: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)
     val n = arr.numElements()
@@ -164,6 +210,12 @@ object ArrayOps {
     new GenericArrayData(mins)
   }
 
+  /** Distinct n-token shingles, space-joined, order-preserving on first
+    * occurrence. One pass; equivalent to (but ~20x faster than) the
+    * interpreted `array_distinct(transform(sequence(...), i ->
+    * concat_ws(' ', tokens[i], ..., tokens[i+n-1])))` pipeline. Sequences
+    * shorter than n yield NO shingles (an empty array) — the same semantics
+    * as the SQL oracle's `range(1, len - n + 2)` window enumeration. */
   def shingles(arr: ArrayData, n: Int): ArrayData = {
     val len = arr.numElements()
     if (len < n) return new GenericArrayData(new Array[Any](0))
@@ -181,6 +233,10 @@ object ArrayOps {
     new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 
+  /** Max multiplicity of any element — equals `max(count) GROUP BY (row,
+    * element)` without the explode + two shuffles when the per-row token
+    * count is bounded (the distributed explode formulation remains the
+    * right shape for unbounded documents). */
   def topTokenCount(arr: ArrayData): Int = {
     val n = arr.numElements()
     if (n == 0) return 0
@@ -244,8 +300,11 @@ object ArrayOps {
     h
   }
 
-  /** SimHash bit source: 64 bits per token from two polynomial hashes
-    * (bases 131 and 137) — bit j comes from h1 for j<32, h2 for j>=32. */
+  /** 64-bit SimHash: bit j of the result is set iff the sum over tokens of
+    * sign(bit j of hash(token)) is positive. The per-token hash is the
+    * portable two-base [[polyHash]] (bases 131 and 137; bit j comes from
+    * h1 for j<32, h2 for j>=32), so the DuckDB oracle reproduces the
+    * signature bit-for-bit. */
   def simhash64(arr: ArrayData): Long = {
     val v = new Array[Int](64)
     val n = arr.numElements()
@@ -271,6 +330,9 @@ object ArrayOps {
     sig
   }
 
+  /** Order-sensitive document fingerprint:
+    * fp = fold(tokens, (fp*31 + polyHash(token)) mod 1e9+7). Pure 64-bit
+    * arithmetic (no wraparound under ANSI mode), portable to the oracle. */
   def polyFingerprint(arr: ArrayData): Long = {
     val n = arr.numElements()
     var fp = 0L
@@ -413,7 +475,11 @@ object ArrayOps {
   }
 
   /** Band hashes of a random-hyperplane signature: band b packs `bits`
-    * consecutive plane signs; sign(p) = [ sum_i w(p,i)*qv_i > 0 ]. */
+    * consecutive plane signs; sign(p) = [ sum_i w(p,i)*qv_i > 0 ]
+    * (Rademacher +-1 weights, deterministic per plane index). Two vectors
+    * with angle theta agree on one plane with p = 1 - theta/pi; a band
+    * collides with p^bits — the s-curve that makes near-angular-duplicate
+    * blocking sublinear. */
   def hyperplaneBands(arr: ArrayData, bands: Int, bits: Int): ArrayData = {
     val n = arr.numElements()
     // one 64-bit sign mask per plane: beyond 64 dims the weights would
@@ -447,178 +513,6 @@ object ArrayOps {
   }
 }
 
-/** Σ a(i)*b(i) over two ARRAY<BIGINT> columns. Inputs are pre-quantized
-  * (bounded) so 64-bit arithmetic cannot overflow by construction. */
-case class ArrayLongDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value} += $a.getLong($i) * $b.getLong($i);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayLongDot =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |a ∩ b| over two ARRAY<BIGINT> columns whose elements are DISTINCT per
-  * side. `size(array_intersect(a, b))` computes the same number but boxes
-  * every long and allocates the intersection array just to take its
-  * length; this is one hash-set pass (see [[ArrayOps.overlapCount]]). */
-case class OverlapCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayOps.overlapCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ArrayOps.overlapCount($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): OverlapCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** MinHash signature: sig(j) = min over shingles s of xxh64(xxh64(s, 42), j)
-  * for j in [0, k). One pass over the shingle array; the per-shingle base
-  * hash is mixed k times with `hashLong` (a few ns each) instead of
-  * re-hashing the string k times.
-  */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.minhashSig(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.minhashSig($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** Distinct n-token shingles, space-joined, order-preserving on first
-  * occurrence. One pass; equivalent to (but ~20x faster than) the
-  * interpreted `array_distinct(transform(sequence(...), i ->
-  * concat_ws(' ', tokens[i], ..., tokens[i+n-1])))` pipeline. Sequences
-  * shorter than n yield NO shingles (an empty array) — the same semantics
-  * as the SQL oracle's `range(1, len - n + 2)` window enumeration. */
-/** Portable 32-permutation affine minhash of an ARRAY<BIGINT> hash set
-  * (see [[ArrayOps.affineMinhashSig]]). */
-case class AffineMinHashSig(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.affineMinhashSig(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.affineMinhashSig($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): AffineMinHashSig =
-    copy(child = newChild)
-}
-
-case class Shingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.shingles(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.shingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-}
-
-/** Max multiplicity of any element of an ARRAY<STRING> — equals
-  * `max(count) GROUP BY (row, element)` without the explode + two
-  * shuffles when the per-row token count is bounded (the distributed
-  * explode formulation remains the right shape for unbounded documents).
-  */
-case class TopTokenCount(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.topTokenCount(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.topTokenCount($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopTokenCount =
-    copy(child = newChild)
-}
-
-/** 62-bit hashes of the space-joined w-token windows of a token sequence
-  * ([[ArrayOps.windowHashes]]) — replaces the raw window STRINGS as the
-  * dup-span group/join key: the shuffle carries 8-byte longs instead of
-  * reconstructed text. */
-case class WindowHashes(child: Expression, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.windowHashes(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.windowHashes($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash: bit j of the result is set iff the sum over tokens of
-  * sign(bit j of hash(token)) is positive. The per-token hash is the
-  * portable two-base polynomial hash ([[ArrayOps.polyHash]] with bases
-  * 131/137), so the DuckDB oracle reproduces the signature bit-for-bit. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 /** 64-bit perceptual difference-hash of a BINARY payload
   * ([[ArrayOps.dhash64]]) — the image-modality near-dup key. Map-side,
   * whole-stage codegen'd; blocking/verification happen downstream (the
@@ -646,24 +540,6 @@ case class DHash64(child: Expression)
     defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.dhash64($c)")
 
   override protected def withNewChildInternal(newChild: Expression): DHash64 =
-    copy(child = newChild)
-}
-
-/** Order-sensitive document fingerprint:
-  * fp = fold(tokens, (fp*31 + polyHash(token)) mod 1e9+7). Pure 64-bit
-  * arithmetic (no wraparound under ANSI mode), portable to the oracle. */
-case class PolyFingerprint(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.polyFingerprint(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.polyFingerprint($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyFingerprint =
     copy(child = newChild)
 }
 
@@ -696,27 +572,5 @@ case class NextFitBins(child: Expression, cap: Long)
     defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.nextFitBins($c, ${cap}L)")
 
   override protected def withNewChildInternal(newChild: Expression): NextFitBins =
-    copy(child = newChild)
-}
-
-/** Random-hyperplane LSH bands over a quantized ARRAY<BIGINT> vector:
-  * `bands` band hashes, each packing `bits` consecutive hyperplane signs
-  * (Rademacher +-1 weights, deterministic per plane index). Two vectors
-  * with angle theta agree on one plane with p = 1 - theta/pi; a band
-  * collides with p^bits — the s-curve that makes near-angular-duplicate
-  * blocking sublinear. */
-case class HyperplaneBands(child: Expression, bands: Int, bits: Int)
-    extends UnaryExpression {
-  require(bands * bits <= 4096, "at most 4096 hyperplanes are precomputed")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ArrayOps.hyperplaneBands(input.asInstanceOf[ArrayData], bands, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayOps.hyperplaneBands($c, $bands, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBands =
     copy(child = newChild)
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** SQL registration for the native expressions, so `spark.sql` users can
+/** SQL registration for the native kernels, so `spark.sql` users can
   * call them directly:
   *
   * {{{
@@ -17,22 +18,27 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object GraftFunctions {
 
-  private def intArg(e: Expression, what: String): Int = e match {
+  private def intArg(c: Column, what: String): Int = ColumnBridge.expression(c) match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case other => sys.error(s"$what must be an integer literal, got $other")
   }
 
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> (es => ArrayLongDot(es(0), es(1))),
-    "graft_minhash_sig" -> (es => MinHashSig(es(0), intArg(es(1), "k"))),
-    "graft_simhash64" -> (es => SimHash64(es(0))),
-    "graft_shingles" -> (es => Shingles(es(0), intArg(es(1), "n"))),
-    "graft_fingerprint" -> (es => PolyFingerprint(es(0))),
-    "graft_hyperplane_bands" -> (es =>
-      HyperplaneBands(es(0), intArg(es(1), "bands"), intArg(es(2), "bits"))),
-    "graft_top_token_count" -> (es => TopTokenCount(es(0))),
-    "graft_window_hashes" -> (es => WindowHashes(es(0), intArg(es(1), "w"))),
-    "graft_subword_tokens" -> (es => SubwordTokens(es(0), SubwordVocab.Default)))
+  /** Each SQL function is its [[ArrayExprs]] builder over the call's
+    * arguments, so a kernel is spelled once. */
+  val all: Seq[(String, Seq[Expression] => Expression)] = Seq[(String, Seq[Column] => Column)](
+    "graft_dot" -> (cs => ArrayExprs.dotq(cs(0), cs(1))),
+    "graft_minhash_sig" -> (cs => ArrayExprs.minhashSig(cs(0), intArg(cs(1), "k"))),
+    "graft_simhash64" -> (cs => ArrayExprs.simhash64(cs(0))),
+    "graft_shingles" -> (cs => ArrayExprs.shingles(cs(0), intArg(cs(1), "n"))),
+    "graft_fingerprint" -> (cs => ArrayExprs.polyFingerprint(cs(0))),
+    "graft_hyperplane_bands" -> (cs =>
+      ArrayExprs.hyperplaneBands(cs(0), intArg(cs(1), "bands"), intArg(cs(2), "bits"))),
+    "graft_top_token_count" -> (cs => ArrayExprs.topTokenCount(cs(0))),
+    "graft_window_hashes" -> (cs => ArrayExprs.windowHashes(cs(0), intArg(cs(1), "w"))),
+    "graft_subword_tokens" -> (cs => ArrayExprs.subwordTokens(cs(0))))
+    .map { case (name, f) =>
+      name -> ((es: Seq[Expression]) => ColumnBridge.expression(f(es.map(ColumnBridge.column))))
+    }
 
   /** Register on a live session (temp functions). */
   def register(spark: SparkSession): Unit =

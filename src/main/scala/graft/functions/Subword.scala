@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic subword tokenization — the WordPiece/BPE-family greedy
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * single character (always making progress — unknown characters pass
   * through as themselves). Training the vocabulary is an offline job;
   * inference, which is what a query engine runs per corpus pass, is this
-  * expression.
+  * kernel.
   *
   * Portability contract (what makes q90 oracle-eligible): the greedy
   * scan advances by whole codepoints, and a candidate window containing
@@ -51,7 +48,8 @@ object SubwordVocab {
 }
 
 /** Precomputed lookup structure for the greedy scan: one hash set per
-  * entry length. Shipped into generated code via `addReferenceObj`. */
+  * entry length. [[ArrayExprs.subwordTokens]] passes it to the kernel as
+  * an object literal, which generated code reads from its `references`. */
 final class SubwordTable(vocab: Seq[String]) extends Serializable {
   val maxLen: Int = vocab.map(_.length).max
   private val sets: Array[java.util.HashSet[String]] =
@@ -97,27 +95,4 @@ object SubwordOps {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** Flat subword-token stream of an ARRAY<STRING> word sequence under a
-  * fixed merge vocabulary ([[SubwordOps.subwordTokens]]). Whole-stage
-  * codegen via an `addReferenceObj` handle to the prebuilt lookup table.
-  */
-case class SubwordTokens(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
-
-  @transient private lazy val table = new SubwordTable(vocab)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    SubwordOps.subwordTokens(input.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("subwordTable", table, classOf[SubwordTable].getName)
-    defineCodeGen(ctx, ev, c => s"graft.functions.SubwordOps.subwordTokens($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SubwordTokens =
-    copy(child = newChild)
 }

@@ -286,8 +286,8 @@ object Dedup {
       .orderBy("source")
   }
 
-  /** MinHash signature via the native [[graft.functions.MinHashSig]]
-    * expression: one pass over the shingles, k seeded mixes per shingle —
+  /** MinHash signature via the native [[graft.functions.ArrayExprs.minhashSig]]
+    * kernel: one pass over the shingles, k seeded mixes per shingle —
     * the "k independent permutations" construction without materializing
     * permutations, and without k interpreted array traversals. */
   private def signature: Column =
@@ -482,7 +482,7 @@ object Dedup {
     // the window KEY is a 62-bit hash of the window content, not the
     // reconstructed string: the count shuffle and the join-back carry
     // 8-byte longs instead of ~W-token text (the 100 TB plan; collision
-    // odds are ~10^-9 per 10^5-window corpus — see WindowHashes)
+    // odds are ~10^-9 per 10^5-window corpus — see ArrayOps.windowHashes)
     val w = docs.filter(size(col("tk")) >= W)
       .select(col("doc_id"), posexplode(
         graft.functions.ArrayExprs.windowHashes(col("tk"), W)).as(Seq("p", "win")))
@@ -1419,7 +1419,7 @@ object Dedup {
     QueryDef("q46_simhash", (s, d) => {
       // v[j] = sum over tokens of (bit j of hash(token) ? +1 : -1);
       // simhash bit j = (v[j] > 0) — one native pass per row
-      // (graft.functions.SimHash64).
+      // (graft.functions.ArrayExprs.simhash64).
       val sigs = t(s, d, "documents")
         .select(col("doc_id"),
           graft.functions.ArrayExprs.simhash64(split(col("text"), " ")).as("sim"))

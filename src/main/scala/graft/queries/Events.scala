@@ -894,43 +894,29 @@ object Events {
              |FROM k WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
     // ---- Stream-static enrichment, batch form ----------------------------
-    // Batch twin of streaming.Streams.enriched: the event stream joined
-    // to the customer dimension on user_id. A plain left equi-join —
-    // broadcast when the dimension fits, user-keyed shuffle otherwise;
+    // streaming.Streams.enriched over the batch tables: the event stream
+    // joined to the customer dimension on user_id. A plain left equi-join
+    // — broadcast when the dimension fits, user-keyed shuffle otherwise;
     // the streaming side re-plans the same join per micro-batch.
-    QueryDef("q141_event_enrich", (s, d) => {
-      val ev = t(s, d, "events")
-      val cust = t(s, d, "customer")
-      ev.join(cust, ev("user_id") === cust("c_custkey"), "left_outer")
-        .select(ev("event_id"), ev("event_type"), ev("value"),
-          cust("c_mktsegment"))
-        .orderBy("event_id")
-    },
+    QueryDef("q141_event_enrich", (s, d) =>
+      graft.streaming.Streams.enriched(t(s, d, "events"), t(s, d, "customer"))
+        .orderBy("event_id"),
       Some("""SELECT event_id, event_type, value, c_mktsegment
              |FROM events LEFT JOIN customer ON user_id = c_custkey
              |ORDER BY event_id""".stripMargin)),
 
     // ---- Click-to-purchase attribution (interval join, batch form) -------
-    // Batch twin of streaming.Streams.clickToPurchase: for every
+    // streaming.Streams.clickToPurchase over the batch table: for every
     // purchase, the same user's clicks in the preceding hour, with the
     // exact µs gap. The join is user-keyed equi + a time-range residual —
-    // a user-partitioned shuffle join at any scale (the stream form adds
-    // watermarks so the SAME predicate also bounds join state). Gap
-    // arithmetic on integer microseconds, bit-equal in both engines.
+    // a user-partitioned shuffle join at any scale (in a stream the
+    // watermarks make the SAME predicate bound join state; a batch plan
+    // drops them at analysis). Gap arithmetic on integer microseconds,
+    // bit-equal in both engines.
     QueryDef("q142_click_attribution", (s, d) => {
       val ev = t(s, d, "events")
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
-      c.join(p,
-        col("c_user") === col("p_user") &&
-          col("c_ts") <= col("p_ts") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
-        .select(col("purchase_id"), col("click_id"),
-          col("p_user").as("user_id"),
+      graft.streaming.Streams.clickToPurchase(ev, ev)
+        .select(col("purchase_id"), col("click_id"), col("user_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
         .orderBy("purchase_id", "click_id")
     },
@@ -947,16 +933,14 @@ object Events {
              |ORDER BY purchase_id, click_id""".stripMargin)),
 
     // ---- Sliding-window event rates (1h window, 15m slide), batch form ---
-    // Batch twin of streaming.Streams.slidingRates. Spark's window()
-    // assigns each event to its 4 enclosing epoch-aligned slots; the
-    // oracle reproduces the slot arithmetic with time_bucket - k*15min.
+    // streaming.Streams.slidingRates over the batch table (its watermark
+    // is dropped at analysis). Spark's window() assigns each event to its
+    // 4 enclosing epoch-aligned slots; the oracle reproduces the slot
+    // arithmetic with time_bucket - k*15min.
     // One explode (x4) + a map-combined count — the slide factor, not
     // the corpus, sets the expansion, so the shape holds at any scale.
     QueryDef("q143_sliding_rates", (s, d) =>
-      t(s, d, "events")
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("w_start"), col("event_type"), col("n"))
+      graft.streaming.Streams.slidingRates(t(s, d, "events"))
         .orderBy("w_start", "event_type"),
       Some("""WITH slots AS (
              |  SELECT event_type, ts,

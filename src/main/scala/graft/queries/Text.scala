@@ -559,7 +559,7 @@ object Text {
     // duplicate fraction needs NO non-distinct n-gram enumeration: a doc
     // with n tokens has n-k+1 k-gram windows, so dup_frac = (windows -
     // distinct) / windows, with distinct counts from the native shingles()
-    // expression; the top-token count is the native TopTokenCount
+    // kernel; the top-token count is the native topTokenCount
     // (per-row hash count — the explode -> (doc, token) count -> per-doc
     // max formulation remains the right shape if single documents can
     // exceed executor memory).
@@ -786,7 +786,7 @@ object Text {
     // ladder — the emitted streams agree token-for-token (candidate
     // windows that clip at word end or touch non-ASCII never match the
     // vocabulary in either engine, so the unit-vs-codepoint difference
-    // is unobservable; see SubwordTokens).
+    // is unobservable; see SubwordVocab).
     QueryDef("q90_subword_tokens", (s, d) => {
       val st = graft.functions.ArrayExprs.subwordTokens(toks)
       t(s, d, "documents")

@@ -58,7 +58,8 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
       .select(col("window.start").as("h"), col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding-window event rates (1h window, 15m slide). */
+  /** Sliding-window event rates (1h window, 15m slide). q143 runs it
+    * over the batch table. */
   def slidingRates(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "2 hours")
@@ -87,7 +88,7 @@ object Streams {
 
   /** Stream-static enrichment: join the event stream against the customer
     * dimension (no state — the static side is re-planned per micro-batch,
-    * broadcast when small). */
+    * broadcast when small). q141 runs it over the batch tables. */
   def enriched(events: DataFrame, customers: DataFrame): DataFrame =
     events.join(customers,
       events("user_id") === customers("c_custkey"), "left_outer")
@@ -99,7 +100,7 @@ object Streams {
     * join condition bounds event-time distance — that pair is what lets
     * Spark expire join state (a click older than watermark + 1h can never
     * match again and is dropped), so state stays bounded on an unbounded
-    * stream. */
+    * stream. q142 runs it over the batch table. */
   def clickToPurchase(clicks: DataFrame, purchases: DataFrame): DataFrame = {
     val c = clicks.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),

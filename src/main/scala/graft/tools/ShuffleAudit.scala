@@ -37,15 +37,19 @@ package graft.tools
   * re-planning, which races stage completion, so they can differ between
   * two runs of one commit; PLANHASH reads the logical plan before any
   * execution, so two builds that compose the same operators print the
-  * same digest (lambda bodies excepted, see [[planHash]]). Exception: a
-  * few plans print one of two or three digests depending on what the JVM
-  * did before (q72, q74, q126, q131, q169, q206, q211, q214, q220, q287
-  * over repeated audits of two commits). For DISTINCT aggregates over two
-  * column sets (q72, q126, q206, q211) the cause is Catalyst's rewrite
-  * into an Expand ordered by hashes of expression ids; for the others it
-  * is not traced. Compare such a query against every digest the other
-  * commit's audits printed. A frame the query materializes eagerly shows
-  * up in it only as its scan, not as the operators that built it.
+  * same digest (lambda bodies excepted, see [[planHash]]). Exception:
+  * some plans print one of several digests depending on what the JVM did
+  * before. Seen over repeated audits: q11, q72, q88, q104, q126, q131,
+  * q161, q169, q206, q211, q214, q220, q287, q313 and q319 (two or three
+  * digests each), q74 (four), and q280's materialized frame (three). For
+  * DISTINCT aggregates over two column sets (q72, q126, q206, q211) the
+  * cause is Catalyst's rewrite into an Expand ordered by hashes of
+  * expression ids; for q74 it is canonicalization ordering an `And`'s
+  * conjuncts by hash code, with a scalar subquery among them; for the
+  * others it is not traced. The rule: certify a query against the set of
+  * digests the other commit printed over two or more audits. A frame the
+  * query materializes eagerly shows up in it only as its scan, not as the
+  * operators that built it.
   *
   * Two audit outputs from fresh JVMs feed [[ShuffleVerdict]], the
   * mechanical byte-surface regression gate, which reads the SHUFFLE and

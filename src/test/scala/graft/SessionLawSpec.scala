@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One session factory, one metrics collector, one parquet reader, one
-  * hashed-shingle definition, a fixed set of mains — as code, not
-  * comments (the MaterializeLawSpec source-scan pattern). No
-  * SparkTestBase: this
-  * suite's forked JVM has no session until [[Session.local]] builds one,
-  * so the settings checked are the factory's own. */
+  * hashed-shingle definition, one kernel shape, a fixed set of mains —
+  * as code, not comments (the MaterializeLawSpec source-scan pattern).
+  * No SparkTestBase: this suite's forked JVM has no session until
+  * [[Session.local]] builds one, so the settings checked are the
+  * factory's own. */
 class SessionLawSpec extends AnyFunSuite {
 
   private def offenders(pattern: String, allowedFile: String,
@@ -72,6 +72,24 @@ class SessionLawSpec extends AnyFunSuite {
     assert(found.map(_.split(':').head).sorted == Seq(
       "src/main/scala/graft/plans/AsOfJoin.scala",
       "src/main/scala/graft/plans/BindConstants.scala"), found.mkString(", "))
+  }
+
+  test("graft.functions defines no Expression class but DHash64 and NextFitBins") {
+    // every other kernel is one ArrayExprs builder over a StaticInvoke of
+    // an ArrayOps method; the two keep classes for their analysis-time
+    // type gates. Scans the compiled package, so nested, anonymous and
+    // indirect subclasses count too.
+    val root = new java.io.File(graft.functions.ArrayOps.getClass
+      .getProtectionDomain.getCodeSource.getLocation.toURI)
+    val classes = new java.io.File(root, "graft/functions").listFiles().toSeq
+      .map(_.getName).filter(_.endsWith(".class"))
+      .map(f => Class.forName("graft.functions." + f.stripSuffix(".class"), false,
+        getClass.getClassLoader))
+    val found = classes
+      .filter(classOf[org.apache.spark.sql.catalyst.expressions.Expression].isAssignableFrom)
+      .map(_.getName).sorted
+    assert(classes.nonEmpty && found == Seq("graft.functions.DHash64", "graft.functions.NextFitBins"),
+      s"add a kernel as an ArrayOps method and an ArrayExprs builder: ${found.mkString(", ")}")
   }
 
   test("mains only in the tool and driver entry points, none in tests") {

@@ -1,6 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -326,14 +330,86 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** A session whose optimizer keeps a projection over a local frame
+    * (ConvertToLocalRelation would evaluate it while optimizing), so the
+    * kernels run in the planned ProjectExec. */
+  private def planned(confs: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** Every ArrayExprs builder applied to a small frame, by builder name. */
+  private def kernelFrames(s: SparkSession): Seq[(String, DataFrame)] = {
+    val sess = s
+    import sess.implicits._
+    val docs = Seq("the quick brown fox jumps over the lazy dog", "a b",
+      "lorem ipsum dolor sit amet consectetur x y z").toDF("text")
+    val tok = split(col("text"), " ")
+    val vecs = Seq(Array.tabulate(64)(i => (i * 37 % 19 - 9).toLong),
+      Array.tabulate(64)(i => (i * 53 % 23 - 11).toLong)).toDF("qv")
+    val pairs = Seq((Array(1L, 2L, 3L, 0L), Array(0L, 3L, 9L)),
+      (Array.empty[Long], Array(1L, 2L))).toDF("a", "b")
+    val lens = Seq(Seq(10L, 20L, 30L, 40L, 50L), Seq(100L, 5L, 100L)).toDF("lens")
+    Seq(
+      "dotq" -> vecs.select(ArrayExprs.dotq(col("qv"), col("qv"))),
+      "minhashSig" -> docs.select(ArrayExprs.minhashSig(tok, 8)),
+      "affineMinhashSig" -> docs.select(ArrayExprs.affineMinhashSig(
+        ArrayExprs.windowHashes(tok, 2))),
+      "simhash64" -> docs.select(ArrayExprs.simhash64(tok)),
+      "shingles" -> docs.select(ArrayExprs.shingles(tok, 3)),
+      "polyFingerprint" -> docs.select(ArrayExprs.polyFingerprint(tok)),
+      "hyperplaneBands" -> vecs.select(ArrayExprs.hyperplaneBands(col("qv"), 8, 16)),
+      "topTokenCount" -> docs.select(ArrayExprs.topTokenCount(tok)),
+      "windowHashes" -> docs.select(ArrayExprs.windowHashes(tok, 3)),
+      "overlapCount" -> pairs.select(ArrayExprs.overlapCount(col("a"), col("b"))),
+      "subwordTokens" -> docs.select(ArrayExprs.subwordTokens(tok)),
+      "nextFitBins" -> lens.select(ArrayExprs.nextFitBins(col("lens"), 64L)),
+      "dhash64" -> docs.select(ArrayExprs.dhash64(col("text").cast("binary"))))
+  }
+
+  test("every kernel gives the codegen rows on the interpreted path") {
+    // whole-stage codegen off and NO_CODEGEN projections: each kernel runs
+    // through StaticInvoke's reflective call (or the class's nullSafeEval)
+    val gen = kernelFrames(planned())
+    val interp = kernelFrames(planned("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    gen.zip(interp).foreach { case ((name, g), (_, i)) =>
+      val want = g.collect().map(_.toSeq).toSeq
+      assert(i.collect().map(_.toSeq).toSeq == want, name)
+      assert(i.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+        .isEmpty, name)
+    }
+  }
+
   test("no pipeline expression falls back out of whole-stage codegen") {
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    val classes = Seq(classOf[ArrayLongDot], classOf[MinHashSig],
-      classOf[Shingles], classOf[SimHash64], classOf[PolyFingerprint],
-      classOf[HyperplaneBands], classOf[TopTokenCount], classOf[WindowHashes],
-      classOf[SubwordTokens], classOf[NextFitBins], classOf[DHash64])
-    classes.foreach(c =>
-      assert(!classOf[CodegenFallback].isAssignableFrom(c),
-        s"${c.getSimpleName} is a CodegenFallback — it breaks whole-stage codegen"))
+    // each kernel column executes inside a WholeStageCodegenExec and no
+    // CodegenFallback is planned; CODEGEN_ONLY with fallback off makes a
+    // generated-code compile failure throw instead of running interpreted
+    val s = planned("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    def kernels(p: SparkPlan): Seq[Expression] =
+      p.collect { case n => n.expressions }.flatten.flatMap(_.collect {
+        case e: StaticInvoke
+            if e.staticObject == ArrayOps.getClass || e.staticObject == SubwordOps.getClass => e
+        case e @ (_: DHash64 | _: NextFitBins) => e
+      })
+    val frames = kernelFrames(s)
+    val builders = ArrayExprs.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[Column])
+      .map(_.getName)
+    assert(frames.map(_._1).sorted == builders.sorted, "a builder has no kernel frame")
+    frames.foreach { case (name, df) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val fused = plan.collect { case w: WholeStageCodegenExec => kernels(w.child) }.flatten
+      assert(kernels(plan).nonEmpty && fused.size == kernels(plan).size,
+        s"$name runs outside whole-stage codegen:\n$plan")
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[CodegenFallback]))),
+        s"$name plans a CodegenFallback expression:\n$plan")
+    }
   }
 }
